@@ -8,9 +8,15 @@ kernels plus a manual tree combine (``binDataframe*``,
 partition-local partial histograms, wave scheduling, parallel combine —
 is a single declarative plan:
 
-    events.withColumn(bin_i, floor((x_i - lo_i)/step_i))
-          .filter(0 <= bin_i < nbins_i)
+    events.filter(lo_i <= x_i < hi_i)              # scan columns
+          .select(floor((x_i - lo_i)/step_i) AS bin_i)
           .groupBy(bin_0..bin_{d-1}).count()
+          .filter(0 <= bin_i < nbins_i)           # float-edge guard
+
+An axis over a calibrated column (TPS warp, k axis, energy polynomial)
+is keyed ``CASE WHEN lo <= x < hi THEN floor(...) END`` instead of
+being pre-filtered, so each calibration is evaluated once per event;
+see :func:`with_bin_indices`.
 
 Catalyst/Tungsten give partial (map-side) aggregation, whole-stage
 codegen for the floor arithmetic, parquet column pruning down to the
@@ -28,7 +34,9 @@ size) comes to the driver.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -38,32 +46,57 @@ from mpes_spark.binning.spec import BinAxis
 from mpes_spark.grid.binned import BinnedArray
 
 
+def _leaf_columns(df: DataFrame, names: Sequence[str]) -> set[str]:
+    """The subset of ``names`` that are plain columns of a leaf relation
+    (a scan, a local table): columns whose resolved exprId a leaf of
+    ``df``'s analyzed plan outputs. A filter on such a column can reach
+    the scan; any other column is an expression over the leaves."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    outputs = [leaves.apply(i).outputSet() for i in range(leaves.size())]
+    return {n for n in names if any(o.contains(df._jdf.resolve(n)) for o in outputs)}
+
+
 def with_bin_indices(
     df: DataFrame, axes: Sequence[BinAxis], keep: Sequence[str] = ()
 ) -> DataFrame:
     """Project the input down to bin-index columns (+ optional
-    carried-through columns), pre-filtering on the raw value domain
-    ``lo <= x < hi`` per the half-open bin rule.
+    carried-through columns) under the half-open bin rule
+    ``lo <= x < hi``.
 
-    Filtering on the *value* (not on ``floor(...)``) matters twice at
-    scale: (a) plain-column range predicates push down to the parquet
-    scan (``PushedFilters``) while floor-expressions never do, and
-    (b) when the axis is an expensive derived expression (TPS warp,
-    homography), the expression is evaluated once in the projection
-    instead of being re-inlined into every range conditional — the
-    round-1 formulation blew the whole-stage-codegen method limit on
-    the TPS query and fell back to interpreted eval (~8x slower).
-    The residual guard against float-edge stragglers moves to a
-    post-aggregation filter on the (tiny) grouped result in
-    :func:`bin_sparse`."""
-    out = df
+    How an axis is keyed depends on where its column comes from:
+
+    - a plain column of a leaf relation is pre-filtered on its *value*
+      (not on ``floor(...)``), so the range predicate reaches the
+      parquet scan as ``PushedFilters``;
+    - any other column (a calibration: TPS warp, homography, energy
+      polynomial) is keyed as
+      ``CASE WHEN lo <= x < hi THEN floor((x - lo) / step) END``. A
+      value filter here would be pushed below the projection that
+      computes ``x`` and re-inline the expression once per condition;
+      the CASE reads ``x`` from that projection, so the expression is
+      evaluated once per event. The CASE condition covers every
+      derived axis: an event outside any of them gets NULL in all
+      derived keys, so such events share one group per task, which
+      :func:`bin_sparse` drops after aggregation."""
+    leaf = _leaf_columns(df, [ax.col for ax in axes])
+    out, in_domain = df, []
     for ax in axes:
-        if not ax.prefilter:
-            continue
         x = F.col(ax.col)
-        out = out.filter((x >= F.lit(float(ax.lo))) & (x < F.lit(float(ax.hi))))
-    cols = [ax.index_expr().alias(ax.out) for ax in axes] + [F.col(c) for c in keep]
-    return out.select(*cols)
+        cond = (x >= F.lit(float(ax.lo))) & (x < F.lit(float(ax.hi)))
+        if ax.col in leaf:
+            out = out.filter(cond)
+        else:
+            in_domain.append(cond)
+    ok = reduce(operator.and_, in_domain) if in_domain else None
+    cols = [
+        (ax.index_expr() if ax.col in leaf else F.when(ok, ax.index_expr())).alias(ax.out)
+        for ax in axes
+    ]
+    return out.select(*cols, *[F.col(c) for c in keep])
+
+
+#: guard-only row count carried through the aggregate by bin_sparse
+_ROWS = "__bin_rows"
 
 
 def bin_sparse(
@@ -80,10 +113,18 @@ def bin_sparse(
     from row counts to a weighted histogram ``sum(weight)`` — the
     non-count-measure extension SURVEY §2.9 anticipates (the
     reference's kernels are count-only); same plan shape, the partial
-    aggregate carries a sum instead of a count. The final bin-range
-    filter runs on the aggregated relation (grid-bounded rows) and
-    exists only to drop the rare float-boundary bin
-    ``floor((x-lo)/step) == nbins`` for x just below hi."""
+    aggregate carries a sum instead of a count.
+
+    The final bin-range guard runs on the aggregated relation
+    (grid-bounded rows). It drops the NULL-key groups of out-of-range
+    derived-axis events and the rare float-boundary bin
+    ``floor((x-lo)/step) == nbins`` for x just below hi. It is written
+    ``guard OR rows < 0`` over a row count of the group: the disjunct
+    is never true, but it references an aggregate output, so Catalyst
+    cannot push the guard below the aggregate, where it would re-inline
+    each derived axis' expression. For a count measure the two
+    ``count(1)`` aggregates are the same expression and are computed
+    once."""
     keep = list(extra_keys) + ([weight] if weight else [])
     keyed = with_bin_indices(df, axes, keep=keep)
     keys = [ax.out for ax in axes] + list(extra_keys)
@@ -92,10 +133,9 @@ def bin_sparse(
         if weight
         else F.count(F.lit(1)).alias(count_name)
     )
-    out = keyed.groupBy(*keys).agg(measure)
-    for ax in axes:
-        out = out.filter(ax.in_range_expr(F.col(ax.out)))
-    return out
+    out = keyed.groupBy(*keys).agg(measure, F.count(F.lit(1)).alias(_ROWS))
+    guard = reduce(operator.and_, [ax.in_range_expr(F.col(ax.out)) for ax in axes])
+    return out.filter(guard | (F.col(_ROWS) < 0)).drop(_ROWS)
 
 
 def bin_sparse_sql(
@@ -117,7 +157,6 @@ def bin_sparse_sql(
     conds = [
         f"({ax.col} >= {float(ax.lo)!r} AND {ax.col} < {float(ax.hi)!r})"
         for ax in axes
-        if ax.prefilter
     ]
     if where:
         conds.append(f"({where})")

@@ -35,21 +35,16 @@ def _flit(v: float) -> str:
 
 @dataclass(frozen=True)
 class BinAxis:
-    """One histogram axis: column (or expression) + regular grid."""
+    """One histogram axis: a column of the binned DataFrame + regular
+    grid. The column may be a plain scan column or a calibration
+    expression; the engine tells them apart from the plan (see
+    :func:`mpes_spark.binning.engine.with_bin_indices`)."""
 
     col: str
     nbins: int
     lo: float
     hi: float
     name: str | None = None  # output bin-index column name
-    #: apply the value-domain pre-filter (lo <= x < hi) before
-    #: aggregation. True for plain scan columns (the predicate pushes
-    #: to parquet). Set False when ``col`` is an expensive derived
-    #: expression (TPS warp, homography): the filter would re-inline
-    #: the expression per condition and blow the codegen compile
-    #: budget; out-of-range rows then aggregate into out-of-range bins
-    #: and are dropped by the post-aggregation guard instead.
-    prefilter: bool = True
 
     def __post_init__(self) -> None:
         if self.nbins <= 0:

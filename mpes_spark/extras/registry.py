@@ -766,8 +766,7 @@ def simhash_neardup(spark, sf_dir):
     exact (a pair within distance d < bands must agree on >= 1 band),
     so the output is complete, not best-effort. The packed-counter
     simhash (16 small sums, dedup.py) stays inside the JIT method
-    budget, so this runs fully fused — the round-2
-    heavy_expr_session fallback is gone."""
+    budget, so this runs fully fused."""
     return DD.simhash_neardup_pairs(
         _docs(spark, sf_dir), nbits=48, bands=4, max_hamming=3
     )

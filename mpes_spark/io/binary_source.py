@@ -141,8 +141,10 @@ def _chunk_plan(
             T.StructField("amax", T.LongType()),
         ]
     )
-    # one chunk per task: the chunk row IS the unit of parallelism
-    return spark.createDataFrame(rows, schema).repartition(len(rows))
+    # the chunk rows stay in the local relation's min(chunks,
+    # defaultParallelism) partitions: each task decodes its chunks in
+    # one Python worker, with no round-robin shuffle in front of it
+    return spark.createDataFrame(rows, schema)
 
 
 def read_events_binary(

@@ -39,20 +39,6 @@ from mpes_spark.transforms.columns import (
 )
 
 
-def heavy_expr_session(spark: SparkSession) -> SparkSession:
-    """Session clone (shared SparkContext, own SQLConf) with
-    whole-stage codegen off — for queries whose folded-literal
-    expressions (TPS warps, many-band sketches) compile into a single
-    fused method beyond HotSpot's 8 KB JIT threshold. Fused, the JVM
-    interprets the whole stage (~6x slower, measured at sf0.1);
-    unfused, per-expression codegen splits into JIT-able methods.
-    Plain high-volume queries keep fusion (it's a win there)."""
-    s = spark.newSession()
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return s
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # time queries work on raw epoch-nanos integers (tz-independent,
     # and identical whether the parquet ships TIMESTAMP(NANOS) or
@@ -2925,9 +2911,8 @@ _TPS_DST = _TPS_SRC + np.column_stack(
     [_TPS_RNG.normal(0.0, 1.5, 7), _TPS_RNG.normal(0.0, 0.4, 7)]
 )
 _TPS_CO = tps_coeffs(_TPS_SRC, _TPS_DST)
-# prefilter=False: xt/yt are heavy derived expressions — see BinAxis
-_AX_TPX = BinAxis("xt", nbins=30, lo=-5.0, hi=55.0, prefilter=False)
-_AX_TPY = BinAxis("yt", nbins=20, lo=-2.0, hi=9.0, prefilter=False)
+_AX_TPX = BinAxis("xt", nbins=30, lo=-5.0, hi=55.0)
+_AX_TPY = BinAxis("yt", nbins=20, lo=-2.0, hi=9.0)
 
 _tps_x_sql = XC.tps_sql("l_quantity", "l_linenumber", _TPS_CO, _TPS_SRC, which=0)
 _tps_y_sql = XC.tps_sql("l_quantity", "l_linenumber", _TPS_CO, _TPS_SRC, which=1)
@@ -2944,7 +2929,6 @@ def tps_warp_bin(spark, sf_dir):
     """Thin-plate-spline warp (Bookstein solve, reference
     mpes/dask_tps.py:67-97) evaluated as column math, then 2-D binning.
     """
-    spark = heavy_expr_session(spark)
     li = t(spark, sf_dir, "lineitem").select(
         XC.tps_expr("l_quantity", "l_linenumber", _TPS_CO, _TPS_SRC, which=0).alias("xt"),
         XC.tps_expr("l_quantity", "l_linenumber", _TPS_CO, _TPS_SRC, which=1).alias("yt"),

@@ -25,6 +25,7 @@ import math
 from collections.abc import Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -227,8 +228,6 @@ def dfield_table(spark: SparkSession, dfield: np.ndarray) -> DataFrame:
     kept; downstream filters drop them."""
     _, h, wdt = dfield.shape
     xi, yi = np.meshgrid(np.arange(h), np.arange(wdt), indexing="ij")
-    import pandas as pd
-
     pdf = pd.DataFrame(
         {
             "xi": xi.ravel().astype("int32"),
@@ -302,11 +301,11 @@ def apply_dfield_udf(
     the reference's NaN boundary cells (``generateDfield``,
     /root/reference/mpes/base.py:570-572) — so ``how='udf'`` and
     ``how='join'`` agree row-for-row."""
-    import pandas as pd
-
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast(np.asarray(dfield, dtype="float64"))
 
+    # pandas_udf resolves the (string) ``pd.Series`` hints against the
+    # module's globals, so pandas must be imported at module level
     @F.pandas_udf("struct<nx: double, ny: double>")
     def _lookup(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
         fld = bc.value

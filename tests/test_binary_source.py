@@ -73,6 +73,30 @@ def test_chunked_assembly_matches_source(spark, backend):
         assert np.array_equal(got, want)
 
 
+def test_ingest_plan_has_no_exchange(spark, backend):
+    """The chunk plan feeds mapInPandas straight from its local
+    relation: no round-robin shuffle in front of the Python tasks, and
+    the ingested rows are exactly the backend's reads."""
+    paths = sorted(backend.files)
+    out = read_events_binary(
+        spark, paths, backend, IngestSpec(chunk_size=600, with_file=True)
+    )
+    pdf = out.toPandas()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "MapInPandas" in plan
+    got = sorted(map(tuple, pdf[["file", "X", "Y", "t", "Stream_4"]].itertuples(index=False)))
+    want = []
+    for p in paths:
+        n = backend.n_events(p)
+        cols = [
+            backend.read_stream(p, g, 0, n).astype("float32")
+            for g in ("Stream_0", "Stream_1", "Stream_2", "Stream_4")
+        ]
+        want += [(p, *vals) for vals in zip(*cols)]
+    assert got == sorted(want)
+
+
 def test_alias_selection_and_missing_alias(spark, backend):
     paths = sorted(backend.files)
     out = read_events_binary(

@@ -62,3 +62,22 @@ def test_tof2ev_null_safe_on_zero(spark):
     got = {r.value: r.E for r in pipe.df.select("value", "E").collect()}
     assert got[0.0] is None
     assert got[100.0] is not None
+
+
+def test_apply_dfield_udf_matches_join(spark):
+    """``apply_dfield``'s default pandas-UDF path and the broadcast-join
+    path agree row for row, including events outside the field (NULL
+    corrected coordinates on both paths)."""
+    import numpy as np
+
+    field = np.random.default_rng(5).uniform(0.0, 10.0, (2, 6, 4))
+    ev = spark.createDataFrame(
+        [(0.5, 0.5), (5.9, 3.2), (3.0, 1.7), (7.0, 1.0), (2.2, 9.0), (-1.0, 0.0)],
+        "X double, Y double",
+    )
+    rows = {
+        how: sorted(map(tuple, EventPipeline(ev).apply_dfield(field, how=how).df.collect()))
+        for how in ("udf", "join")
+    }
+    assert rows["udf"] == rows["join"]
+    assert sum(r[2] is None for r in rows["udf"]) == 3

@@ -39,18 +39,98 @@ def test_binning_single_exchange(spark):
     assert plan.count("HashAggregate") >= 2  # partial + final
 
 
+def _final_plan(df) -> str:
+    """The AQE-final physical plan of an executed DataFrame (without
+    the initial plan that ``executedPlan().toString()`` also prints)."""
+    return df._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
+
+
 def test_derived_axis_skips_prefilter(spark):
-    """prefilter=False axes must not re-inline the derived expression
-    into scan filters (no pushed range filter), relying on the
-    post-aggregation guard instead."""
+    """A derived axis gets no value pre-filter: the range test moves
+    into a CASE over the projected column, so the derived expression
+    is evaluated once per event, and the post-aggregation guard stays
+    above the aggregate instead of re-inlining the expression below
+    it."""
     ev = t(spark, SF_SMALL, "events").select(
         (F.col("value") * 2.0 + 1.0).alias("d")
     )
-    df = bin_sparse(ev, [BinAxis("d", 10, 0.0, 100.0, prefilter=False)])
-    plan = _plan(df)
+    df = bin_sparse(ev, [BinAxis("d", 10, 0.0, 100.0)])
+    df.collect()
+    plan = _final_plan(df)
     assert "GreaterThanOrEqual" not in plan
-    # the post-agg guard filters on the grouped key
-    assert "Filter" in plan
+    assert plan.count("* 2.0)") == 1
+    # the guard filters the grouped relation, above the final aggregate
+    head = plan.split("HashAggregate", 1)[0]
+    assert "Filter" in head
+
+
+def test_tps_pipeline_evaluates_warp_once(spark, tmp_path):
+    """Binning TPS-calibrated axes (t window -> TPS warp -> k axes and
+    energy, as the paper pipeline runs them) evaluates each warp output
+    once per event: the AQE-final plan holds one ``ln`` per landmark
+    per output coordinate. The histogram equals binning the same
+    columns after they are materialized (plain scan columns, value
+    pre-filter)."""
+    import numpy as np
+    import pandas as pd
+
+    from mpes_spark.calibrate.tps import tps_coeffs
+    from mpes_spark.pipeline import EventPipeline
+
+    rng = np.random.default_rng(3)
+    n, n_landmarks = 4000, 8
+    pd.DataFrame(
+        {
+            "X": rng.uniform(0.0, 256.0, n),
+            "Y": rng.uniform(0.0, 256.0, n),
+            "t": rng.uniform(6.0e4, 7.0e4, n),
+        }
+    ).to_parquet(tmp_path / "ev.parquet")
+    src = rng.uniform(20.0, 236.0, (n_landmarks, 2))
+    co = tps_coeffs(src, src + rng.normal(0.0, 2.0, src.shape))
+    calibrated = (
+        EventPipeline(spark.read.parquet(str(tmp_path / "ev.parquet")))
+        .filter_range("t", 6.1e4, 6.9e4)
+        .apply_tps(co, src)
+        .append_energy_axis_poly([-1.0e-3], 66.0)
+        .append_k_axis("Xm", "Ym", 128.0, 128.0, 0.01, 0.01)
+        .df
+    )
+    axes = [
+        BinAxis("kx", 16, -1.0, 1.0),
+        BinAxis("ky", 16, -1.0, 1.0),
+        BinAxis("E", 8, -2.0, 4.0),
+    ]
+    df = bin_sparse(calibrated, axes)
+    got = sorted(map(tuple, df.collect()))
+    assert _final_plan(df).count("ln(") == 2 * n_landmarks
+    flat = calibrated.select("kx", "ky", "E").toPandas()
+    flat.to_parquet(tmp_path / "flat.parquet")
+    scanned = spark.read.parquet(str(tmp_path / "flat.parquet"))
+    assert got == sorted(map(tuple, bin_sparse(scanned, axes).collect()))
+    assert 0 < sum(r[-1] for r in got) < len(flat)  # some events fall outside
+
+
+def test_weighted_derived_axis_keeps_null_and_negative_sums(spark):
+    """Weighted binning on a derived axis: groups whose sum is negative
+    or NULL (all weights NULL) are real bins and survive the guard,
+    out-of-range events are dropped, and the axis expression is
+    evaluated once."""
+    rows = [
+        (0.5, -3.0),  # bin 0, negative sum
+        (1.5, None),  # bin 1, NULL sum
+        (2.5, 1.0),
+        (2.6, 2.0),  # bin 2, sum 3
+        (-0.5, 7.0),  # below lo
+        (4.0, 7.0),  # at hi: outside the half-open range
+        (None, 5.0),  # NULL coordinate
+    ]
+    raw = spark.createDataFrame(rows, "x double, w double")
+    ev = raw.select((F.col("x") * 10.0 / 10.0).alias("d"), "w")
+    df = bin_sparse(ev, [BinAxis("d", 4, 0.0, 4.0)], count_name="wsum", weight="w")
+    got = sorted((r["d_bin"], r["wsum"]) for r in df.collect())
+    assert got == [(0, -3.0), (1, None), (2, 3.0)]
+    assert _final_plan(df).count("* 10.0)") == 1
 
 
 def test_small_dim_join_broadcasts(spark):

@@ -12,16 +12,17 @@ step the distributed connected-components resolver
 but with a dense rank vector instead of min-label propagation.
 
 Scale shape (100 TB of edges):
-- the edge relation is hash-partitioned on ``src`` ONCE (pass
-  ``partitions=``) and persisted; every iteration's rank join then
-  co-locates with it and the only per-iteration shuffle is the
-  ``groupBy(dst)`` contribution sum (map-side combined).
+- the edge relation is hash-partitioned on ``src`` ONCE, into the
+  session's default parallelism, and pinned; every iteration's rank
+  join then co-locates with it and the only per-iteration shuffle is
+  the ``groupBy(dst)`` contribution sum (map-side combined).
 - the rank relation stays node-sized, never edge-sized; the dangling
   mass is a ONE-row aggregate cross-joined back in (no driver
   action, no collect).
-- iterations unroll into one lazy plan; past ~8 iterations the
-  lineage itself becomes the cost, so production callers should
-  ``localCheckpoint()`` every few rounds (``checkpoint_every``).
+- each iteration's rank is a lazy local checkpoint, so the plan stays
+  one iteration deep however many iterations run.
+
+Pinning follows :mod:`mpes_spark.pinning`.
 
 Fixed iteration count (rather than convergence testing) keeps the
 whole computation a deterministic, oracle-replayable plan: the DuckDB
@@ -36,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mpes_spark.pinning import release
+
 
 def pagerank(
     edges: DataFrame,
@@ -43,13 +46,12 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    partitions: int | None = None,
-    checkpoint_every: int | None = None,
     normalize: bool = False,
-    pin_edges: str | None = "checkpoint",
     weight: str | None = None,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an edge list.
+    """Fixed-iteration PageRank over an edge list. Runs Spark jobs
+    when called: the edges, nodes and out-degrees are eager local
+    checkpoints, which the returned plan reads (caller-owned).
 
     Returns ``(node, rank)`` with ranks summing to 1, or — with
     ``normalize=True`` — ``(node, rank_norm)`` where ranks are scaled
@@ -73,49 +75,32 @@ def pagerank(
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight is not None:
         cols.append(F.col(weight).cast("double").alias("w"))
-    e = edges.select(*cols)
-    if partitions:
-        e = e.repartition(partitions, "src")
-    # The unrolled lazy plan references the edge relation in EVERY
-    # iteration; without pinning it, iteration k re-derives the whole
-    # upstream edge pipeline k times over. Measured at sf0.1 (derived
-    # 500k-edge input, 3 iterations): lazy 18.8 s, persist() 12.5 s,
-    # localCheckpoint(eager) ~1.9 s warm (edges AND nodes pinned) —
-    # the checkpoint wins because the materialized cut also gives AQE
-    # exact sizes for the per-iteration join strategy. Tradeoff: a
-    # localCheckpoint is non-replicated (executor loss forces a job
-    # restart), so fault-sensitive cluster runs should pass
-    # pin_edges="persist" (recomputable lineage) and accept the
-    # slower plan.
-    if pin_edges == "checkpoint":
-        e = e.localCheckpoint(eager=True)
-    elif pin_edges == "persist":
-        e = e.persist()
-    elif pin_edges is not None:
-        raise ValueError(f"pin_edges must be checkpoint|persist|None, got {pin_edges!r}")
+    # every iteration reads the edges: eager checkpoint, per
+    # mpes_spark/pinning.py (sf0.1, 500k edges, 3 iterations: lazy
+    # 18.8 s, persist() 12.5 s, localCheckpoint ~1.9 s warm)
+    e = edges.select(*cols).repartition(
+        edges.sparkSession.sparkContext.defaultParallelism, "src"
+    ).localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if pin_edges == "checkpoint":
-        nodes = nodes.localCheckpoint(eager=True)
-    elif pin_edges == "persist":
-        nodes = nodes.persist()
     deg_agg = (
         F.sum("w") if weight is not None else F.count(F.lit(1)).cast("double")
     )
-    deg = e.groupBy(F.col("src").alias("node")).agg(deg_agg.alias("outdeg"))
     # Pin the out-degree relation like the nodes (r12): every
     # iteration's rank plan references deg, and with per-iteration rank
     # checkpoints each iteration is its own job — an unpinned deg
     # re-aggregates the EDGE relation once per iteration (k edge-scale
     # shuffles for a node-sized result). Pinned, the edge aggregation
     # runs once and each iteration joins a node-sized relation.
-    if pin_edges == "checkpoint":
-        deg = deg.localCheckpoint(eager=True)
-    elif pin_edges == "persist":
-        deg = deg.persist()
+    deg = (
+        e.groupBy(F.col("src").alias("node"))
+        .agg(deg_agg.alias("outdeg"))
+        .localCheckpoint(eager=True)
+    )
     n1 = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     one_minus_d = 1.0 - damping
 
@@ -162,7 +147,7 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if i + 1 < iters:
             rank = rank.localCheckpoint(eager=False)
     if normalize:
         return rank.crossJoin(F.broadcast(n1)).select(
@@ -269,18 +254,20 @@ def label_propagation(
     iters: int = 3,
     src: str = "src",
     dst: str = "dst",
-    pin_edges: bool = True,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
-    """Fixed-iteration synchronous label propagation (Raghavan et al.
-    2007, "Near linear time algorithm to detect community structures
-    in large-scale networks") — the cheap community detector for
-    near-dup cluster refinement and domain grouping. Every node
-    starts labeled with itself; each round it adopts the most common
-    label among its neighbors, ties broken by the smallest label —
-    the deterministic variant (random tie-breaking in the paper),
-    which is what makes the computation oracle-replayable. Pass a
-    SYMMETRIZED edge list for undirected semantics.
+    """Fixed-iteration synchronous label propagation, which runs a
+    Spark job when called: the edge relation is an eager local
+    checkpoint that the returned plan reads (caller-owned).
+
+    Raghavan et al. 2007 ("Near linear time algorithm to detect
+    community structures in large-scale networks") is the cheap
+    community detector for near-dup cluster refinement and domain
+    grouping. Every node starts labeled with itself; each round it
+    adopts the most common label among its neighbors, ties broken by
+    the smallest label — the deterministic variant (random
+    tie-breaking in the paper), which is what makes the computation
+    oracle-replayable. Pass a SYMMETRIZED edge list for undirected
+    semantics.
 
     Returns ``(node, label)`` after ``iters`` rounds.
 
@@ -295,19 +282,17 @@ def label_propagation(
     window shuffles every (src, label, cnt) row to a per-src sort,
     which at 100 TB buffers a celebrity node's whole label histogram
     in one task where the agg folds it a partition at a time. Edges
-    are localCheckpoint-pinned once (``pin_edges``); label lineage
-    grows one join+agg per round, so production callers at high
-    ``iters`` should set ``checkpoint_every``."""
+    are pinned once; the label lineage grows one join+agg per round
+    inside the one returned lazy plan."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if pin_edges:
-        e = e.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
     labels = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    for i in range(1, iters + 1):
+    for _ in range(iters):
         nb = (
             e.join(labels, e.dst == labels.node)
             .groupBy("src", "label")
@@ -327,8 +312,6 @@ def label_propagation(
             )
             .select(F.col("src").alias("node"), F.col("best.label").alias("label"))
         )
-        if checkpoint_every and i % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
     return labels
 
 
@@ -435,14 +418,17 @@ def triangle_count(
     dst: str = "dst",
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """Exact per-node triangle counts over an undirected edge list via
-    DEGREE-ORDERED edge orientation (the compact-forward /
-    node-iterator++ algorithm: Schank & Wagner 2005, Suri &
-    Vassilvitskii WWW'11): orient every edge from its lower-(degree,
-    id) endpoint to the higher one, enumerate wedges only at each
-    edge's LOW endpoint, and close wedges with a semi-join against
-    the oriented edge set. Returns (node, n_triangles) for nodes in
-    at least one triangle.
+    """Exact per-node triangle counts, which runs Spark jobs when
+    called: the oriented edge set the returned plan reads is an eager
+    local checkpoint (caller-owned).
+
+    Counts over an undirected edge list via DEGREE-ORDERED edge
+    orientation (the compact-forward / node-iterator++ algorithm:
+    Schank & Wagner 2005, Suri & Vassilvitskii WWW'11): orient every
+    edge from its lower-(degree, id) endpoint to the higher one,
+    enumerate wedges only at each edge's LOW endpoint, and close
+    wedges with a semi-join against the oriented edge set. Returns
+    (node, n_triangles) for nodes in at least one triangle.
 
     Why orientation is the 100-TB shape: un-oriented wedge counting
     pays sum(deg^2) — a single celebrity node with degree 1e6
@@ -457,14 +443,17 @@ def triangle_count(
     Input edges may be in any order/duplication state; they are
     canonicalized (min, max) and de-duplicated first (skip that pass
     with ``assume_canonical=True`` when the input is already
-    src<dst-unique). The canonical edge set is localCheckpoint-pinned
-    (r12): it feeds both the degree aggregation and the orientation
-    join, so an unpinned edge lineage (often an expensive upstream
-    derivation, e.g. a co-occurrence self-join) would execute twice."""
+    src<dst-unique). The canonical edge set is pinned until the
+    orientation is (r12): it feeds both the degree aggregation and the
+    orientation join, so an unpinned edge lineage (often an expensive
+    upstream derivation, e.g. a co-occurrence self-join) would execute
+    twice."""
     e = _canonical_edges(edges, src, dst, assume_canonical).localCheckpoint(
         eager=True
     )
-    return _oriented_triangles(e, _degrees(e))
+    tri = _oriented_triangles(e, _degrees(e))
+    release(e)
+    return tri
 
 
 def triangles_per_node_sql(edges_sql: str) -> str:
@@ -501,14 +490,17 @@ def clustering_coefficient(
     dst: str = "dst",
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """Per-node local clustering coefficient cc(v) = T(v) / (deg(v)
-    choose 2) over an undirected edge list — the standard local
-    density signal (Watts & Strogatz 1998) layered on the degree-
-    ordered triangle counter. Returns every node of degree >= 2 as
-    (node, deg, n_triangles, n_wedges, cc_micro) where ``cc_micro``
-    is the coefficient in integer micro-units via exact integer
-    division (2e6*T DIV deg*(deg-1)) — ALL columns integers, so the
-    oracle gate is exact with zero float anywhere. Cost on top of
+    """Per-node local clustering coefficient, which runs Spark jobs
+    when called: the degree table and oriented edge set the returned
+    plan reads are eager local checkpoints (caller-owned).
+
+    cc(v) = T(v) / (deg(v) choose 2) over an undirected edge list —
+    the standard local density signal (Watts & Strogatz 1998) layered
+    on the degree-ordered triangle counter. Returns every node of
+    degree >= 2 as (node, deg, n_triangles, n_wedges, cc_micro) where
+    ``cc_micro`` is the coefficient in integer micro-units via exact
+    integer division (2e6*T DIV deg*(deg-1)) — ALL columns integers,
+    so the oracle gate is exact with zero float anywhere. Cost on top of
     :func:`triangle_count`: one node-keyed left join — the canonical
     edge set and its degree table are built ONCE and shared with the
     triangle core (r12: previously this function and triangle_count
@@ -521,6 +513,7 @@ def clustering_coefficient(
     # cc join — pin so the degree shuffle runs once
     deg = _degrees(e).localCheckpoint(eager=True)
     tri = _oriented_triangles(e, deg)
+    release(e)
     t = F.coalesce(F.col("n_triangles"), F.lit(0))
     return (
         deg.filter(F.col("deg") >= 2)
@@ -586,14 +579,18 @@ def kcore(
     dst: str = "dst",
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """k-core peeling: iteratively delete nodes of degree < ``k``
-    (with their edges) for ``rounds`` iterations; return
-    (node, deg_core) — each surviving node's degree inside the
-    surviving subgraph. At fixpoint this is the classic k-core
-    [Seidman 1983], the standard "dense part" extractor for link
-    graphs (spam farms and boilerplate interlinks melt away with the
-    low-degree periphery; what survives is the genuinely
-    cross-referenced core a crawler should trust).
+    """k-core peeling, which runs Spark jobs when called: each round's
+    surviving edge set is an eager local checkpoint, the last one read
+    by the returned plan (caller-owned).
+
+    Iteratively delete nodes of degree < ``k`` (with their edges)
+    for ``rounds`` iterations; return (node, deg_core) — each
+    surviving node's degree inside the surviving subgraph. At
+    fixpoint this is the classic k-core [Seidman 1983], the standard
+    "dense part" extractor for link graphs (spam farms and
+    boilerplate interlinks melt away with the low-degree periphery;
+    what survives is the genuinely cross-referenced core a crawler
+    should trust).
 
     Fixed ``rounds`` (not a convergence test) keeps the whole
     computation one deterministic oracle-replayable plan — the DuckDB
@@ -607,22 +604,24 @@ def kcore(
     edge-keyed shuffle) + two semi-joins of the edge relation against
     the surviving-node set — all equi-keyed on node ids, never
     all-pairs; the edge relation is re-pinned (localCheckpoint) each
-    round so lineage stays one peel deep, the connected-components /
-    PageRank discipline. ``assume_canonical=True`` skips the
-    canonicalizing distinct for src<dst-unique inputs (r12); degree
-    aggregations scan the pinned edges once via explode instead of a
-    two-scan unionAll."""
+    round so lineage stays one peel deep, and the superseded
+    generation is released (the connected-components discipline).
+    ``assume_canonical=True`` skips the canonicalizing distinct for
+    src<dst-unique inputs (r12); degree aggregations scan the pinned
+    edges once via explode instead of a two-scan unionAll."""
     e = _canonical_edges(edges, src, dst, assume_canonical).localCheckpoint(
         eager=True
     )
     for _ in range(rounds):
         keep = _degrees(e).filter(F.col("deg") >= k).select("node")
+        superseded = e
         e = (
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
             .localCheckpoint(eager=True)
         )
+        release(superseded)
     return (
         e.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")

@@ -33,12 +33,15 @@ from __future__ import annotations
 
 import math
 import os
+from functools import reduce
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mpes_spark.extras.text import fingerprint_expr
+from mpes_spark.pinning import release
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -341,7 +344,6 @@ def minhash_neardup_pairs(
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """End-to-end MinHash near-dup: shingle -> signature -> banded LSH
     buckets -> candidate pairs -> exact-Jaccard verify.
@@ -349,12 +351,10 @@ def minhash_neardup_pairs(
     The shingle relation feeds three consumers (signatures + both
     sides of the verification join); without persistence Spark
     re-derives it — re-scanning and re-exploding the corpus — once per
-    consumer (audited: 14 exchanges -> fewer, 3 scans -> 1).
-    ``persist_shingles`` caches it MEMORY_AND_DISK; the caller may
-    ``unpersist()`` the returned plan's source after materializing."""
-    sh = shingle_table(df, text, n, id_col)
-    if persist_shingles:
-        sh = sh.persist()
+    consumer (audited: 14 exchanges -> fewer, 3 scans -> 1). It is
+    persisted MEMORY_AND_DISK and read by the returned lazy plan, so
+    it belongs to the caller (see :mod:`mpes_spark.pinning`)."""
+    sh = shingle_table(df, text, n, id_col).persist()
     sigs = minhash_signatures(sh, k, id_col)
     cand = lsh_candidate_pairs(sigs, k, bands, id_col)
     return verify_jaccard(cand, sh, threshold, id_col)
@@ -445,20 +445,16 @@ def blocked_jaccard_pairs(
     waves: int = 1,
 ) -> DataFrame:
     """DataFrame rendering of :func:`blocked_jaccard_sql` (same
-    semantics, value-identical output). The shingle relation is
-    RECOMPUTED by its consumers, not persisted (r9, measured cold
-    under the order-independent bench protocol): its lineage is one
-    pruned scan + a stateless explode, so paying it per consumer
-    beats materializing a corpus-scale relation into storage — and at
-    100 TB a persisted shingle table would be a memory hazard while
-    recompute stays embarrassingly parallel. Use this form when the
-    pair list feeds further computation (e.g. cluster resolution);
-    the SQL twin stays the oracle.
+    semantics, value-identical output). Runs Spark jobs when called:
+    the verified pairs are returned as an eager local checkpoint.
+    Use this form when the pair list feeds further computation (e.g.
+    cluster resolution); the SQL twin stays the oracle.
 
     ``waves`` > 1 runs candidate+verify per hash band of the block
-    key (r11 scratch bound, see :func:`prefix_filtered_pairs`). Each
-    doc has exactly ONE block key, so the bands partition the docs
-    and every pair surfaces in exactly one wave — the union needs no
+    key (r11 scratch bound, see :func:`prefix_filtered_pairs`) and
+    returns the union of the per-wave checkpoints. Each doc has
+    exactly ONE block key, so the bands partition the docs and every
+    pair surfaces in exactly one wave — the union needs no
     cross-wave distinct."""
     sh = shingle_table(df, text, n, id_col)
     blocks = df.select(
@@ -487,25 +483,22 @@ def blocked_jaccard_pairs(
         # :func:`shingle_table`) an unpersisted lineage would re-run
         # the scan+explode once per consumer. MEMORY_AND_DISK, the
         # minhash_neardup_pairs precedent.
-        return verify_jaccard(_cand(blocks), sh.persist(), threshold, id_col)
+        sh = sh.persist()
+        out = verify_jaccard(_cand(blocks), sh, threshold, id_col)
+        out = out.localCheckpoint(eager=True)
+        release(sh)
+        return out
+    # hashed-element verify in waves (see prefix_filtered_pairs)
     shh = sh.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    parts: list[DataFrame] = []
-    for i in range(waves):
-        cand = _cand(blocks.filter(_wave_band("bk", waves, i))).localCheckpoint(
-            eager=True
-        )
-        # hashed-element verify in waves (see prefix_filtered_pairs)
-        sh_w = _wave_doc_filter(shh, cand, id_col)
-        parts.append(
-            verify_jaccard(
-                cand, sh_w, threshold, id_col, broadcast_pairs=True
-            ).localCheckpoint(eager=True)
-        )
-        _wave_gc(cand)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    return out
+    parts = _waved_verify(
+        (_cand(blocks.filter(_wave_band("bk", waves, i))) for i in range(waves)),
+        shh,
+        id_col,
+        lambda cand, sh_w: verify_jaccard(
+            cand, sh_w, threshold, id_col, broadcast_pairs=True
+        ),
+    )
+    return reduce(DataFrame.union, parts)
 
 
 def blocked_containment_sql(
@@ -715,6 +708,12 @@ def token_sets(
     )
 
 
+# waved-execution tuning: see _wave_subslices and _wave_gc
+WAVE_CAND_CAP = 2e8
+WAVE_GC_FREE_GB = 32.0
+WAVE_GC_HEADROOM = 4.0
+
+
 def _wave_band(col: str, waves: int, i: int):
     """Deterministic hash band predicate for waved execution."""
     return F.pmod(F.xxhash64(F.col(col)), F.lit(waves)) == i
@@ -733,8 +732,8 @@ def _wave_subslices(mass_rows, waves: int) -> dict[int, int]:
     concentrates candidate pairs on few prefix elements, so ONE band's
     candidate materialization can exceed the scratch envelope that
     waving exists to protect. Each band whose estimated candidate
-    mass exceeds ``MPES_WAVE_CAND_CAP`` (default 2e8 pairs ≈ low-GB
-    of pre-distinct join scratch; <= 0 disables) is split into
+    mass exceeds :data:`WAVE_CAND_CAP` (2e8 pairs ≈ low-GB of
+    pre-distinct join scratch; <= 0 disables) is split into
     ceil(mass / cap) slices by hash of the candidate's left doc id —
     every pair lands in exactly one slice of its band, so the union
     over slices is row-identical to the unsplit band while peak
@@ -742,13 +741,13 @@ def _wave_subslices(mass_rows, waves: int) -> dict[int, int]:
     is one small aggregation over the (pinned, prefix-sized) element
     relation collected as ``waves`` numbers — a deliberate eager step
     in an already-eager (per-wave localCheckpoint) execution mode."""
-    cap = float(os.environ.get("MPES_WAVE_CAND_CAP", "2e8"))
     out = {i: 1 for i in range(waves)}
-    if cap <= 0 or not math.isfinite(cap):
+    if WAVE_CAND_CAP <= 0:
         return out
     for r in mass_rows:
         if r["band"] is not None and r["m"] is not None:
-            out[int(r["band"])] = max(1, math.ceil(float(r["m"]) / cap))
+            m = float(r["m"])
+            out[int(r["band"])] = max(1, math.ceil(m / WAVE_CAND_CAP))
     return out
 
 
@@ -766,15 +765,14 @@ def _wave_gc(df: DataFrame) -> None:
     headroom — at gate scale (sf0.1, megabytes of wave scratch) the
     6 per-execution nudges cost 2.4 s of neardup_prefix_waved's
     14.5 s median while reclaiming nothing that matters. Pressure
-    test, both terms workload-scaled and env-tunable: free scratch
-    below an absolute floor (``MPES_WAVE_GC_FREE_GB``, default 32 —
-    below this, the next wave can plausibly ENOSPC regardless of
-    workload), or below ``MPES_WAVE_GC_HEADROOM`` (default 4) times
-    the LIVE pinned-block bytes, the direct measure of this
-    workload's per-wave scratch magnitude (the sf10 campaign's
-    67 GB-free box with tens-of-GB waves fires immediately under
-    either term; a TB-scratch cluster with the same waves skips
-    until headroom genuinely thins)."""
+    test, both terms workload-scaled: free scratch below an absolute
+    floor (:data:`WAVE_GC_FREE_GB` — below this, the next wave can
+    plausibly ENOSPC regardless of workload), or below
+    :data:`WAVE_GC_HEADROOM` times the LIVE pinned-block bytes, the
+    direct measure of this workload's per-wave scratch magnitude
+    (the sf10 campaign's 67 GB-free box with tens-of-GB waves fires
+    immediately under either term; a TB-scratch cluster with the same
+    waves skips until headroom genuinely thins)."""
     try:
         sc = df.sparkSession.sparkContext
         import shutil
@@ -785,30 +783,44 @@ def _wave_gc(df: DataFrame) -> None:
             or "/tmp"
         )
         free = shutil.disk_usage(local.split(",")[0]).free
-        floor = float(os.environ.get("MPES_WAVE_GC_FREE_GB", "32")) * 1e9
-        headroom = float(os.environ.get("MPES_WAVE_GC_HEADROOM", "4"))
         live = sum(
             r.diskSize() + r.memSize()
             for r in sc._jsc.sc().getRDDStorageInfo()
         )
-        if free > max(floor, headroom * live):
+        if free > max(WAVE_GC_FREE_GB * 1e9, WAVE_GC_HEADROOM * live):
             return
         sc._jvm.System.gc()
     except Exception:  # noqa: BLE001 - Connect mode has no _jvm; best-effort
         pass
 
 
-def _wave_doc_filter(toks: DataFrame, cand: DataFrame, id_col: str) -> DataFrame:
-    """Restrict an element relation to the docs a candidate wave
-    touches — broadcast semi-join on the (candidate-bounded, small)
-    wave doc-id set, so per-wave verify shuffles only the shingles of
-    participating docs instead of the full ~40x relation."""
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    return toks.join(F.broadcast(ids), id_col, "left_semi")
+def _waved_verify(
+    cands: Iterable[DataFrame],
+    toks: DataFrame,
+    id_col: str,
+    verify: Callable[[DataFrame, DataFrame], DataFrame],
+) -> list[DataFrame]:
+    """The waved loop of the three waved similarity joins (the
+    partitioned prefix-filter join of Distributed Similarity Joins
+    over Top-K Rankings, EDBT'20). Per wave: pin the candidates, then
+    verify them against the element rows of the wave's docs only — a
+    broadcast semi-join on the small wave doc-id set, so verify
+    shuffles the shingles of participating docs instead of the full
+    ~40x relation — pin the verified part and release the candidates.
+    Returns the pinned parts, which the caller owns."""
+    parts = []
+    for cand in cands:
+        cand = cand.localCheckpoint(eager=True)
+        ids = (
+            cand.select(F.col("id_a").alias(id_col))
+            .union(cand.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        toks_w = toks.join(F.broadcast(ids), id_col, "left_semi")
+        parts.append(verify(cand, toks_w).localCheckpoint(eager=True))
+        release(cand)
+        _wave_gc(cand)
+    return parts
 
 
 def prefix_filtered_pairs(
@@ -859,7 +871,7 @@ def prefix_filtered_pairs(
     scratch is bounded by one band's candidates plus the shingles of
     that wave's participating docs (broadcast-semi-filtered) instead
     of the full ~40x-corpus relation; clique-heavy bands are further
-    sub-split under ``MPES_WAVE_CAND_CAP`` (r12 — see
+    sub-split under :data:`WAVE_CAND_CAP` (r12 — see
     :func:`_wave_subslices`) so even one hot band's candidate
     materialization stays bounded. RESULT-IDENTICAL to waves=1: a
     qualifying pair shares >= 1 prefix element, that element hashes
@@ -951,9 +963,8 @@ def prefix_filtered_pairs(
                 ).localCheckpoint(eager=True)
             )
             _wave_gc(toksh)
-        prefix = pfx_parts[0]
-        for p in pfx_parts[1:]:
-            prefix = prefix.union(p)
+        release(dfreq)
+        prefix = reduce(DataFrame.union, pfx_parts)
     else:
         # consumed as BOTH sides of the candidate self-join — persist,
         # or the df-join + both windows execute twice (plan showed 4
@@ -977,14 +988,13 @@ def prefix_filtered_pairs(
         if not checkpoint:
             return out
         out = out.localCheckpoint(eager=True)
-        prefix.unpersist()
-        toks.unpersist()
+        release(prefix, toks)
         return out
 
     # Candidate-mass schedule (r12, VERDICT r11 #2): one small agg
     # over the pinned prefix relation estimates each band's candidate
     # pairs (sum over elements of c*(c-1)/2, c = prefix occurrences);
-    # bands over MPES_WAVE_CAND_CAP are sub-split by hash of the
+    # bands over WAVE_CAND_CAP are sub-split by hash of the
     # pair's LEFT id so one clique-heavy band can no longer
     # materialize an unbounded candidate set — see _wave_subslices.
     mass = (
@@ -999,52 +1009,49 @@ def prefix_filtered_pairs(
         .collect()
     )
     slices = _wave_subslices(mass, waves)
-    parts: list[DataFrame] = []
-    for i in range(waves):
-        band = prefix.filter(_wave_band("sh", waves, i))
-        for j in range(slices[i]):
-            a = band.select(F.col(id_col).alias("id_a"), "sh")
-            if slices[i] > 1:
-                # every (id_a < id_b) pair is generated from its id_a
-                # row, so slicing the a side by hash(id_a) partitions
-                # the band's pairs exactly — complete and disjoint
-                a = a.filter(_wave_slice("id_a", slices[i], j))
-            b = band.select(F.col(id_col).alias("id_b"), "sh")
-            cand = (
-                a.join(b, "sh")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-                .distinct()
-                # pin the slice's candidates: consumed 3x below (doc
-                # filter + verify), and the eager cut means this
-                # slice's candidate shuffle is released before the
-                # next plans
-                .localCheckpoint(eager=True)
-            )
-            # Waved verify runs on the HASHED element relation with
-            # the (slice-bounded, id-pair-only) candidates broadcast
-            # (r11 fix ladder (a)+(c), SCALING.md): the sa side then
-            # never shuffles, and the per-wave element shuffle
-            # carries 16 B rows instead of ~60 B strings. icnt/nsh by
-            # hash equal the string counts except under an exact
-            # 64-bit collision (~1e-13/pair; the sf0.01 oracle gate
-            # checks exactness empirically). The waves=1 gate path
-            # stays string-keyed, exact by construction.
-            toks_w = _wave_doc_filter(toksh, cand, id_col)
-            parts.append(
-                verify_jaccard(
-                    cand, toks_w, threshold, id_col, broadcast_pairs=True
-                ).localCheckpoint(eager=True)
-            )
-            _wave_gc(cand)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
+
+    def _cands():
+        for i in range(waves):
+            band = prefix.filter(_wave_band("sh", waves, i))
+            for j in range(slices[i]):
+                a = band.select(F.col(id_col).alias("id_a"), "sh")
+                if slices[i] > 1:
+                    # every (id_a < id_b) pair is generated from its
+                    # id_a row, so slicing the a side by hash(id_a)
+                    # partitions the band's pairs exactly — complete
+                    # and disjoint
+                    a = a.filter(_wave_slice("id_a", slices[i], j))
+                b = band.select(F.col(id_col).alias("id_b"), "sh")
+                yield (
+                    a.join(b, "sh")
+                    .filter(F.col("id_a") < F.col("id_b"))
+                    .select("id_a", "id_b")
+                    .distinct()
+                )
+
+    # Waved verify runs on the HASHED element relation with the
+    # (slice-bounded, id-pair-only) candidates broadcast (r11 fix
+    # ladder (a)+(c), SCALING.md): the sa side then never shuffles,
+    # and the per-wave element shuffle carries 16 B rows instead of
+    # ~60 B strings. icnt/nsh by hash equal the string counts except
+    # under an exact 64-bit collision (~1e-13/pair; the sf0.01 oracle
+    # gate checks exactness empirically). The waves=1 gate path stays
+    # string-keyed, exact by construction.
+    parts = _waved_verify(
+        _cands(),
+        toksh,
+        id_col,
+        lambda cand, toks_w: verify_jaccard(
+            cand, toks_w, threshold, id_col, broadcast_pairs=True
+        ),
+    )
+    release(*pfx_parts)
     # a pair can surface in several bands (one per shared prefix
     # element's band) with byte-identical verified rows
-    out = out.distinct()
-    out = out.localCheckpoint(eager=True) if checkpoint else out
-    prefix.unpersist()
+    out = reduce(DataFrame.union, parts).distinct()
+    if checkpoint:
+        out = out.localCheckpoint(eager=True)
+        release(*parts)
     return out
 
 
@@ -1197,9 +1204,12 @@ def prefix_dual_pairs(
     of it) * d candidates, and ubiquitous elements are in nobody's
     prefix); the one-sided join is the price of containment
     completeness and is the standard asymmetric-prefix scheme. All
-    joins equi-keyed; the element relation is RECOMPUTED per consumer
-    (cheap scan+explode lineage — persisting it was measurably slower
-    cold and would be a memory hazard at scale, r9)."""
+    joins equi-keyed. The ranked element relation is persisted (the
+    prefix and probe sides and the mass schedule all read it); so is
+    the element relation on the unwaved path, where the ranking and
+    three verify consumers read it. Runs Spark jobs when called: with
+    ``checkpoint`` (default) the result is an eager local checkpoint
+    and both persists are released."""
     t_eff = min(jaccard_threshold, containment_threshold)
     toks = (
         token_sets(df, text, id_col)
@@ -1250,8 +1260,7 @@ def prefix_dual_pairs(
         if not checkpoint:
             return out
         out = out.localCheckpoint(eager=True)
-        enriched.unpersist()
-        toks.unpersist()
+        release(enriched, toks)
         return out
 
     # Waved execution (r11, sf10 scratch bound — see
@@ -1277,31 +1286,31 @@ def prefix_dual_pairs(
         .collect()
     )
     slices = _wave_subslices(mass, waves)
-    parts: list[DataFrame] = []
-    for i in range(waves):
-        band_p = prefix.filter(_wave_band("sh", waves, i))
-        for j in range(slices[i]):
-            pfx = (
-                band_p
-                if slices[i] == 1
-                else band_p.filter(_wave_slice("id_p", slices[i], j))
-            )
-            cand = _cand(pfx).localCheckpoint(eager=True)
-            # hashed-element verify in waves (see prefix_filtered_pairs)
-            toks_w = _wave_doc_filter(toksh, cand, id_col)
-            parts.append(
-                _dual_verify(
-                    cand, toks_w, jaccard_threshold, containment_threshold,
-                    id_col,
-                ).localCheckpoint(eager=True)
-            )
-            _wave_gc(cand)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    out = out.distinct()
-    out = out.localCheckpoint(eager=True) if checkpoint else out
-    enriched.unpersist()
+
+    def _cands():
+        for i in range(waves):
+            band = prefix.filter(_wave_band("sh", waves, i))
+            for j in range(slices[i]):
+                yield _cand(
+                    band
+                    if slices[i] == 1
+                    else band.filter(_wave_slice("id_p", slices[i], j))
+                )
+
+    # hashed-element verify in waves (see prefix_filtered_pairs)
+    parts = _waved_verify(
+        _cands(),
+        toksh,
+        id_col,
+        lambda cand, toks_w: _dual_verify(
+            cand, toks_w, jaccard_threshold, containment_threshold, id_col
+        ),
+    )
+    release(enriched)
+    out = reduce(DataFrame.union, parts).distinct()
+    if checkpoint:
+        out = out.localCheckpoint(eager=True)
+        release(*parts)
     return out
 
 
@@ -1380,8 +1389,7 @@ def prefix_filtered_join(
     if not checkpoint:
         return out
     out = out.localCheckpoint(eager=True)
-    tl.unpersist()
-    tr.unpersist()
+    release(tl, tr)
     return out
 
 
@@ -1657,22 +1665,6 @@ FROM sizes z LEFT JOIN rcnt c ON c.{id_col} = z.{id_col}
 # duplicate-cluster resolution (connected components over near-dup pairs)
 # ---------------------------------------------------------------------------
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort EAGER release of a ``localCheckpoint``'s persisted
-    blocks (r9, the dedup_clusters sf1 GC-spike fix): a local
-    checkpoint persists its RDD in the block manager, and without an
-    explicit unpersist those blocks linger until the JVM happens to
-    GC the superseded RDD handle — at sf1 the accumulated superseded
-    label generations produced an 8x-median GC-stalled rep. The
-    checkpointed RDD sits on the analyzed LogicalRDD plan; unpersist
-    it non-blocking. Internal-API access is wrapped so a Spark version
-    drift degrades back to GC-timed cleanup, never an error."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 - cleanup is best-effort by design
-        pass
-
-
 def connected_components(
     pairs: DataFrame,
     id_col: str = "doc_id",
@@ -1714,6 +1706,14 @@ def connected_components(
     unchanged; ``driver_edge_limit=0`` forces it (used by the tests
     that pin the distributed algorithm).
     """
+    return _cc_labels(pairs, max_iter, driver_edge_limit).select(
+        F.col("node").alias(id_col), F.col("label").alias("cluster_id")
+    )
+
+
+def _cc_labels(pairs: DataFrame, max_iter: int, driver_edge_limit: int) -> DataFrame:
+    """(node, label) body of :func:`connected_components`; on the
+    distributed path, a local checkpoint the caller owns."""
     # symmetrize with ONE pass over the (possibly expensive) pair
     # plan — a union of two selects would execute it twice
     sym = (
@@ -1748,10 +1748,8 @@ def connected_components(
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)  # min root = min label
         rows = [(n, find(n)) for n in parent]
-        _free_local_checkpoint(sym)
-        return pairs.sparkSession.createDataFrame(
-            rows, f"{id_col} long, cluster_id long"
-        )
+        release(sym)
+        return pairs.sparkSession.createDataFrame(rows, "node long, label long")
 
     lab = (
         sym.select(F.col("src").alias("node"))
@@ -1786,13 +1784,13 @@ def connected_components(
         lab = jumped.localCheckpoint()
         # the new generation is materialized; release the old one's
         # blocks NOW instead of waiting for JVM GC (sf1 spike fix)
-        _free_local_checkpoint(superseded)
+        release(superseded)
         new_sum = lab.agg(F.sum("label")).collect()[0][0]
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    _free_local_checkpoint(sym)
-    return lab.select(F.col("node").alias(id_col), F.col("label").alias("cluster_id"))
+    release(sym)
+    return lab
 
 
 def cluster_summary(
@@ -2182,8 +2180,9 @@ def canonical_by_quality(
     cluster partitions — no global sort."""
     from pyspark.sql.window import Window
 
-    comp = connected_components(
-        pairs, id_col=id_col, driver_edge_limit=driver_edge_limit
+    labels = _cc_labels(pairs, max_iter=25, driver_edge_limit=driver_edge_limit)
+    comp = labels.select(
+        F.col("node").alias(id_col), F.col("label").alias("cluster_id")
     )
     labeled = docs.select(
         F.col(id_col), F.col(quality).cast("bigint").alias("_q")
@@ -2194,11 +2193,12 @@ def canonical_by_quality(
     # ranked is consumed twice (winner filter + cluster rollup); its
     # lineage carries the whole pair-derivation -> CC pipeline, so an
     # unpinned plan would re-run near-dup detection per consumer.
-    # The relation is clustered-doc-sized — pin it. (Same
-    # checkpoint-vs-persist tradeoff note as analysis/graph.pagerank.)
+    # The relation is clustered-doc-sized — pin it (policy:
+    # mpes_spark/pinning.py).
     ranked = labeled.withColumn(
         "rk", F.row_number().over(w)
     ).localCheckpoint(eager=True)
+    release(labels)
     per_cluster = ranked.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("_q").cast("bigint").alias("total_quality"),

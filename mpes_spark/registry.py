@@ -1506,13 +1506,11 @@ def pagerank_custsupp(spark, sf_dir):
     broadcast agg. Normalized ranks (mean 1.0) rounded to 6 — see
     analysis/graph.py for the 100-TB notes.
 
-    checkpoint_every=1 keeps the plan one-iteration deep: the
-    node-sized rank relation is localCheckpoint-pinned each round, so
-    codegen compiles three shallow plans instead of one deep unrolled
-    one and the lineage no longer grows with iters — the shape that
-    survives high iteration counts in production. Measured faster
-    locally too (r6 A/B, SCALING.md §"pagerank_custsupp r5 driver-flag
-    adjudication": cold 9.18 vs 11.34, warm ~6.5 vs ~7.4)."""
+    pagerank localCheckpoints the node-sized rank relation each round,
+    so codegen compiles three shallow plans instead of one deep
+    unrolled one and the lineage does not grow with iters (r6 A/B,
+    SCALING.md §"pagerank_custsupp r5 driver-flag adjudication": cold
+    9.18 vs 11.34, warm ~6.5 vs ~7.4)."""
     from mpes_spark.analysis.graph import pagerank
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1541,8 +1539,6 @@ def pagerank_custsupp(spark, sf_dir):
         iters=3,
         damping=0.85,
         normalize=True,
-        partitions=spark.sparkContext.defaultParallelism,
-        checkpoint_every=1,
     )
     return pr.select("node", F.round("rank_norm", 6).alias("rank_norm"))
 
@@ -1638,8 +1634,6 @@ def pagerank_weighted(spark, sf_dir):
         iters=3,
         damping=0.85,
         normalize=True,
-        partitions=spark.sparkContext.defaultParallelism,
-        checkpoint_every=1,
         weight="w",
     )
     return pr.select("node", F.round("rank_norm", 6).alias("rank_norm"))

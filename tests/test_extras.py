@@ -2704,38 +2704,31 @@ def test_mat_decode_stats_parity(spark):
     assert g.loc[g.doc_id == 2, "n_vars"].item() == 0
 
 
-def test_wave_gc_pressure_gated(spark):
+def test_wave_gc_pressure_gated(spark, monkeypatch):
     """_wave_gc fires only under scratch pressure (r11): with ample
     free scratch it must return without a JVM full GC (the 6 forced
     GCs cost 2.4 s/execution at gate scale), and under a forced
     pressure threshold it must still complete (the gc path)."""
-    import os
     import time
 
+    from mpes_spark.extras import dedup
     from mpes_spark.extras.dedup import _wave_gc
 
     df = spark.range(10)
-    old = os.environ.get("MPES_WAVE_GC_FREE_GB")
-    try:
-        os.environ["MPES_WAVE_GC_FREE_GB"] = "0.000001"
-        t0 = time.perf_counter()
-        _wave_gc(df)
-        skip_ms = (time.perf_counter() - t0) * 1000
-        os.environ["MPES_WAVE_GC_FREE_GB"] = "1000000"
-        t0 = time.perf_counter()
-        _wave_gc(df)  # gc path must not raise
-        gc_ms = (time.perf_counter() - t0) * 1000
-        # the skip path must not have paid a full GC (forced major
-        # GCs on the test JVM measure ~100 ms+; the skip path is a
-        # disk_usage + storage-info read). Bound is relative to the
-        # measured gc path so a loaded box inflates both sides
-        # instead of false-failing the absolute check.
-        assert skip_ms < max(50.0, gc_ms)
-    finally:
-        if old is None:
-            os.environ.pop("MPES_WAVE_GC_FREE_GB", None)
-        else:
-            os.environ["MPES_WAVE_GC_FREE_GB"] = old
+    monkeypatch.setattr(dedup, "WAVE_GC_FREE_GB", 0.000001)
+    t0 = time.perf_counter()
+    _wave_gc(df)
+    skip_ms = (time.perf_counter() - t0) * 1000
+    monkeypatch.setattr(dedup, "WAVE_GC_FREE_GB", 1000000.0)
+    t0 = time.perf_counter()
+    _wave_gc(df)  # gc path must not raise
+    gc_ms = (time.perf_counter() - t0) * 1000
+    # the skip path must not have paid a full GC (forced major
+    # GCs on the test JVM measure ~100 ms+; the skip path is a
+    # disk_usage + storage-info read). Bound is relative to the
+    # measured gc path so a loaded box inflates both sides
+    # instead of false-failing the absolute check.
+    assert skip_ms < max(50.0, gc_ms)
 
 
 def test_waved_execution_parity(spark):
@@ -2793,16 +2786,15 @@ def test_waved_execution_parity(spark):
     assert flat and key(waved) == key(flat), "blocked_jaccard"
 
 
-def test_waved_subslice_parity(spark):
+def test_waved_subslice_parity(spark, monkeypatch):
     """Candidate-mass sub-splitting (r12, the waved-dedup clique
-    bound) is likewise result-INVISIBLE: with MPES_WAVE_CAND_CAP
+    bound) is likewise result-INVISIBLE: with WAVE_CAND_CAP
     forced to 1 candidate pair, EVERY band sub-splits into per-id
     slices, and the row set must still equal the flat execution for
     both prefix operators — including dual-measure pairs that now
     surface once per direction across slices (collapsed by the final
     distinct). Also pins the schedule math: cap<=0 disables."""
-    import os
-
+    from mpes_spark.extras import dedup
     from mpes_spark.extras.dedup import (
         _wave_subslices,
         prefix_dual_pairs,
@@ -2826,29 +2818,22 @@ def test_waved_subslice_parity(spark):
     def key(rs):
         return sorted(tuple(r) for r in rs)
 
-    old = os.environ.get("MPES_WAVE_CAND_CAP")
-    try:
-        os.environ["MPES_WAVE_CAND_CAP"] = "1"
-        assert _wave_subslices([{"band": 0, "m": 10.0}], 2) == {0: 10, 1: 1}
-        flat = prefix_filtered_pairs(docs, threshold=0.5, n=3).collect()
-        sliced = prefix_filtered_pairs(
-            docs, threshold=0.5, n=3, waves=3
-        ).collect()
-        assert flat and key(sliced) == key(flat), "prefix_filtered sliced"
-        flat = prefix_dual_pairs(
-            docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1
-        ).collect()
-        sliced = prefix_dual_pairs(
-            docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1,
-            waves=3,
-        ).collect()
-        assert flat and key(sliced) == key(flat), "prefix_dual sliced"
-        os.environ["MPES_WAVE_CAND_CAP"] = "0"
-        assert _wave_subslices([{"band": 0, "m": 1e12}], 3) == {
-            0: 1, 1: 1, 2: 1,
-        }
-    finally:
-        if old is None:
-            os.environ.pop("MPES_WAVE_CAND_CAP", None)
-        else:
-            os.environ["MPES_WAVE_CAND_CAP"] = old
+    monkeypatch.setattr(dedup, "WAVE_CAND_CAP", 1.0)
+    assert _wave_subslices([{"band": 0, "m": 10.0}], 2) == {0: 10, 1: 1}
+    flat = prefix_filtered_pairs(docs, threshold=0.5, n=3).collect()
+    sliced = prefix_filtered_pairs(
+        docs, threshold=0.5, n=3, waves=3
+    ).collect()
+    assert flat and key(sliced) == key(flat), "prefix_filtered sliced"
+    flat = prefix_dual_pairs(
+        docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1
+    ).collect()
+    sliced = prefix_dual_pairs(
+        docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1,
+        waves=3,
+    ).collect()
+    assert flat and key(sliced) == key(flat), "prefix_dual sliced"
+    monkeypatch.setattr(dedup, "WAVE_CAND_CAP", 0.0)
+    assert _wave_subslices([{"band": 0, "m": 1e12}], 3) == {
+        0: 1, 1: 1, 2: 1,
+    }

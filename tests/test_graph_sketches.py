@@ -53,18 +53,6 @@ def test_pagerank_mass_conserved_and_normalized(spark):
     assert np.mean(norm) == pytest.approx(1.0, abs=1e-12)
 
 
-def test_pagerank_checkpoint_path_equivalent(spark):
-    edges = [("a", "b"), ("b", "a"), ("b", "c"), ("c", "a")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    plain = {r["node"]: r["rank"] for r in pagerank(df, iters=6).collect()}
-    ckpt = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, iters=6, checkpoint_every=2).collect()
-    }
-    for k in plain:
-        assert ckpt[k] == pytest.approx(plain[k], abs=1e-12)
-
-
 def test_cms_one_sided_error_all_tokens(spark):
     """CMS estimates are >= exact for EVERY token (not just top-k):
     run the estimate with topk covering the whole vocab."""

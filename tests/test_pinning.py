@@ -1,0 +1,150 @@
+"""The pinning contract (mpes_spark/pinning.py): ``release`` frees
+what it is given, and no graph or dedup operator leaves a pinned
+relation behind that its returned plan does not read."""
+
+import random
+
+from pyspark.sql import functions as F
+
+
+def _pinned_rdds(spark) -> set[int]:
+    """Ids of every persisted RDD, with each CacheManager entry's
+    column-buffer RDD built so a never-read cache entry shows too."""
+    ids = {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    for i in range(entries.size()):
+        builder = entries.apply(i).cachedRepresentation().cacheBuilder()
+        ids.add(builder.cachedColumnBuffers().id())
+    return ids
+
+
+def _leaf_rdds(df, cached: bool = False) -> set[int]:
+    """RDDs the plan of ``df`` reads as leaves: the checkpointed
+    ``LogicalRDD``s of its analyzed plan and, with ``cached``, the
+    buffers of the ``InMemoryRelation``s its cache-substituted plan
+    reads."""
+    qe = df._jdf.queryExecution()
+    ids = set()
+    plans = [qe.analyzed()] + ([qe.withCachedData()] if cached else [])
+    for plan in plans:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LogicalRDD":
+                ids.add(leaf.rdd().id())
+            elif kind == "InMemoryRelation":
+                ids.add(leaf.cacheBuilder().cachedColumnBuffers().id())
+    return ids
+
+
+def test_release_frees_persist_and_checkpoint(spark):
+    from mpes_spark.pinning import release
+
+    base = _pinned_rdds(spark)
+    cached = spark.range(50).select((F.col("id") * 2).alias("x")).persist()
+    cached.count()
+    assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
+    release(cached)
+    assert not cached.storageLevel.useMemory and not cached.storageLevel.useDisk
+    assert _pinned_rdds(spark) == base
+
+    ckpt = spark.range(50).select((F.col("id") + 1).alias("y")).localCheckpoint(
+        eager=True
+    )
+    assert _pinned_rdds(spark) - base
+    release(ckpt)
+    assert _pinned_rdds(spark) == base
+
+    # twice, unpinned, derived from a pin, or none at all: no-ops
+    keep = spark.range(5).localCheckpoint(eager=True)
+    release(ckpt, cached, spark.range(3), keep.select("id"))
+    release()
+    assert len(_pinned_rdds(spark) - base) == 1
+    assert sorted(r.id for r in keep.collect()) == list(range(5))
+    release(keep)
+    assert _pinned_rdds(spark) == base
+
+
+def _graph(spark):
+    rng = random.Random(7)
+    edges = set()
+    while len(edges) < 250:
+        a, b = rng.randrange(60), rng.randrange(60)
+        if a != b:
+            edges.add((min(a, b), max(a, b)))
+    return spark.createDataFrame(sorted(edges), "src long, dst long")
+
+
+def _docs(spark):
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(400)]
+    templates = [rng.sample(vocab, 14) for _ in range(12)]
+    rows = []
+    for doc_id in range(60):
+        words = list(templates[doc_id % 12])
+        for _ in range(rng.randrange(3)):
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        rows.append((doc_id, " ".join(words), len(words)))
+    return spark.createDataFrame(rows, "doc_id long, text string, n_chars long")
+
+
+def test_operators_leave_only_what_their_plan_reads(spark):
+    """After each call and one collect(), every newly pinned RDD or
+    cache entry must be a leaf of the returned analyzed plan — a
+    checkpoint the caller owns and releases. Exempt: pagerank, whose
+    per-iteration lazy checkpoints sit inside the lineage of the plan
+    it returns; and the two operators whose returned lazy plan reads
+    a persisted relation by design (their plan-shape tests pin the
+    cache scans), which may leave exactly that cache."""
+    from mpes_spark.analysis import graph as G
+    from mpes_spark.extras import dedup as DD
+
+    edges, docs = _graph(spark), _docs(spark)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (7, 9), (9, 11)], "id_a long, id_b long"
+    )
+    batch = docs.filter(F.col("doc_id") < 12)
+    cases = {
+        "label_propagation": lambda: G.label_propagation(edges),
+        "triangle_count": lambda: G.triangle_count(edges),
+        "clustering_coefficient": lambda: G.clustering_coefficient(edges),
+        "kcore": lambda: G.kcore(edges),
+        "minhash_neardup_pairs": lambda: DD.minhash_neardup_pairs(docs),
+        "winnow_dup_stats": lambda: DD.winnow_dup_stats(docs),
+        "prefix_filtered_join": lambda: DD.prefix_filtered_join(
+            batch, docs, threshold=0.6
+        ),
+        "connected_components": lambda: DD.connected_components(pairs),
+        "connected_components[distributed]": lambda: DD.connected_components(
+            pairs, driver_edge_limit=0
+        ),
+        "canonical_by_quality": lambda: DD.canonical_by_quality(docs, pairs),
+        "canonical_by_quality[distributed]": lambda: DD.canonical_by_quality(
+            docs, pairs, driver_edge_limit=0
+        ),
+    }
+    for waves in (1, 3):
+        cases[f"blocked_jaccard_pairs[waves={waves}]"] = (
+            lambda w=waves: DD.blocked_jaccard_pairs(docs, threshold=0.4, waves=w)
+        )
+        cases[f"prefix_filtered_pairs[waves={waves}]"] = (
+            lambda w=waves: DD.prefix_filtered_pairs(docs, threshold=0.6, waves=w)
+        )
+        cases[f"prefix_dual_pairs[waves={waves}]"] = (
+            lambda w=waves: DD.prefix_dual_pairs(docs, waves=w)
+        )
+
+    leaks = {}
+    for name, build in cases.items():
+        before = _pinned_rdds(spark)
+        out = build()
+        assert out.collect(), name
+        lazy_cache = name in ("minhash_neardup_pairs", "winnow_dup_stats")
+        left = _pinned_rdds(spark) - before - _leaf_rdds(out, lazy_cache)
+        if left:
+            leaks[name] = len(left)
+    assert leaks == {}

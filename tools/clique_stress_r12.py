@@ -8,7 +8,7 @@ candidate mass concentrates quadratically in the few bands holding
 the clique's prefix elements) plus unique background docs — then runs
 `prefix_filtered_pairs(waves=W)` twice:
 
-  A. sub-splitting disabled (MPES_WAVE_CAND_CAP=0) — the r11 behavior:
+  A. sub-splitting disabled (dedup.WAVE_CAND_CAP = 0) — the r11 behavior:
      each band materializes ALL its candidates in one localCheckpoint.
   B. sub-splitting on with a deliberately low cap, forcing each hot
      band into many slices.
@@ -93,6 +93,7 @@ def main() -> None:
     )
     from pyspark.sql import functions as F
 
+    from mpes_spark.extras import dedup
     from mpes_spark.extras.dedup import prefix_filtered_pairs
 
     # clique: a fixed 60-token template with ONE varying token per doc
@@ -118,8 +119,8 @@ def main() -> None:
     )
     docs_plan = base.unionByName(bg)
 
-    def run(cap: str):
-        os.environ["MPES_WAVE_CAND_CAP"] = cap
+    def run(cap: float):
+        dedup.WAVE_CAND_CAP = cap
         # fresh checkpoint per run (a blanket unpersist would destroy
         # a shared one's blocks out from under the next run's plan)
         docs = docs_plan.localCheckpoint(eager=True)
@@ -143,8 +144,8 @@ def main() -> None:
         }
 
     expected = n_clique * (n_clique - 1) // 2
-    a = run("0")          # sub-splitting disabled (r11 behavior)
-    b = run("100000")     # forced low cap: hot bands split hard
+    a = run(0.0)          # sub-splitting disabled (r11 behavior)
+    b = run(100000.0)     # forced low cap: hot bands split hard
     art = {
         "n_clique": n_clique,
         "n_background": n_bg,

@@ -19,6 +19,7 @@ each micro-batch exactly as in the batch engine.
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
@@ -26,6 +27,7 @@ from pyspark.sql import functions as F
 
 from mpes_spark.binning.spec import BinAxis
 from mpes_spark.grid.binned import BinnedArray
+from mpes_spark.pinning import Parts, pin
 
 
 def with_event_time(
@@ -347,7 +349,6 @@ def neardup_ingest_sink(
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.7,
-    compact_every: int | None = None,
     compact_path: str | None = None,
 ):
     """NEAR-duplicate ingest dedup — the LSH upgrade of
@@ -377,27 +378,26 @@ def neardup_ingest_sink(
     aggregation + bucket join + verify aggregation is two streaming
     aggregations deep — beyond what append-mode streaming plans allow
     — while per micro-batch it is ordinary bounded work. Scale shape:
-    the corpus shingle/bucket relations are computed ONCE up front
-    (at 10^9 docs these are the things to keep bucketed on disk);
-    each batch's increment is materialized once behind an eager
-    localCheckpoint and APPENDED to a parts list — the seen relation a
-    join consumes is a lazy union of already-materialized parts, so
-    per-batch work is the batch digests plus one scan of the seen
-    parts, never a rewrite of the whole history (the rewrite-per-batch
-    fold was O(N) blocks written per batch, O(N^2) cumulative).
-    ``compact_every=K`` bounds the parts list: every K batches the
-    seen relations are rewritten to ``compact_path`` as parquet
-    (buckets repartitioned on the (band, bucket) join key,
-    generation-numbered so the previous generation stays readable
-    during the rewrite) and the parts collapse to the one on-disk
-    relation — checkpoint blocks are executor-local and
-    non-replicated, a compacted table is replayable from storage.
-    With ``compact_path=None`` compaction collapses to a single fresh
-    localCheckpoint, which still releases the dead per-batch blocks
-    and keeps the union shallow. ``novel``/``flagged`` accumulate the
-    same way and are compacted on the same cadence."""
-    from functools import reduce
-
+    the corpus shingle/bucket relations are computed and kept ONCE, for
+    the sink's life (at 10^9 docs these are the things to keep bucketed
+    on disk); each batch's increment is pinned once and ADDED to the
+    seen :class:`~mpes_spark.pinning.Parts` — the seen relation a join
+    consumes is the corpus relation unioned lazily with
+    already-materialized stream parts, so per-batch work is the batch
+    digests plus one scan of the seen relations, never a rewrite of the
+    whole history (the rewrite-per-batch fold was O(N) blocks written
+    per batch, O(N^2) cumulative). Every ``COMPACT_EVERY`` batches the
+    stream parts — never the corpus — are compacted and the per-batch
+    blocks they supersede are released. In memory the compaction is
+    one fresh local checkpoint of each union. With ``compact_path``
+    the corpus relations are written there once as parquet and each
+    compaction rewrites the stream parts there as the next generation
+    (``gen=<g>/<name>``, buckets repartitioned on the (band, bucket)
+    join key, so the previous generation stays readable during the
+    rewrite) — checkpoint blocks are executor-local and
+    non-replicated, a parquet table is replayable from storage.
+    ``novel``/``flagged`` accumulate the same way and are compacted in
+    the same batch."""
     from mpes_spark.extras.dedup import (
         lsh_buckets,
         minhash_signatures,
@@ -405,76 +405,54 @@ def neardup_ingest_sink(
         verify_jaccard_cross,
     )
 
-    corpus_sh = shingle_table(corpus, text, n, id_col).persist()
-    corpus_bk = (
-        lsh_buckets(minhash_signatures(corpus_sh, k, id_col), k, bands, id_col)
-        .withColumnRenamed(id_col, "matched_id")
-        .persist()
-    )
+    bk_key = ("band", "bucket")
+
+    def _keep(rel: DataFrame, name: str, *key: str) -> DataFrame:
+        # a pinned relation: the parquet table compact_path/name when
+        # a path is given, else an eager local checkpoint
+        if compact_path is None:
+            return pin(rel)
+        path = f"{compact_path}/{name}"
+        (rel.repartition(*key) if key else rel).write.mode("overwrite").parquet(path)
+        return rel.sparkSession.read.parquet(path)
+
+    def _merge(name: str, *key: str):
+        # each relation counts its own generations
+        gens = itertools.count(1)
+        return lambda rel: _keep(rel, f"gen={next(gens)}/{name}", *key)
+
+    corpus_sh = _keep(shingle_table(corpus, text, n, id_col), "corpus/seen_sh")
     state: dict = {
-        "novel": [],
-        "flagged": [],
-        "sh_parts": [corpus_sh],
-        "bk_parts": [corpus_bk],
-        "batches": 0,
-        "generation": 0,
-        "compactions": 0,
+        "corpus_sh": corpus_sh,
+        "corpus_bk": _keep(
+            lsh_buckets(
+                minhash_signatures(corpus_sh, k, id_col), k, bands, id_col
+            ).withColumnRenamed(id_col, "matched_id"),
+            "corpus/seen_bk",
+            *bk_key,
+        ),
+        "novel": Parts(_merge("novel")),
+        "flagged": Parts(_merge("flagged")),
+        "seen_sh": Parts(_merge("seen_sh")),
+        "seen_bk": Parts(_merge("seen_bk", *bk_key)),
     }
 
-    def _union(parts: list[DataFrame]) -> DataFrame:
-        return reduce(lambda a, b: a.unionByName(b), parts)
-
-    def _compact(spark) -> None:
-        state["generation"] += 1
-        state["compactions"] += 1
-        gen = state["generation"]
-        if compact_path is not None:
-            rels = {
-                "seen_sh": _union(state["sh_parts"]),
-                "seen_bk": _union(state["bk_parts"]).repartition(
-                    "band", "bucket"
-                ),
-                "novel": _union(state["novel"]) if state["novel"] else None,
-                "flagged": (
-                    _union(state["flagged"]) if state["flagged"] else None
-                ),
-            }
-            compacted = {}
-            for name, rel in rels.items():
-                if rel is None:
-                    continue
-                path = f"{compact_path}/gen={gen}/{name}"
-                rel.write.mode("overwrite").parquet(path)
-                compacted[name] = spark.read.parquet(path)
-            state["sh_parts"] = [compacted["seen_sh"]]
-            state["bk_parts"] = [compacted["seen_bk"]]
-            if "novel" in compacted:
-                state["novel"] = [compacted["novel"]]
-            if "flagged" in compacted:
-                state["flagged"] = [compacted["flagged"]]
-        else:
-            state["sh_parts"] = [
-                _union(state["sh_parts"]).localCheckpoint(eager=True)
-            ]
-            state["bk_parts"] = [
-                _union(state["bk_parts"]).localCheckpoint(eager=True)
-            ]
-            if state["novel"]:
-                state["novel"] = [
-                    _union(state["novel"]).localCheckpoint(eager=True)
-                ]
-            if state["flagged"]:
-                state["flagged"] = [
-                    _union(state["flagged"]).localCheckpoint(eager=True)
-                ]
+    def _seen(name: str) -> DataFrame:
+        stream = state[f"seen_{name}"].union()
+        corpus_rel = state[f"corpus_{name}"]
+        return corpus_rel if stream is None else corpus_rel.unionByName(stream)
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
-        seen_sh = _union(state["sh_parts"])
-        seen_buckets = _union(state["bk_parts"])
-        sh = shingle_table(batch, text, n, id_col).localCheckpoint(eager=True)
-        bks = lsh_buckets(
-            minhash_signatures(sh, k, id_col), k, bands, id_col
-        ).localCheckpoint(eager=True)
+        seen_sh, seen_buckets = _seen("sh"), _seen("bk")
+        sh = pin(shingle_table(batch, text, n, id_col))
+        # pinned under the seen relation's column names, so the same
+        # checkpoint becomes this batch's seen part
+        bk = pin(
+            lsh_buckets(
+                minhash_signatures(sh, k, id_col), k, bands, id_col
+            ).withColumnRenamed(id_col, "matched_id")
+        )
+        bks = bk.withColumnRenamed("matched_id", id_col)
         # candidates vs everything seen before this batch
         cand_seen = (
             bks.join(seen_buckets, ["band", "bucket"])
@@ -506,22 +484,20 @@ def neardup_ingest_sink(
             F.col("id_b").alias("matched_id"),
             "jaccard",
         )
-        # accumulate increments only — batch-sized materialization;
-        # the seen union is assembled lazily from materialized parts
-        state["novel"].append(novel.localCheckpoint(eager=True))
-        state["flagged"].append(flagged.localCheckpoint(eager=True))
-        # fold ALL batch docs (kept or dropped) into the seen relations
-        state["sh_parts"].append(sh)
-        state["bk_parts"].append(bks.withColumnRenamed(id_col, "matched_id"))
-        state["batches"] += 1
-        if compact_every and state["batches"] % compact_every == 0:
-            _compact(batch.sparkSession)
+        # novel and flagged read the seen parts and this batch's sh/bk:
+        # pin them before a compaction of the seen relations releases
+        # those; then fold ALL batch docs (kept or dropped) into the
+        # seen relations
+        state["novel"].add(novel)
+        state["flagged"].add(flagged)
+        state["seen_sh"].add(sh)
+        state["seen_bk"].add(bk)
 
     def novel() -> DataFrame | None:
-        return _union(state["novel"]) if state["novel"] else None
+        return state["novel"].union()
 
     def flagged() -> DataFrame | None:
-        return _union(state["flagged"]) if state["flagged"] else None
+        return state["flagged"].union()
 
-    handle.state = state  # introspection: batches/compactions/generation
+    handle.state = state
     return handle, novel, flagged

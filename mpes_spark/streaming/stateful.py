@@ -1,17 +1,23 @@
-"""Custom stateful streaming operator: cumulative per-group histogram.
+"""Stateful streaming operators and ``foreachBatch`` maintenance sinks.
 
-Unlike the windowed aggregations in :mod:`mpes_spark.streaming.live`
-(state evicted by watermark), a live acquisition display wants the
-*running* histogram since scan start. That is a custom stateful
-operator — ``applyInPandasWithState``: per group key, the state holds
-the occupied-bin count vector; each micro-batch folds its events in
-and emits the updated sparse histogram.
+``cumulative_histogram`` is a custom stateful operator
+(``applyInPandasWithState``): unlike the windowed aggregations in
+:mod:`mpes_spark.streaming.live` (state evicted by watermark), a live
+acquisition display wants the *running* histogram since scan start.
+Per group key the state holds the occupied-bin count vector, bounded
+by the grid (never by events) and checkpointed by the streaming
+engine.
 
-State size is grid-bounded per group (never event-bounded): at a
-512x512x50 production grid the worst-case state per group is the
-occupied-cell dict, exactly the memory the reference's accumulating
-``binDataframe`` combine held per worker (SURVEY §2.3) — but sharded
-across executors by group and checkpointed by the streaming engine.
+The sinks maintain a batch result incrementally, one micro-batch at a
+time, without rescanning history: time rollup, data-quality monitor,
+table checksum and bucket digests (driver-side state), and curation
+funnel, n-gram novelty, contamination tally, IVF index, substring and
+sentence-span dedup (DataFrame state). DataFrame state is held as
+:class:`mpes_spark.pinning.Parts` and follows the streaming rule in
+:mod:`mpes_spark.pinning`: the sink owns it, a relation a sink returns
+is valid until the next batch is handled, and the parts list is
+compacted every ``COMPACT_EVERY`` batches. The handle of each of
+these sinks exposes its state dict as ``handle.state``.
 """
 
 from __future__ import annotations
@@ -24,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mpes_spark.binning.spec import BinAxis
+from mpes_spark.pinning import Parts, pin, release
 
 _OUT_SCHEMA = "group string, bin bigint, cnt bigint"
 _STATE_SCHEMA = "bins array<bigint>, counts array<bigint>"
@@ -88,24 +95,24 @@ def rollup_maintenance_sink(
     ``handle`` to ``writeStream.foreachBatch``; ``current()`` yields
     the merged rollup DataFrame (None before the first batch).
 
-    The merged state is ``localCheckpoint(eager=True)``-pinned every
+    The merged state replaces the previous one as a pinned part every
     batch, so its size is bucket-grid-bounded and its lineage is one
     merge deep regardless of how many batches have streamed. In a
     real deployment the same handle body writes to a bucketed table
     (MERGE on bucket) instead of a checkpoint."""
     from mpes_spark.transforms.rollup import merge_rollups, time_rollup
 
-    state: dict[str, DataFrame | None] = {"rollup": None}
+    state = {"rollup": Parts()}
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
         delta = time_rollup(batch, measure=measure, bucket_ns=bucket_ns, ts_col=ts_col)
-        cur = state["rollup"]
-        merged = delta if cur is None else merge_rollups(cur, delta)
-        state["rollup"] = merged.localCheckpoint(eager=True)
+        cur = state["rollup"].union()
+        state["rollup"].replace(delta if cur is None else merge_rollups(cur, delta))
 
     def current() -> DataFrame | None:
-        return state["rollup"]
+        return state["rollup"].union()
 
+    handle.state = state  # type: ignore[attr-defined]
     return handle, current
 
 
@@ -220,12 +227,7 @@ def bucket_digest_maintenance_sink(
     return handle, current
 
 
-def funnel_maintenance_sink(
-    *,
-    text: str = "text",
-    id_col: str = "doc_id",
-    compact_every: int | None = None,
-):
+def funnel_maintenance_sink(*, text: str = "text", id_col: str = "doc_id"):
     """``foreachBatch`` maintenance of the curation funnel
     (:func:`mpes_spark.extras.curation.curation_funnel` online):
     every micro-batch is audited ALONE — metrics projection, verdict
@@ -244,22 +246,16 @@ def funnel_maintenance_sink(
     Scale shape: per-batch work is the batch's own metric projection
     + one fingerprint semi-join against the seen parts (lazy union of
     already-materialized per-batch increments — never a rewrite of
-    history; ``compact_every=K`` collapses the parts every K
-    batches). The funnel itself is (sources x 6)-row bounded, merged
+    history). The funnel itself is (sources x 6)-row bounded, merged
     and pinned each batch. Returns ``(handle, current)``;
     ``current()`` is the accumulated funnel DataFrame."""
-    from functools import reduce
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from mpes_spark.extras import text as TX
     from mpes_spark.extras.curation import AUDIT_STAGES
 
-    state: dict = {"fp_parts": [], "funnel": None, "batches": 0}
-
-    def _union(parts):
-        return reduce(lambda a, b: a.unionByName(b), parts)
+    state = {"fp": Parts(DataFrame.distinct), "funnel": Parts()}
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
         m = {n: fn(text) for n, fn in TX.GOPHER_METRICS_EXPR.items()}
@@ -272,8 +268,8 @@ def funnel_maintenance_sink(
         ).withColumn(
             "_batch_canon", F.col(id_col) == F.min(id_col).over(w)
         )
-        if state["fp_parts"]:
-            seen = _union(state["fp_parts"])
+        seen = state["fp"].union()
+        if seen is not None:
             b = b.join(
                 seen.withColumn("_seen", F.lit(True)), "_fp", "left"
             ).withColumn("_seen", F.coalesce(F.col("_seen"), F.lit(False)))
@@ -292,44 +288,29 @@ def funnel_maintenance_sink(
             b.groupBy("source", verdict.alias("verdict"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         )
-        cur = state["funnel"]
-        merged = (
+        cur = state["funnel"].union()
+        state["funnel"].replace(
             delta
             if cur is None
             else cur.unionByName(delta)
             .groupBy("source", "verdict")
             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
         )
-        state["funnel"] = merged.localCheckpoint(eager=True)
         # delta-sized registry increment: fingerprints NEW this batch
-        inc = (
+        state["fp"].add(
             b.filter(F.col("_batch_canon") & ~F.col("_seen"))
             .select("_fp")
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        state["fp_parts"].append(inc)
-        state["batches"] += 1
-        if compact_every and state["batches"] % compact_every == 0:
-            state["fp_parts"] = [
-                _union(state["fp_parts"])
-                .distinct()
-                .localCheckpoint(eager=True)
-            ]
 
     def current() -> DataFrame | None:
-        return state["funnel"]
+        return state["funnel"].union()
 
+    handle.state = state  # type: ignore[attr-defined]
     return handle, current
 
 
-def novelty_maintenance_sink(
-    *,
-    text: str = "text",
-    n: int = 3,
-    id_col: str = "doc_id",
-    compact_every: int | None = None,
-):
+def novelty_maintenance_sink(*, text: str = "text", n: int = 3, id_col: str = "doc_id"):
     """``foreachBatch`` incremental maintenance of per-doc n-gram
     novelty (:func:`mpes_spark.extras.dedup.ngram_novelty` online).
     Novelty is a GLOBAL property — an old doc's novelty DEGRADES when
@@ -347,64 +328,44 @@ def novelty_maintenance_sink(
     maintained state — and therefore every novelty value — is
     INDEPENDENT of batch arrival order, which the parity test
     asserts by streaming the same corpus in two different orders.
-    ``compact_every=K`` pre-merges the shingle parts every K batches
-    (groupBy sh: sum df_cnt, min owner), bounding the union depth.
+    Compaction pre-merges the shingle parts (groupBy sh: sum df_cnt,
+    min owner), bounding the union depth.
 
     Returns ``(handle, current)``."""
-    from functools import reduce
-
     from pyspark.sql import functions as F
 
     from mpes_spark.extras.dedup import shingle_table
-
-    state: dict = {"sh_parts": [], "size_parts": [], "batches": 0}
-
-    def _union(parts):
-        return reduce(lambda a, b: a.unionByName(b), parts)
 
     def _merge_sh(rel: DataFrame) -> DataFrame:
         return rel.groupBy("sh").agg(
             F.sum("df_cnt").alias("df_cnt"), F.min("owner").alias("owner")
         )
 
+    state = {"sh": Parts(_merge_sh), "sizes": Parts()}
+
     def handle(batch: DataFrame, _batch_id: int) -> None:
         sh = shingle_table(batch, text, n, id_col)
-        inc = (
-            sh.groupBy("sh")
-            .agg(
+        state["sh"].add(
+            sh.groupBy("sh").agg(
                 F.count(F.lit(1)).alias("df_cnt"),
                 F.min(id_col).alias("owner"),
             )
-            .localCheckpoint(eager=True)
         )
-        sizes = (
-            sh.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_shingles"))
-            .localCheckpoint(eager=True)
+        state["sizes"].add(
+            sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
         )
-        state["sh_parts"].append(inc)
-        state["size_parts"].append(sizes)
-        state["batches"] += 1
-        if compact_every and state["batches"] % compact_every == 0:
-            state["sh_parts"] = [
-                _merge_sh(_union(state["sh_parts"])).localCheckpoint(
-                    eager=True
-                )
-            ]
-            state["size_parts"] = [
-                _union(state["size_parts"]).localCheckpoint(eager=True)
-            ]
 
     def current() -> DataFrame | None:
-        if not state["sh_parts"]:
+        sh = state["sh"].union()
+        if sh is None:
             return None
-        merged = _merge_sh(_union(state["sh_parts"]))
+        merged = _merge_sh(sh)
         uniq = (
             merged.filter(F.col("df_cnt") == 1)
             .groupBy(F.col("owner").alias(id_col))
             .agg(F.count(F.lit(1)).alias("n_unique"))
         )
-        sizes = _union(state["size_parts"])
+        sizes = state["sizes"].union()
         return sizes.join(uniq, id_col, "left").select(
             id_col,
             F.col("n_shingles").cast("bigint").alias("n_shingles"),
@@ -417,6 +378,7 @@ def novelty_maintenance_sink(
             ).alias("novelty"),
         )
 
+    handle.state = state  # type: ignore[attr-defined]
     return handle, current
 
 
@@ -446,14 +408,13 @@ def contamination_monitor_sink(
     DataFrame."""
     from pyspark.sql import functions as F
 
-    from mpes_spark.extras.curation import contamination_severity
     from mpes_spark.extras.dedup import shingle_table
 
     bench_sh = (
         shingle_table(benchmark, text, n, id_col).select("sh").distinct()
         .persist()
     )
-    state: dict = {"tally": None}
+    state = {"tally": Parts()}
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
         # reuse the batch-side operator against the pre-computed
@@ -489,19 +450,19 @@ def contamination_monitor_sink(
         delta = base.groupBy(group, sev.alias("severity")).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs")
         )
-        cur = state["tally"]
-        merged = (
+        cur = state["tally"].union()
+        state["tally"].replace(
             delta
             if cur is None
             else cur.unionByName(delta)
             .groupBy(group, "severity")
             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
         )
-        state["tally"] = merged.localCheckpoint(eager=True)
 
     def current() -> DataFrame | None:
-        return state["tally"]
+        return state["tally"].union()
 
+    handle.state = state  # type: ignore[attr-defined]
     return handle, current
 
 
@@ -527,10 +488,10 @@ def ann_maintenance_sink(
     centroid of the live generation.
 
     State: centroids are k x dim driver floats; the corpus relation is
-    localCheckpoint-pinned each batch (lineage one batch deep, the
-    rollup-sink discipline). Reassignment on retrain is one
-    Arrow-batched pass over the accumulated relation — the honest cost
-    of an IVF rebuild, paid only when drift actually fires.
+    held as pinned parts — each batch's assigned rows are one part. On
+    retrain the accumulated corpus and the batch are assigned in one
+    Arrow-batched pass that replaces every part — the honest cost of
+    an IVF rebuild, paid only when drift actually fires.
 
     Returns (handle, current, state) — state exposes the quantizer
     dict (generation, baseline_err, last err, retrain count) for
@@ -539,7 +500,7 @@ def ann_maintenance_sink(
 
     from mpes_spark.extras.similarity import ivf_assign, quantizer_refresh
 
-    state: dict = {"quant": None, "corpus": None, "retrains": 0}
+    state: dict = {"quant": None, "corpus": Parts(), "retrains": 0}
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
         rows = batch.select(id_col, vec)
@@ -556,35 +517,28 @@ def ann_maintenance_sink(
             vec=vec,
         )
         cent = state["quant"]["centroids"]
+        corpus = state["corpus"]
         if state["quant"]["retrained"]:
             state["retrains"] += 1
-            if state["corpus"] is not None:
-                # new generation: re-list the accumulated corpus once
-                state["corpus"] = (
-                    ivf_assign(state["corpus"].drop("list_id"), cent, vec=vec)
-                    .localCheckpoint(eager=True)
+        if state["quant"]["retrained"] and len(corpus):
+            # new generation: re-list the accumulated corpus once
+            corpus.replace(
+                ivf_assign(
+                    corpus.union().drop("list_id").unionByName(rows), cent, vec=vec
                 )
-        assigned = ivf_assign(rows, cent, vec=vec)
-        merged = (
-            assigned
-            if state["corpus"] is None
-            else state["corpus"].unionByName(assigned)
-        )
-        state["corpus"] = merged.localCheckpoint(eager=True)
+            )
+        else:
+            corpus.add(ivf_assign(rows, cent, vec=vec))
 
     def current() -> DataFrame | None:
-        return state["corpus"]
+        return state["corpus"].union()
 
+    handle.state = state  # type: ignore[attr-defined]
     return handle, current, state
 
 
 def dup_span_ingest_sink(
-    *,
-    text: str = "text",
-    n: int = 5,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    compact_every: int | None = None,
+    *, text: str = "text", n: int = 5, min_docs: int = 2, id_col: str = "doc_id"
 ):
     """``foreachBatch`` substring-level dedup on ingest — the
     streaming rendering of :func:`mpes_spark.extras.dedup.dup_spans`
@@ -600,42 +554,33 @@ def dup_span_ingest_sink(
     is per-gram distinct-doc counts — (sh, df_docs) delta parts merged
     by sum (docs arrive whole, so per-batch distinct (sh, doc)
     increments sum to exact global distinct-doc counts) — bounded by
-    distinct grams, never positions; ``compact_every=K`` bounds the
-    union depth like the novelty sink. Per batch: one delta-sized
+    distinct grams, never positions; compaction re-merges the gram
+    parts like the novelty sink. Per batch: one delta-sized
     positioned-gram relation, one equi-join against the cumulative
     dup-gram set, one island-merge window.
 
     Returns ``(handle, flagged)`` — ``flagged()`` is the accumulated
     (doc_id, span_start, span_end) audit over all ingested batches."""
-    from functools import reduce
-
     from pyspark.sql import functions as F
 
     from mpes_spark.extras.dedup import merge_spans, positioned_shingles
 
-    state: dict = {"gram_parts": [], "flag_parts": [], "batches": 0}
-
-    def _union(parts):
-        return reduce(lambda a, b: a.unionByName(b), parts)
-
     def _merge(rel: DataFrame) -> DataFrame:
         return rel.groupBy("sh").agg(F.sum("df_docs").alias("df_docs"))
 
+    state: dict = {"grams": Parts(_merge), "flags": Parts(), "batches": 0}
+
     def handle(batch: DataFrame, _batch_id: int) -> None:
-        pos = positioned_shingles(batch, text, n, id_col).localCheckpoint(
-            eager=True
-        )
-        inc = (
+        pos = pin(positioned_shingles(batch, text, n, id_col))
+        state["grams"].add(
             pos.select("sh", id_col)
             .distinct()
             .groupBy("sh")
             .agg(F.count(F.lit(1)).alias("df_docs"))
-            .localCheckpoint(eager=True)
         )
-        state["gram_parts"].append(inc)
         state["batches"] += 1
         dup = (
-            _merge(_union(state["gram_parts"]))
+            _merge(state["grams"].union())
             .filter(F.col("df_docs") >= min_docs)
             .select("sh")
         )
@@ -644,50 +589,39 @@ def dup_span_ingest_sink(
             F.col("pos").alias("s"),
             (F.col("pos") + F.lit(n - 1)).alias("e"),
         )
-        state["flag_parts"].append(
-            merge_spans(hits, id_col).localCheckpoint(eager=True)
-        )
-        if compact_every and state["batches"] % compact_every == 0:
-            state["gram_parts"] = [
-                _merge(_union(state["gram_parts"])).localCheckpoint(eager=True)
-            ]
+        state["flags"].add(merge_spans(hits, id_col))
+        release(pos)
 
     def flagged() -> DataFrame | None:
-        if not state["flag_parts"]:
-            return None
-        return _union(state["flag_parts"])
+        return state["flags"].union()
 
     def state_stats() -> dict:
-        """Measured state-bound telemetry (r9, VERDICT stretch #10 —
-        the foreachBatch analog of a state store's numRowsTotal):
-        ``gram_parts`` (union depth; == 1 right after a compaction
-        boundary), ``state_rows`` (total rows across parts) and
+        """Measured state-bound telemetry (the foreachBatch analog of
+        a state store's numRowsTotal): ``gram_parts`` and
+        ``flag_parts`` (union depths; == 1 right after a compaction),
+        ``state_rows`` (total rows across gram parts) and
         ``distinct_grams`` (the structural bound: state must stay
         keyed by gram, never by position — state_rows ==
         distinct_grams after compaction, and is bounded by
         batches x distinct_grams before)."""
-        parts = state["gram_parts"]
-        rows = sum(p.count() for p in parts)
-        distinct = (
-            _union(parts).select("sh").distinct().count() if parts else 0
-        )
+        grams = state["grams"].union()
         return {
-            "gram_parts": len(parts),
-            "state_rows": rows,
-            "distinct_grams": distinct,
+            "gram_parts": len(state["grams"]),
+            "flag_parts": len(state["flags"]),
+            "state_rows": grams.count() if grams is not None else 0,
+            "distinct_grams": (
+                grams.select("sh").distinct().count() if grams is not None else 0
+            ),
             "batches": state["batches"],
         }
 
+    handle.state = state  # type: ignore[attr-defined]
     handle.state_stats = state_stats  # type: ignore[attr-defined]
     return handle, flagged
 
 
 def sentence_span_ingest_sink(
-    *,
-    n_sent: int = 3,
-    text: str = "text",
-    id_col: str = "doc_id",
-    compact_every: int | None = None,
+    *, n_sent: int = 3, text: str = "text", id_col: str = "doc_id"
 ):
     """``foreachBatch`` C4 sentence-span dedup on ingest (r10, VERDICT
     r9 #10 stretch) — the streaming rendering of
@@ -701,30 +635,31 @@ def sentence_span_ingest_sink(
 
     Maintained state is the distinct span HASH set (xxhash64 — 8
     bytes per distinct span, never span text and never positions),
-    kept as delta parts merged by distinct; ``compact_every=K``
-    bounds the union depth like the gram sink. Per batch: one
-    sentence window (linear in sentences), one distinct-hash delta,
-    one equi-join against the standing set.
+    kept as delta parts merged by distinct on compaction. Per batch:
+    one sentence window (linear in sentences), one distinct-hash
+    delta, one equi-join against the standing set. The flag audit is
+    compacted on the same cadence, with NO distinct — ``flagged()`` is
+    an audit log, and a re-delivered (doc, idx) stays visible once per
+    delivery.
 
     Returns ``(handle, flagged)`` — ``flagged()`` is the accumulated
     (doc_id, span_idx) removal audit over all ingested batches;
     ``handle.state_stats()`` is the numeric state-bound telemetry."""
-    from functools import reduce
-
     from pyspark.sql import functions as F
 
     from mpes_spark.extras.dedup import sentence_spans
 
-    state: dict = {"span_parts": [], "flag_parts": [], "batches": 0}
-
-    def _union(parts):
-        return reduce(lambda a, b: a.unionByName(b), parts)
+    state: dict = {
+        "spans": Parts(DataFrame.distinct),
+        "flags": Parts(),
+        "batches": 0,
+    }
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
-        spans = (
-            sentence_spans(batch, n_sent, text, id_col)
-            .select(id_col, "span_idx", F.xxhash64("span").alias("sh"))
-            .localCheckpoint(eager=True)
+        spans = pin(
+            sentence_spans(batch, n_sent, text, id_col).select(
+                id_col, "span_idx", F.xxhash64("span").alias("sh")
+            )
         )
         freq = spans.groupBy("sh").agg(
             F.count(F.lit(1)).alias("df"),
@@ -741,57 +676,37 @@ def sentence_span_ingest_sink(
             )
             .select(id_col, "span_idx")
         )
-        if state["span_parts"]:
-            standing = _union(state["span_parts"]).distinct()
-            seen = spans.join(standing, "sh").select(id_col, "span_idx")
+        standing = state["spans"].union()
+        if standing is not None:
+            seen = spans.join(standing.distinct(), "sh").select(id_col, "span_idx")
             flags = batch_dups.unionByName(seen).distinct()
         else:
             flags = batch_dups
-        state["flag_parts"].append(flags.localCheckpoint(eager=True))
-        state["span_parts"].append(
-            spans.select("sh").distinct().localCheckpoint(eager=True)
-        )
+        state["flags"].add(flags)
+        state["spans"].add(spans.select("sh").distinct())
         state["batches"] += 1
-        if compact_every and state["batches"] % compact_every == 0:
-            state["span_parts"] = [
-                _union(state["span_parts"])
-                .distinct()
-                .localCheckpoint(eager=True)
-            ]
-            # flag audit gets the same generation compaction (r11,
-            # VERDICT r10 #9): one checkpointed union collapses the
-            # part list so its depth is bounded by compact_every over
-            # any soak length. NO distinct — flagged() is an audit
-            # log, and a re-delivered (doc, idx) must stay visible
-            # once per delivery.
-            if state["flag_parts"]:
-                state["flag_parts"] = [
-                    _union(state["flag_parts"]).localCheckpoint(eager=True)
-                ]
+        release(spans)
 
     def flagged() -> DataFrame | None:
-        if not state["flag_parts"]:
-            return None
-        return _union(state["flag_parts"])
+        return state["flags"].union()
 
     def state_stats() -> dict:
         """Numeric state-bound telemetry (the dup_span sink's
-        contract): union depth, total state rows, and the structural
+        contract): union depths, total state rows, and the structural
         bound — state stays keyed by distinct span hash, so rows ==
         distinct_spans after compaction and <= batches x
         distinct_spans before."""
-        parts = state["span_parts"]
-        rows = sum(p.count() for p in parts)
-        distinct = (
-            _union(parts).select("sh").distinct().count() if parts else 0
-        )
+        spans = state["spans"].union()
         return {
-            "span_parts": len(parts),
-            "flag_parts": len(state["flag_parts"]),
-            "state_rows": rows,
-            "distinct_spans": distinct,
+            "span_parts": len(state["spans"]),
+            "flag_parts": len(state["flags"]),
+            "state_rows": spans.count() if spans is not None else 0,
+            "distinct_spans": (
+                spans.select("sh").distinct().count() if spans is not None else 0
+            ),
             "batches": state["batches"],
         }
 
+    handle.state = state  # type: ignore[attr-defined]
     handle.state_stats = state_stats  # type: ignore[attr-defined]
     return handle, flagged

@@ -1,6 +1,8 @@
 """The pinning contract (mpes_spark/pinning.py): ``release`` frees
-what it is given, and no graph or dedup operator leaves a pinned
-relation behind that its returned plan does not read."""
+what it is given, no graph or dedup operator leaves a pinned relation
+behind that its returned plan does not read, and no streaming sink
+leaves one behind that its state or its returned relations do not
+read."""
 
 import random
 
@@ -41,8 +43,8 @@ def _leaf_rdds(df, cached: bool = False) -> set[int]:
     return ids
 
 
-def test_release_frees_persist_and_checkpoint(spark):
-    from mpes_spark.pinning import release
+def test_release_frees_persist_and_checkpoint(spark, tmp_path):
+    from mpes_spark.pinning import pin, release
 
     base = _pinned_rdds(spark)
     cached = spark.range(50).select((F.col("id") * 2).alias("x")).persist()
@@ -66,6 +68,21 @@ def test_release_frees_persist_and_checkpoint(spark):
     assert len(_pinned_rdds(spark) - base) == 1
     assert sorted(r.id for r in keep.collect()) == list(range(5))
     release(keep)
+    assert _pinned_rdds(spark) == base
+
+    # pin: a live checkpoint and a plain file scan come back as they
+    # are; a relation derived from either is checkpointed
+    live = pin(spark.range(5).select((F.col("id") * 3).alias("z")))
+    pinned = _pinned_rdds(spark)
+    assert len(pinned - base) == 1
+    assert pin(live) is live and _pinned_rdds(spark) == pinned
+    spark.range(4).write.parquet(str(tmp_path / "p"))
+    scan = spark.read.parquet(str(tmp_path / "p"))
+    assert pin(scan) is scan and _pinned_rdds(spark) == pinned
+    derived = pin(live.select((F.col("z") + 1).alias("w")))
+    assert _leaf_rdds(derived) == _pinned_rdds(spark) - pinned
+    assert sorted(r.w for r in derived.collect()) == [1, 4, 7, 10, 13]
+    release(live, derived)
     assert _pinned_rdds(spark) == base
 
 
@@ -148,3 +165,106 @@ def test_operators_leave_only_what_their_plan_reads(spark):
         if left:
             leaks[name] = len(left)
     assert leaks == {}
+
+
+def _sink_batches(spark, n_batches: int = 6):
+    """Per-batch inputs for the streaming sinks: documents of repeated
+    sentences (text, source), timestamped events, and embeddings whose
+    distribution shifts in the fourth batch."""
+    import numpy as np
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(300)]
+    sentences = [" ".join(rng.sample(vocab, 6)) + "." for _ in range(30)]
+    docs, events, vecs = [], [], []
+    nrng = np.random.default_rng(5)
+    for b in range(n_batches):
+        rows = []
+        for doc_id in range(b * 10, b * 10 + 10):
+            text = " ".join(rng.choice(sentences) for _ in range(5))
+            rows.append((doc_id, text, f"s{doc_id % 3}", len(text)))
+        docs.append(
+            spark.createDataFrame(
+                rows, "doc_id long, text string, source string, n_chars long"
+            )
+        )
+        events.append(
+            spark.createDataFrame(
+                [(b * 50 + i, (b * 50 + i) * 60_000_000_000, float(i % 17))
+                 for i in range(50)],
+                "event_id long, ts long, value double",
+            )
+        )
+        center = 5.0 if b >= 3 else 0.0
+        vecs.append(
+            spark.createDataFrame(
+                [(b * 40 + i, (center + nrng.normal(0, 0.05, 4)).tolist())
+                 for i in range(40)],
+                "vec_id long, embedding array<double>",
+            )
+        )
+    return docs, events, vecs
+
+
+def test_streaming_sinks_hold_only_their_state(spark, tmp_path, monkeypatch):
+    """After six batches with COMPACT_EVERY=2, every RDD or cache entry
+    a sink pinned after it was built must be a leaf of a relation the
+    sink holds (the ``Parts`` in ``handle.state``) or returns; every
+    part list stays within COMPACT_EVERY entries, and every returned
+    relation is still readable."""
+    import gc
+
+    from mpes_spark import pinning
+    from mpes_spark.streaming import stateful as S
+    from mpes_spark.streaming.live import neardup_ingest_sink
+
+    monkeypatch.setattr(pinning, "COMPACT_EVERY", 2)
+    docs, events, vecs = _sink_batches(spark)
+    bench = docs[0].filter(F.col("doc_id") % 4 == 0)
+    corpus = docs[0].filter(F.col("doc_id") % 2 == 0)
+    cases = {
+        "rollup": (
+            lambda: S.rollup_maintenance_sink(
+                measure="value", bucket_ns=3_600_000_000_000
+            ),
+            events,
+        ),
+        "funnel": (S.funnel_maintenance_sink, docs),
+        "novelty": (S.novelty_maintenance_sink, docs),
+        "contamination": (lambda: S.contamination_monitor_sink(bench), docs),
+        "ann": (
+            lambda: S.ann_maintenance_sink(
+                k=3, sample_rows=100, err_sample_rows=50, iters=3
+            ),
+            vecs,
+        ),
+        "dup_span": (S.dup_span_ingest_sink, docs),
+        "sentence_span": (S.sentence_span_ingest_sink, docs),
+        "neardup": (lambda: neardup_ingest_sink(corpus, threshold=0.5), docs),
+        "neardup[compact_path]": (
+            lambda: neardup_ingest_sink(
+                corpus, threshold=0.5, compact_path=str(tmp_path / "neardup")
+            ),
+            docs,
+        ),
+    }
+    leaks, unbounded = {}, {}
+    for name, (build, batches) in cases.items():
+        handle, *readers = build()
+        before = _pinned_rdds(spark)
+        for i, batch in enumerate(batches):
+            handle(batch, i)
+        parts = [p for p in handle.state.values() if isinstance(p, pinning.Parts)]
+        held = [p.union() for p in parts if len(p)]
+        returned = [r() for r in readers if callable(r)]
+        for df in returned:
+            assert df is not None and df.collect() is not None, name
+        gc.collect()
+        keep = set().union(*(_leaf_rdds(df) for df in held + returned))
+        left = _pinned_rdds(spark) - before - keep
+        if left:
+            leaks[name] = len(left)
+        if any(len(p) > pinning.COMPACT_EVERY for p in parts):
+            unbounded[name] = [len(p) for p in parts]
+    assert leaks == {}
+    assert unbounded == {}

@@ -583,7 +583,7 @@ def test_attribution_to_rollup_composition(spark, stream_dir):
     assert got.equals(want)
 
 
-def test_neardup_ingest_sink_vs_corpus(spark, tmp_path):
+def test_neardup_ingest_sink_vs_corpus(spark, tmp_path, monkeypatch):
     """LSH near-dup ingest dedup: streamed docs that are near-copies
     of corpus docs OR of previously-seen stream docs (earlier batch
     or lower id in the same batch) are dropped with an audit row;
@@ -591,6 +591,7 @@ def test_neardup_ingest_sink_vs_corpus(spark, tmp_path):
     are independent of micro-batch partitioning."""
     import time as _time
 
+    from mpes_spark import pinning
     from mpes_spark.streaming.live import neardup_ingest_sink
 
     base = " ".join(f"tok{i}" for i in range(30))
@@ -634,6 +635,7 @@ def test_neardup_ingest_sink_vs_corpus(spark, tmp_path):
         }
         return kept, audit, handle.state
 
+    monkeypatch.setattr(pinning, "COMPACT_EVERY", len(stream_rows) + 1)
     kept_many, audit_many, _ = run(max_files=1)  # one file per micro-batch
     kept_one, audit_one, _ = run(max_files=8)  # all files in one batch
     # 100/101/103 are near-dups of corpus doc 1 (101/103 also of the
@@ -656,17 +658,27 @@ def test_neardup_ingest_sink_vs_corpus(spark, tmp_path):
     # matches exist) must not change what is kept or flagged — and the
     # doc-105-vs-102 match crosses a compaction boundary
     cpath = str(tmp_path / "neardup_compact")
-    kept_c, audit_c, st = run(max_files=1, compact_every=2, compact_path=cpath)
+    monkeypatch.setattr(pinning, "COMPACT_EVERY", 2)
+    kept_c, audit_c, st = run(max_files=1, compact_path=cpath)
     assert kept_c == kept_many and audit_c == audit_many
-    assert st["compactions"] == 2 and st["generation"] == 2
     import os
 
-    assert os.path.isdir(os.path.join(cpath, "gen=2", "seen_sh"))
-    assert os.path.isdir(os.path.join(cpath, "gen=2", "seen_bk"))
+    # the corpus is written once; each relation has two generations,
+    # the second of which is now its only part
+    assert sorted(os.listdir(os.path.join(cpath, "corpus"))) == ["seen_bk", "seen_sh"]
+    assert not os.path.exists(os.path.join(cpath, "gen=3"))
+    for name in ("novel", "flagged", "seen_sh", "seen_bk"):
+        assert os.path.isdir(os.path.join(cpath, "gen=2", name))
+        assert len(st[name]) == 1
+    # a compaction copies only stream increments, never the corpus
+    gen_ids = spark.read.parquet(os.path.join(cpath, "gen=2", "seen_sh"))
+    assert {r["doc_id"] for r in gen_ids.select("doc_id").distinct().collect()} == {
+        100, 101, 102, 103, 105
+    }
     # in-memory compaction (no path) is equally invariant
-    kept_m, audit_m, st_m = run(max_files=1, compact_every=2)
+    kept_m, audit_m, st_m = run(max_files=1)
     assert kept_m == kept_many and audit_m == audit_many
-    assert st_m["compactions"] == 2
+    assert all(len(st_m[name]) == 1 for name in ("novel", "flagged", "seen_sh", "seen_bk"))
 
 
 def test_interval_attribution_left_outer_stream_matches_batch(spark, tmp_path):
@@ -927,12 +939,13 @@ def test_bucket_digest_sink_null_hash_bucket_no_false_divergence(
     assert digest_diff(maintained, batch).collect() == []
 
 
-def test_funnel_maintenance_sink_matches_batch(spark, tmp_path):
+def test_funnel_maintenance_sink_matches_batch(spark, tmp_path, monkeypatch):
     """Online curation funnel == batch curation_funnel on the union
     when arrival is id-ordered: file 2 re-delivers file 1's docs
     under higher ids (pure exact_dup rows) plus fresh docs; per-batch
     work never rescans history and the funnel is merged incrementally
     across a compaction boundary."""
+    from mpes_spark import pinning
     from mpes_spark.extras.curation import curation_funnel
     from mpes_spark.streaming.stateful import funnel_maintenance_sink
 
@@ -958,7 +971,8 @@ def test_funnel_maintenance_sink_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    handle, current = funnel_maintenance_sink(compact_every=1)
+    monkeypatch.setattr(pinning, "COMPACT_EVERY", 1)
+    handle, current = funnel_maintenance_sink()
     q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
     q.awaitTermination()
 
@@ -976,15 +990,17 @@ def test_funnel_maintenance_sink_matches_batch(spark, tmp_path):
     assert sum(v for (s, verd), v in got.items() if verd == "exact_dup") >= 20
 
 
-def test_novelty_maintenance_sink_order_independent(spark, tmp_path):
+def test_novelty_maintenance_sink_order_independent(spark, tmp_path, monkeypatch):
     """Incremental novelty state == batch ngram_novelty on the whole
     corpus, and — because the state merge is sum/min — the result is
     identical when the same corpus streams in the opposite order
     (an old doc's novelty correctly DEGRADES when a later batch
     re-uses its shingles, whichever side arrives first)."""
+    from mpes_spark import pinning
     from mpes_spark.extras.dedup import ngram_novelty
     from mpes_spark.streaming.stateful import novelty_maintenance_sink
 
+    monkeypatch.setattr(pinning, "COMPACT_EVERY", 2)
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(50)
     near = docs.limit(15).withColumn("doc_id", F.col("doc_id") + 50_000)
     schema = (
@@ -1007,7 +1023,7 @@ def test_novelty_maintenance_sink_order_independent(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        handle, current = novelty_maintenance_sink(n=3, compact_every=2)
+        handle, current = novelty_maintenance_sink(n=3)
         q = (
             stream.writeStream.foreachBatch(handle)
             .trigger(availableNow=True)
@@ -1075,13 +1091,14 @@ def test_contamination_monitor_sink_matches_batch(spark, tmp_path):
     assert sum(v for (s, sev), v in got.items() if sev == "heavy") >= 1
 
 
-def test_maintenance_sinks_bound_state_parts(spark, tmp_path):
+def test_maintenance_sinks_bound_state_parts(spark, tmp_path, monkeypatch):
     """The r7 maintenance sinks must keep their state-parts lists
     BOUNDED under compaction — the growth hazard class ADVICE r6
     flagged on neardup_ingest_sink, asserted here preemptively: after
-    N batches with compact_every=K, the funnel fp-parts and novelty
+    N batches with COMPACT_EVERY=K, the funnel fp-parts and novelty
     shingle-parts lists hold at most K entries, and results equal a
     no-compaction run exactly."""
+    from mpes_spark import pinning
     from mpes_spark.extras.dedup import ngram_novelty
     from mpes_spark.streaming.stateful import (
         funnel_maintenance_sink,
@@ -1116,18 +1133,18 @@ def test_maintenance_sinks_bound_state_parts(spark, tmp_path):
         return handle, current
 
     # funnel: compacted vs uncompacted parity + bounded parts
-    h_c, cur_c = run(lambda: funnel_maintenance_sink(compact_every=2))
-    h_u, cur_u = run(lambda: funnel_maintenance_sink(compact_every=None))
-    got_c = {(r["source"], r["verdict"]): r["n_docs"] for r in cur_c().collect()}
+    monkeypatch.setattr(pinning, "COMPACT_EVERY", 7)  # never, over 6 batches
+    h_u, cur_u = run(funnel_maintenance_sink)
     got_u = {(r["source"], r["verdict"]): r["n_docs"] for r in cur_u().collect()}
+    assert len(h_u.state["fp"]) > 2  # uncompacted, the list grows
+    monkeypatch.setattr(pinning, "COMPACT_EVERY", 2)
+    h_c, cur_c = run(funnel_maintenance_sink)
+    got_c = {(r["source"], r["verdict"]): r["n_docs"] for r in cur_c().collect()}
     assert got_c == got_u
-    state_c = h_c.__closure__
-    # parts bound: reach into the sink's state dict via the closure
-    sc = next(c.cell_contents for c in state_c if isinstance(c.cell_contents, dict) and "fp_parts" in c.cell_contents)
-    assert len(sc["fp_parts"]) <= 2, len(sc["fp_parts"])
+    assert len(h_c.state["fp"]) <= 2, len(h_c.state["fp"])
 
     # novelty: same, vs the batch operator
-    h_n, cur_n = run(lambda: novelty_maintenance_sink(n=3, compact_every=2))
+    h_n, cur_n = run(lambda: novelty_maintenance_sink(n=3))
     got_n = {
         r["doc_id"]: (r["n_shingles"], r["n_unique"], r["novelty"])
         for r in cur_n().collect()
@@ -1137,8 +1154,8 @@ def test_maintenance_sinks_bound_state_parts(spark, tmp_path):
         for r in ngram_novelty(spark.read.parquet(src), n=3).collect()
     }
     assert got_n == want
-    sn = next(c.cell_contents for c in h_n.__closure__ if isinstance(c.cell_contents, dict) and "sh_parts" in c.cell_contents)
-    assert len(sn["sh_parts"]) <= 2, len(sn["sh_parts"])
+    assert len(h_n.state["sh"]) <= 2, len(h_n.state["sh"])
+    assert len(h_n.state["sizes"]) <= 2, len(h_n.state["sizes"])
 
 
 def test_ann_maintenance_sink_refresh_and_consistency(spark, tmp_path):
@@ -1207,7 +1224,7 @@ def test_ann_maintenance_sink_refresh_and_consistency(spark, tmp_path):
     assert got["list_id"].tolist() == want["list_id"].tolist()
 
 
-def test_dup_span_ingest_sink_flags_later_copies(spark, tmp_path):
+def test_dup_span_ingest_sink_flags_later_copies(spark, tmp_path, monkeypatch):
     """Streaming substring dedup (r8): a passage planted in batch 1
     and re-ingested in batches 2/3 must flag the LATER copies with
     exactly the spans the batch operator assigns them (cross-batch
@@ -1216,6 +1233,7 @@ def test_dup_span_ingest_sink_flags_later_copies(spark, tmp_path):
     not change the audit."""
     import time as _time
 
+    from mpes_spark import pinning
     from mpes_spark.extras.dedup import dup_spans
     from mpes_spark.streaming.stateful import dup_span_ingest_sink
 
@@ -1240,7 +1258,8 @@ def test_dup_span_ingest_sink_flags_later_copies(spark, tmp_path):
         ).write.mode("append").parquet(src)
 
     def run(compact_every):
-        handle, flagged = dup_span_ingest_sink(n=5, compact_every=compact_every)
+        monkeypatch.setattr(pinning, "COMPACT_EVERY", compact_every)
+        handle, flagged = dup_span_ingest_sink(n=5)
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
@@ -1255,7 +1274,7 @@ def test_dup_span_ingest_sink_flags_later_copies(spark, tmp_path):
         assert q.exception() is None
         # MEASURED state-bound telemetry (r9 stretch #10): maintained
         # state is keyed by GRAM, never by position — numeric asserts,
-        # not prose. With compact_every=1 the parts collapse to one
+        # not prose. With COMPACT_EVERY=1 the parts collapse to one
         # relation of exactly the distinct grams; uncompacted, depth
         # equals the batch count and rows stay <= batches x grams.
         stats = handle.state_stats()
@@ -1278,7 +1297,7 @@ def test_dup_span_ingest_sink_flags_later_copies(spark, tmp_path):
             r.doc_id: (r.span_start, r.span_end) for r in flagged().collect()
         }
 
-    got = run(None)
+    got = run(len(batches) + 1)  # never compacts
     # later copies flagged with exactly the batch operator's spans
     all_docs = spark.createDataFrame(
         [r for b in batches for r in b], "doc_id long, text string"
@@ -1293,7 +1312,7 @@ def test_dup_span_ingest_sink_flags_later_copies(spark, tmp_path):
     assert run(1) == got
 
 
-def test_sentence_span_ingest_sink_cross_batch_parity(spark, tmp_path):
+def test_sentence_span_ingest_sink_cross_batch_parity(spark, tmp_path, monkeypatch):
     """Streaming C4 sentence-span dedup (r10): a 3-sentence passage
     planted in batch 1 and re-ingested later must flag the LATER
     copies at exactly the spans the batch operator would remove
@@ -1303,6 +1322,7 @@ def test_sentence_span_ingest_sink_cross_batch_parity(spark, tmp_path):
     audit."""
     import time as _time
 
+    from mpes_spark import pinning
     from mpes_spark.extras.dedup import sentence_span_dedup
     from mpes_spark.streaming.stateful import sentence_span_ingest_sink
 
@@ -1322,9 +1342,8 @@ def test_sentence_span_ingest_sink_cross_batch_parity(spark, tmp_path):
         ).write.mode("append").parquet(src)
 
     def run(compact_every):
-        handle, flagged = sentence_span_ingest_sink(
-            compact_every=compact_every
-        )
+        monkeypatch.setattr(pinning, "COMPACT_EVERY", compact_every)
+        handle, flagged = sentence_span_ingest_sink()
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
@@ -1351,7 +1370,7 @@ def test_sentence_span_ingest_sink_cross_batch_parity(spark, tmp_path):
             )
         return {(r.doc_id, r.span_idx) for r in flagged().collect()}
 
-    got = run(None)
+    got = run(len(batches) + 1)  # never compacts
     assert run(1) == got  # compaction changes nothing
 
     # batch-operator parity: per-doc flagged counts == n_remove of
@@ -1372,13 +1391,13 @@ def test_sentence_span_ingest_sink_cross_batch_parity(spark, tmp_path):
     assert 1 not in got_per_doc  # first copy never retro-flagged
 
 
-def test_sentence_span_sink_flag_compaction_soak(spark):
-    """r11 (VERDICT r10 #9): the flag audit gets the same generation
-    compaction as the span state — under a 50-batch soak with
-    compact_every=10, BOTH part lists stay depth-bounded (pre-r11 the
-    flag_parts list grew one entry per batch, unbounded), and the
-    compacted audit is row-identical to the uncompacted one."""
-    from mpes_spark.streaming.stateful import sentence_span_ingest_sink
+def _flag_compaction_soak(spark, monkeypatch, sink, parts_key, distinct_key):
+    """Drive ``sink`` through a 50-batch soak twice — with
+    COMPACT_EVERY=10 and with no compaction — and check that BOTH part
+    lists of the compacted run stay depth-bounded (without compaction
+    the flag_parts list grows one entry per batch, unbounded) and that
+    the compacted audit is row-identical to the uncompacted one."""
+    from mpes_spark import pinning
 
     def batch_df(i):
         # every 7th batch replants batch 0's passage -> cross-batch flags
@@ -1392,19 +1411,39 @@ def test_sentence_span_sink_flag_compaction_soak(spark):
             "doc_id long, text string",
         )
 
-    handle_c, flagged_c = sentence_span_ingest_sink(compact_every=10)
-    handle_u, flagged_u = sentence_span_ingest_sink(compact_every=None)
     n = 50
-    for i in range(n):
-        df = batch_df(i)
-        handle_c(df, i)
-        handle_u(df, i)
 
-    sc, su = handle_c.state_stats(), handle_u.state_stats()
-    assert su["flag_parts"] > 10  # the pre-r11 failure mode, visible
-    assert sc["span_parts"] <= 10 and sc["flag_parts"] <= 10
+    def soak(compact_every):
+        monkeypatch.setattr(pinning, "COMPACT_EVERY", compact_every)
+        handle, flagged = sink()
+        for i in range(n):
+            handle(batch_df(i), i)
+        return handle.state_stats(), sorted(tuple(r) for r in flagged().collect())
+
+    sc, got_c = soak(10)
+    su, got_u = soak(n + 1)  # never compacts
+    assert su["flag_parts"] > 10  # the unbounded failure mode, visible
+    assert sc[parts_key] <= 10 and sc["flag_parts"] <= 10
     assert sc["batches"] == su["batches"] == n
-    assert sc["distinct_spans"] == su["distinct_spans"]
-    got_c = sorted((r.doc_id, r.span_idx) for r in flagged_c().collect())
-    got_u = sorted((r.doc_id, r.span_idx) for r in flagged_u().collect())
+    assert sc[distinct_key] == su[distinct_key]
     assert got_c == got_u and got_c  # compaction is audit-invisible
+
+
+def test_sentence_span_sink_flag_compaction_soak(spark, monkeypatch):
+    """r11 (VERDICT r10 #9): the sentence sink's flag audit gets the
+    same generation compaction as its span state."""
+    from mpes_spark.streaming.stateful import sentence_span_ingest_sink
+
+    _flag_compaction_soak(
+        spark, monkeypatch, sentence_span_ingest_sink, "span_parts", "distinct_spans"
+    )
+
+
+def test_dup_span_sink_flag_compaction_soak(spark, monkeypatch):
+    """The substring sink's flag audit is compacted like its gram
+    state, on the same soak."""
+    from mpes_spark.streaming.stateful import dup_span_ingest_sink
+
+    _flag_compaction_soak(
+        spark, monkeypatch, dup_span_ingest_sink, "gram_parts", "distinct_grams"
+    )

@@ -10,210 +10,101 @@ Protocol (driver contract):
     stdout last line: {"metric": ..., "value": total_sec, "unit": "sec",
                        "queries": {name: sec, ...}, "sf": N}
 
-Self-adjudication (VERDICT r4 #1) — the protocol carries its own error
-bars so ambient shared-VM drift (measured ±18-20% whole-suite,
-SCALING.md) can't masquerade as a code regression:
+Each rep:
 
-- **Rep interleaving**: each rep runs the suite in a different
-  (deterministic, rep-seeded) order, so a query's samples come from
-  different suite positions and neighbor-GC/JIT ambience decorrelates
-  across reps instead of biasing every sample the same way.
-- **Bands**: per-query [min, median, max] over reps is recorded in the
-  sidecar (`bands`); the median remains the headline number.
-- **Calibration probes**: four fixed queries with code that never
-  changes (parquet scan+agg, shuffle agg, pure-JVM expression chain,
-  and an Arrow pandas_udf round-trip) run every rep. Their timings are
-  a pure machine-speed signal, split into two drift classes (r11):
-  JVM-bound queries rescale by the scan/shuffle/cpu trio's ratio,
-  Python-worker-bound queries (plans containing ArrowEvalPython /
-  MapInPandas / ... — auto-detected per query, recorded in the
-  sidecar's `classes`) rescale by the Arrow probe's ratio. Both
-  ratios clamp to [0.5, 2.0].
-- **Regression rule**: a query is flagged only when its new median
-  exceeds 1.2x the previous run's MAX band (or 1.5x the previous
-  median when the previous round recorded no bands), after probe-drift
-  rescaling. Flagged entries carry [prev_high, new_median, ratio] so a
-  reviewer can adjudicate without re-deriving the rule.
+1. builds a fresh SparkSession (cold catalog/file-index/plan caches;
+   the JVM itself is reused in-process — the one warmth the protocol
+   cannot shed without a subprocess per rep);
+2. runs, untimed, one small parquet scan and one Arrow ``pandas_udf``
+   round-trip, so one-time session costs and the Python worker pool's
+   spawn land outside every query's timing;
+3. runs every query in a rep-seeded order (interleaving: a query's
+   samples come from different suite positions, so neighbour GC/JIT
+   ambience does not bias every sample the same way). Before each
+   query, outside the timed region, it releases every cached or
+   pinned RDD left by the previous query (queries that return lazy
+   plans cannot release what those plans read) and runs a JVM GC, so
+   each query is timed against clean storage and no GC debt. Each
+   query is materialized with ``collect()`` — results are small
+   aggregates, so the timing captures the full scan -> transform ->
+   shuffle -> aggregate pipeline.
+
+The headline is the sum of per-query medians; the sidecar also holds
+each query's ``[min, median, max]`` band over reps, the failures, and
+``prev_total``/``delta_total`` against the committed
+``bench_results.json`` at the same scale factor. Wall time is
+reported, not gated: a regression is caught by the job and exchange
+budgets in ``tests/test_plans.py``, which do not move with the box's
+ambient load.
 
 The driver records only the LAST ~2000 chars of stdout and parses the
-last line (round 3 lost its timings to tail truncation), so the
-COMPLETE document (4-decimal medians, bands, probes, deltas,
-regressions, failures) goes to a JSON sidecar and the final stdout
-line stays under a 1700-char budget: header + drift + CAPPED
-failure/regression digests (r12 — round 10's line became unparseable
-because an uncapped `regressions` dict pushed the line past the
-driver's 2000-char tail), then the slowest queries until the budget
-is spent, with `queries_omitted` counting the tail.
+last line, so the complete document goes to a JSON sidecar and the
+final stdout line stays under a 1700-char budget: header plus a
+capped failure digest, then the slowest queries until the budget is
+spent, with ``queries_omitted`` counting the rest.
 
-Sidecar protocol (r12, VERDICT r11 #1/#2): the committed
-`bench_results.json` is the round's ADJUDICATED baseline and is never
-clobbered by a casual run — when that file is git-clean, results go
-to `bench_results.latest.json` instead (promote explicitly with `cp`
-+ commit after adjudicating any drift flags). `$SPARK_GRAFT_BENCH_OUT`
-overrides the output path outright. Regression comparisons always
-read the committed `bench_results.json`.
-
-Probe warm pass (r11, declared per VERDICT r11 #8): each calibration
-probe runs once untimed before its timed rep. The Arrow probe's warm
-pass therefore spawns the Python worker pool BEFORE the query loop,
-so the first Arrow query of a rep no longer pays worker spawn
-(~2-3 s/rep vs the r10 protocol); recorded in the sidecar as
-`worker_pool_prewarmed: true`.
-
-Each rep tears the SparkSession down and builds a new one (cold
-catalog/file-index/plan caches; the JVM itself is reused in-process —
-the one warmth the protocol cannot shed without a subprocess per rep).
-Each query is materialized with ``collect()`` — results are small
-aggregates (bounded by grid/group cardinality, never event rows), so
-collect cost is negligible and the timing captures the full scan ->
-transform -> shuffle -> aggregate pipeline.
+Sidecar path: the committed ``bench_results.json`` is the baseline
+and is never clobbered by a casual run — when that file is git-clean,
+results go to ``bench_results.latest.json`` instead (promote with
+``cp`` + commit). ``$SPARK_GRAFT_BENCH_OUT`` overrides the output
+path outright.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import random
-import re
 import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-PROBE_DRIFT_CLAMP = (0.5, 2.0)
-BAND_REGRESSION_FACTOR = 1.2  # vs previous max band
-MEDIAN_REGRESSION_FACTOR = 1.5  # fallback vs previous median (no bands)
 
-
-def _probes(sf_dir: str):
-    """Three fixed calibration queries — frozen code, so their timing
-    moves only when the MACHINE does. Kept trivial (<~0.5 s each) and
-    spanning the three cost regimes the suite exercises: parquet
-    scan+aggregate (IO), hash-shuffle aggregate (exchange), and a pure
-    JVM expression chain (CPU/codegen)."""
+def _warm_session(spark, sf_dir: str) -> None:
+    """Pay one-time session costs (JVM threads, parquet footer reads)
+    and spawn the Python worker pool, outside the timed region."""
     from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
 
-    def probe_scan(spark):
-        return (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .agg(F.count(F.lit(1)), F.sum("value"))
-        )
+    @pandas_udf("double")
+    def _fma(a, b):
+        return a * b + a
 
-    def probe_shuffle(spark):
-        return (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .groupBy(F.pmod(F.xxhash64("user_id"), F.lit(64)).alias("b"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
+    spark.read.parquet(f"{sf_dir}/events.parquet").limit(1000).groupBy().count().collect()
+    ids = F.col("id").cast("double")
+    spark.range(1_000_000).select(
+        F.sum(_fma(ids, (F.col("id") % F.lit(7)).cast("double")))
+    ).collect()
 
-    def probe_cpu(spark):
-        return (
-            spark.range(2_000_000)
-            .select(
-                F.sum(
-                    F.sqrt(F.col("id").cast("double") + 1.0)
-                    + F.sin(F.col("id").cast("double") * 1e-4)
-                ).alias("s")
-            )
-        )
 
-    def probe_arrow(spark):
-        # Fixed Arrow pandas_udf round-trip (r11, VERDICT r10 #4): the
-        # scan/shuffle/cpu trio tracks only the JVM, but the component
-        # that actually drifted in r10 was the Python worker pool
-        # (probes read 0.71x while Arrow-tagged queries ran ~3x). This
-        # probe times worker spawn + Arrow batch transfer both ways +
-        # a pandas kernel, so Arrow-tagged queries get rescaled by the
-        # machine signal of THEIR cost regime.
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("double")
-        def _fma(a, b):
-            return a * b + a
-
-        return spark.range(1_000_000).select(
-            F.sum(
-                _fma(
-                    F.col("id").cast("double"),
-                    (F.col("id") % F.lit(7)).cast("double"),
-                )
-            ).alias("s")
-        )
-
+def _prev_total(sf: float, medians: dict[str, float]) -> dict[str, float]:
+    """``prev_total``/``delta_total`` over the queries this run shares
+    with the committed ``bench_results.json`` at the same scale
+    factor; empty when there is none."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    try:
+        with open(os.path.join(here, "bench_results.json")) as fh:
+            detail = json.load(fh)
+    except (OSError, ValueError):
+        return {}
+    if float(detail.get("sf", -1)) != sf:
+        return {}
+    prev = {k: float(v) for k, v in detail.get("queries", {}).items()}
+    common = [n for n in medians if n in prev]
+    if not common:
+        return {}
+    prev_total = round(sum(prev[n] for n in common), 4)
     return {
-        "probe_scan": probe_scan,
-        "probe_shuffle": probe_shuffle,
-        "probe_cpu": probe_cpu,
-        "probe_arrow": probe_arrow,
+        "prev_total": prev_total,
+        "delta_total": round(sum(medians[n] for n in common) - prev_total, 4),
     }
 
 
-# Physical-plan node names that mark a query as Python-worker-bound
-# ("arrow" drift class); everything else is "jvm".
-_ARROW_PLAN_RE = re.compile(
-    r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|MapGroupsInPandas"
-    r"|AggregateInPandas|WindowInPandas|FlatMapCoGroupsInPandas|PythonMapInArrow"
-)
-_JVM_PROBES = ("probe_scan", "probe_shuffle", "probe_cpu")
-
-
-def _prev_round_results(sf: float) -> tuple[str | None, dict[str, float], dict[str, list], dict[str, float]]:
-    """Latest recorded results at the same scale factor ->
-    (source_file, per-query medians, per-query bands, probe dict).
-    Prefers the committed sidecar (full map + bands + probes); falls
-    back to the newest BENCH_r*.json parsed line when it carries the
-    full query map. Bands accept both the r4 2-element spread and the
-    r5+ 3-element [min, median, max]."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    side = os.path.join(here, "bench_results.json")
-    try:
-        with open(side) as fh:
-            detail = json.load(fh)
-        if float(detail.get("sf", -1)) == sf:
-            bands = detail.get("bands") or detail.get("spread") or {}
-            probe = detail.get("probe")
-            probe = dict(probe) if isinstance(probe, dict) else {}
-            return (
-                "bench_results.json",
-                {k: float(v) for k, v in detail.get("queries", {}).items()},
-                bands,
-                probe,
-            )
-    except Exception:  # noqa: BLE001 - deltas are best-effort decoration
-        pass
-    best: tuple[int, str] | None = None
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            r = int(m.group(1))
-            if best is None or r > best[0]:
-                best = (r, p)
-    if best is None:
-        return None, {}, {}, None
-    try:
-        with open(best[1]) as fh:
-            doc = json.load(fh)
-        parsed = doc.get("parsed", doc) or {}
-        if float(parsed.get("sf", -1)) == sf and not parsed.get("queries_omitted"):
-            return (
-                os.path.basename(best[1]),
-                {k: float(v) for k, v in parsed.get("queries", {}).items()},
-                {},
-                {},
-            )
-    except Exception:  # noqa: BLE001
-        pass
-    return os.path.basename(best[1]), {}, {}, {}
-
-
-def _run_suite(
-    sf_dir: str, cpus: str, rep: int
-) -> tuple[dict[str, float], dict[str, float], dict[str, str]]:
-    """One cold rep: fresh session, warm-up scan, probes, then every
-    query in a rep-seeded order (interleaving: each rep samples each
-    query at a different suite position)."""
+def _run_suite(sf_dir: str, cpus: str, rep: int) -> tuple[dict[str, float], dict[str, str]]:
+    """One cold rep: fresh session, untimed warm-up, then every query
+    in a rep-seeded order."""
     from mpes_spark.session import get_spark
 
     spark = get_spark(
@@ -221,23 +112,7 @@ def _run_suite(
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
     )
-    # Pay one-time session costs (JVM threads, parquet footer reads)
-    # outside the timed region.
-    spark.read.parquet(f"{sf_dir}/events.parquet").limit(1000).groupBy().count().collect()
-
-    probe_times: dict[str, float] = {}
-    for name, fn in _probes(sf_dir).items():
-        # Warm pass first (r11): the FIRST execution of a code path in
-        # a fresh JVM costs 3-4x its warm cost (JIT + Python worker
-        # pool spawn for the Arrow probe — measured in-session
-        # 2.89 -> 0.93 -> 0.73 s JVM trio, 3.39 -> 0.97 -> 0.52 s
-        # Arrow; SCALING.md r11). A single-shot cold probe measures
-        # warmup, not machine speed, and saturates the drift clamp.
-        fn(spark).collect()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        fn(spark).collect()
-        probe_times[name] = time.perf_counter() - t0
+    _warm_session(spark, sf_dir)
 
     from __spark_entry__ import queries
 
@@ -246,58 +121,32 @@ def _run_suite(
     random.Random(rep).shuffle(order)
 
     timings: dict[str, float] = {}
-    classes: dict[str, str] = {}
     failures: dict[str, str] = {}
     for name in order:
-        # Settle the PREVIOUS query's residue OUTSIDE the timed
-        # region, in two steps (r9):
-        # 1. Release leaked storage: queries that persist() or
-        #    localCheckpoint() intermediates cannot unpersist them
-        #    (they return lazy DataFrames), so across a 240-query rep
-        #    the block manager fills with dead blocks and mid-suite
-        #    queries pay eviction churn their exclusive runs never
-        #    see — measured: ngram_novelty 1.67 s in-suite vs 0.93 s
-        #    exclusive, reproduced across the r8 driver run and both
-        #    r9 builder runs, gone once storage is cleared. Each
-        #    query is timed against clean storage, so in-suite
-        #    medians now agree with the exclusive adjudication
-        #    playbook instead of flagging suite-position noise.
-        # 2. Settle GC debt: the allocation burst of a shuffle-heavy
-        #    neighbor otherwise lands a multi-second major-GC stall
-        #    on whichever query runs next (measured +8-13 s, r6).
+        # Release the previous query's storage and settle its GC debt
+        # (a shuffle-heavy neighbour otherwise lands a multi-second
+        # major-GC stall on the next query) outside the timed region.
         spark.catalog.clearCache()
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist(False)
         spark.sparkContext._jvm.System.gc()
         t0 = time.perf_counter()
         try:
-            df = q[name](spark, sf_dir)
-            df.collect()
+            q[name](spark, sf_dir).collect()
             timings[name] = time.perf_counter() - t0
         except Exception as exc:  # noqa: BLE001 - report, don't abort the run
             failures[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"# FAIL {name}: {failures[name]}", file=sys.stderr)
-        else:
-            # Drift class, read OUTSIDE the timed region from the
-            # already-planned query: Python-worker-bound plans rescale
-            # by the Arrow probe, everything else by the JVM trio.
-            try:
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                classes[name] = "arrow" if _ARROW_PLAN_RE.search(plan) else "jvm"
-            except Exception:  # noqa: BLE001 - class is decoration
-                classes[name] = "jvm"
     spark.stop()
-    return timings, probe_times, failures, classes
+    return timings, failures
 
 
 def _sidecar_path(here: str) -> str:
-    """Where this run's full results go (r12, VERDICT r11 #2): the
-    committed `bench_results.json` is the round's adjudicated baseline;
-    a run must not silently replace it. If that file is git-clean
-    (committed and unmodified), results go to
-    `bench_results.latest.json`; promotion to baseline is an explicit
-    `cp` + commit. `$SPARK_GRAFT_BENCH_OUT` overrides (path relative to
-    the repo root, or absolute)."""
+    """Where this run's full results go: ``$SPARK_GRAFT_BENCH_OUT``
+    (relative to the repo root, or absolute) if set; else
+    ``bench_results.latest.json`` when the committed
+    ``bench_results.json`` is git-clean; else ``bench_results.json``
+    (absent, already a scratch copy, or no git)."""
     env = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if env:
         return env
@@ -315,7 +164,7 @@ def _sidecar_path(here: str) -> str:
             timeout=10,
         ).stdout.strip()
         if dirty:
-            return "bench_results.json"  # already a scratch copy
+            return "bench_results.json"
         return "bench_results.latest.json"
     except Exception:  # noqa: BLE001 - no git? keep legacy behavior
         return "bench_results.json"
@@ -331,19 +180,11 @@ def main() -> None:
         sf = -1.0
 
     per_rep: list[dict[str, float]] = []
-    probe_reps: list[dict[str, float]] = []
     failures: dict[str, str] = {}
-    classes: dict[str, str] = {}
     for r in range(reps):
-        t, p, f, c = _run_suite(sf_dir, cpus, r)
+        t, f = _run_suite(sf_dir, cpus, r)
         per_rep.append(t)
-        probe_reps.append(p)
         failures.update(f)
-        # "arrow" wins across reps: a plan that ever touched the
-        # Python workers belongs to the arrow drift class.
-        for n, cls in c.items():
-            if classes.get(n) != "arrow":
-                classes[n] = cls
         print(f"# rep {r + 1}/{reps}: {sum(t.values()):.1f}s", file=sys.stderr)
 
     names = [n for n in per_rep[0] if all(n in t for t in per_rep)]
@@ -358,17 +199,6 @@ def main() -> None:
         ]
         for n in names
     }
-    # min over reps, not median (r11): probes estimate machine
-    # CAPABILITY for drift rescaling, and shared-VM contention noise
-    # is one-sided (samples only ever sit ABOVE the capability floor —
-    # quiet-box minima reproduce historical bands while medians swing
-    # 1.5-2.5x; SCALING.md r11). The min is the stable capability
-    # statistic; query timings keep medians because the workload's
-    # realistic cost includes the noise.
-    probe = {
-        n: round(min(p[n] for p in probe_reps), 4)
-        for n in probe_reps[0]
-    }
 
     out: dict = {
         "metric": "query_suite_total",
@@ -379,57 +209,9 @@ def main() -> None:
         "reps": reps,
         "cpus": cpus,
         "bands": bands,
-        "probe": probe,
-        "classes": classes,
         "worker_pool_prewarmed": True,
+        **_prev_total(sf, medians),
     }
-
-    prev_file, prev, prev_bands, prev_probe = _prev_round_results(sf)
-    if prev:
-        common = [n for n in medians if n in prev]
-        out["prev_round"] = prev_file
-        out["prev_total"] = round(sum(prev[n] for n in common), 4)
-        out["delta_total"] = round(
-            sum(medians[n] for n in common) - out["prev_total"], 4
-        )
-        # Per-class drift (r11): JVM queries rescale by the frozen
-        # scan/shuffle/cpu trio, Arrow queries by the pandas_udf
-        # round-trip probe — the r10 incident was exactly these two
-        # classes drifting in opposite directions (JVM probes 0.71x
-        # while Python-worker queries ran ~3x).
-        drift_jvm = drift_arrow = 1.0
-        jvm_common = [k for k in _JVM_PROBES if k in prev_probe and k in probe]
-        if jvm_common:
-            raw = sum(probe[k] for k in jvm_common) / sum(
-                prev_probe[k] for k in jvm_common
-            )
-            drift_jvm = min(max(raw, PROBE_DRIFT_CLAMP[0]), PROBE_DRIFT_CLAMP[1])
-            out["probe_drift"] = round(drift_jvm, 3)
-        if prev_probe.get("probe_arrow") and probe.get("probe_arrow"):
-            raw = probe["probe_arrow"] / prev_probe["probe_arrow"]
-            drift_arrow = min(max(raw, PROBE_DRIFT_CLAMP[0]), PROBE_DRIFT_CLAMP[1])
-            out["probe_drift_arrow"] = round(drift_arrow, 3)
-        else:
-            drift_arrow = drift_jvm  # no arrow baseline yet
-        regressions: dict[str, list] = {}
-        for n in common:
-            if prev[n] <= 0.05:
-                continue
-            drift = drift_arrow if classes.get(n) == "arrow" else drift_jvm
-            pb = prev_bands.get(n)
-            if pb and len(pb) >= 2:
-                prev_high = float(pb[-1])  # max of the recorded band
-                limit = BAND_REGRESSION_FACTOR * drift * prev_high
-            else:
-                prev_high = prev[n]
-                limit = MEDIAN_REGRESSION_FACTOR * drift * prev_high
-            if medians[n] > limit:
-                regressions[n] = [
-                    round(prev_high, 4),
-                    medians[n],
-                    round(medians[n] / prev_high, 2),
-                ]
-        out["regressions"] = regressions
     if failures:
         out["failures"] = failures
 
@@ -439,27 +221,20 @@ def main() -> None:
         json.dump(out, fh, indent=1, sort_keys=False)
     print(f"# full results: {side_name}", file=sys.stderr)
 
-    # Compact final stdout line, sized for the driver's 2000-char tail.
-    # Every potentially-unbounded dict is CAPPED (r12): round 10's line
-    # exceeded the tail because `regressions` was included whole, and
-    # the r11 8-core run lost all query entries the same way. The line
-    # carries counts + the worst few entries; the sidecar has the rest.
+    # Compact final stdout line, sized for the driver's 2000-char tail:
+    # the failure digest is capped, then the slowest queries fill the
+    # budget; the sidecar has the rest.
     line: dict = {k: out[k] for k in ("metric", "value", "unit", "sf", "reps")}
     line["n_queries"] = len(medians)
     line["detail"] = side_name
-    for k in ("probe_drift", "prev_total", "delta_total"):
-        if k in out and out[k] is not None:
+    for k in ("prev_total", "delta_total"):
+        if k in out:
             line[k] = out[k]
     if failures:
         line["n_failures"] = len(failures)
         line["failures"] = {
             n: failures[n][:80] for n in sorted(failures)[:3]
         }
-    regressions = out.get("regressions") or {}
-    if regressions:
-        line["n_regressions"] = len(regressions)
-        worst = sorted(regressions, key=lambda n: -regressions[n][2])[:5]
-        line["regressions"] = {n: regressions[n] for n in worst}
     budget = 1700
     slowest = sorted(medians, key=medians.get, reverse=True)
     compact: dict[str, float] = {}

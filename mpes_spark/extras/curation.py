@@ -1892,19 +1892,6 @@ _LR_RATE = 4.0
 _LR_MARKER = "dup"
 
 
-def _pr6_sql(expr: str) -> str:
-    """Portable 6dp floor-round — identical on both engines for
-    identical input doubles (the shirley r9 lesson: quantize EVERY
-    stage of an iterative recurrence, not just the output)."""
-    return f"floor(({expr}) * 1e6 + 0.5) / 1e6"
-
-
-def _pr6_py(x: float) -> float:
-    import math
-
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
 def _lr_label_sql(dialect: str) -> str:
     """Planted weak-supervision label: does the doc mention the marker
     token. Linearly realizable in the hashed-presence feature space

@@ -90,13 +90,6 @@ def punct_ratio_expr(text: str | Column = "text") -> Column:
     return F.round(n_p / F.greatest(F.length(c), F.lit(1)), 6)
 
 
-def punct_ratio_sql(text: str = "text") -> str:
-    return (
-        f"round(len(regexp_extract_all({text}, '[^A-Za-z0-9\\s]')) / "
-        f"greatest(length({text}), 1), 6)"
-    )
-
-
 def lang_score_expr(lang: str, text: str | Column = "text") -> Column:
     """Marker-word hit count for one language (integer — exact, no
     float-compare hazards in the downstream argmax)."""
@@ -229,23 +222,6 @@ def mean_word_length_sql(text: str = "text") -> str:
     return (
         f"round(length(regexp_replace({text}, '\\s', '', 'g')) / "
         f"greatest({token_count_sql(text)}, 1), 6)"
-    )
-
-
-def alpha_word_ratio_expr(text: str | Column = "text") -> Column:
-    """Fraction of tokens containing >= 1 alphabetic character
-    (Gopher's 80%-alphabetic rule)."""
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(c, " ")
-    n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[A-Za-z]")))
-    return F.round(n_alpha / F.greatest(F.size(toks), F.lit(1)), 6)
-
-
-def alpha_word_ratio_sql(text: str = "text") -> str:
-    return (
-        f"round(len(list_filter(string_split({text}, ' '), "
-        "t -> regexp_matches(t, '[A-Za-z]'))) / "
-        f"greatest(len(string_split({text}, ' ')), 1), 6)"
     )
 
 

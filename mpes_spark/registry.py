@@ -4450,14 +4450,6 @@ def entity_match_blocked(spark, sf_dir):
 # public accessors
 # ===========================================================================
 
-def _last_gated_round() -> dict[str, int]:
-    """Per-query round number of the most recent driver gate row,
-    parsed from the committed ``CORRECTNESS_r*.json`` artifacts at the
-    repo root. Best-effort: returns {} on a tree without driver
-    artifacts, which degrades the rotation to stable registry order."""
-    return _gate_history()[0]
-
-
 def _gate_history() -> tuple[dict[str, int], set[str]]:
     """(last-gated round per query, names whose MOST RECENT gate row
     was hash-red). The red set drives the re-gate-immediately rule in

@@ -28,6 +28,31 @@ def _env_extra_conf(raw: str) -> dict[str, str]:
     return out
 
 
+#: cgroup v2 memory limit of this process's group ("max" when unset)
+_CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def _usable_memory() -> int:
+    """Bytes this process can use: physical memory, capped by the
+    cgroup v2 ``memory.max`` when one is set."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    try:
+        with open(_CGROUP_MEMORY_MAX) as fh:
+            limit = fh.read().strip()
+    except OSError:
+        return phys
+    return min(phys, int(limit)) if limit.isdigit() else phys
+
+
+def _default_driver_mem() -> str:
+    """Driver heap: half the usable memory (the rest is for Python
+    workers, off-heap buffers and the page cache), at least 1g and at
+    most 48g. In local mode the driver JVM is the executor too, so a
+    heap sized past the host lets it grow until the kernel kills it."""
+    mb = _usable_memory() // 2 // 2**20
+    return f"{min(max(mb, 1024), 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "mpes_spark",
     master: str | None = None,
@@ -101,7 +126,10 @@ def get_spark(
         # read TIMESTAMP(NANOS) parquet (the events stream table) as
         # epoch-nanos longs instead of failing (Spark 4 default)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("MPES_SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("MPES_SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -477,17 +477,22 @@ def neardup_ingest_sink(
         verified = verify_jaccard_cross(
             cand_seen, sh, seen_sh, threshold, id_col
         ).unionByName(verify_jaccard_cross(cand_within, sh, sh, threshold, id_col))
-        dup_ids = verified.select(F.col("id_a").alias(id_col)).distinct()
-        novel = batch.join(dup_ids, id_col, "left_anti")
-        flagged = verified.select(
-            F.col("id_a").alias("stream_id"),
-            F.col("id_b").alias("matched_id"),
-            "jaccard",
+        # the verify joins run once: flagged is pinned, and novel is
+        # the batch minus the ids that pinned part flags
+        flagged = pin(
+            verified.select(
+                F.col("id_a").alias("stream_id"),
+                F.col("id_b").alias("matched_id"),
+                "jaccard",
+            )
         )
-        # novel and flagged read the seen parts and this batch's sh/bk:
-        # pin them before a compaction of the seen relations releases
-        # those; then fold ALL batch docs (kept or dropped) into the
-        # seen relations
+        dup_ids = flagged.select(F.col("stream_id").alias(id_col)).distinct()
+        novel = batch.join(dup_ids, id_col, "left_anti")
+        # novel reads the flagged part, and flagged the seen parts and
+        # this batch's sh/bk: add novel first and flagged next, so no
+        # compaction releases a part before what reads it is pinned;
+        # then fold ALL batch docs (kept or dropped) into the seen
+        # relations
         state["novel"].add(novel)
         state["flagged"].add(flagged)
         state["seen_sh"].add(sh)

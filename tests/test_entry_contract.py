@@ -99,3 +99,26 @@ def test_env_extra_conf_parsing():
     }
     # malformed entries (no '=', empty key) are ignored, valid ones kept
     assert _env_extra_conf("noequals; =v; k=a=b") == {"k": "a=b"}
+
+
+def test_driver_memory_default_follows_usable_memory(monkeypatch, tmp_path):
+    """The driver heap defaults to half the memory the process can use
+    (physical pages, capped by a cgroup v2 ``memory.max``), within
+    [1g, 48g]."""
+    from mpes_spark import session as S
+
+    gib = 2**30
+    pages = {"SC_PHYS_PAGES": 64 * gib // 4096, "SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(S.os, "sysconf", pages.__getitem__)
+    cg = tmp_path / "memory.max"
+    monkeypatch.setattr(S, "_CGROUP_MEMORY_MAX", str(cg))
+    assert S._usable_memory() == 64 * gib  # no cgroup file
+    cg.write_text("max\n")
+    assert S._usable_memory() == 64 * gib  # no limit set
+    cg.write_text(f"{8 * gib}\n")
+    assert S._usable_memory() == 8 * gib  # the cgroup limit wins
+    assert S._default_driver_mem() == "4096m"
+
+    for usable, want in [(15 * gib, "7680m"), (512 * gib, "49152m"), (gib, "1024m")]:
+        monkeypatch.setattr(S, "_usable_memory", lambda u=usable: u)
+        assert S._default_driver_mem() == want

@@ -3,6 +3,7 @@ promises must be visible in the executed plan, not just intended."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mpes_spark.binning.engine import bin_sparse
@@ -840,3 +841,71 @@ def test_partition_digest_diff_is_bucket_sized(spark):
     # one join total (the bucket-keyed full outer); everything else
     # is aggregation
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") == 1
+
+
+#: (jobs, exchanges) budgets of the suite's slowest queries (by sf0.1
+#: median in bench_results.json) plus the paper's hist_4d, at SF_SMALL
+#: on the test session: the largest count over five cold-session runs
+#: when the budgets were set. Every count repeated exactly except
+#: neardup_prefix_waved's jobs (66-69: its waves submit AQE stages
+#: concurrently, and the order they finish in decides how many stages
+#: a re-plan still launches). Under AQE each shuffle stage is its own
+#: job, so one extra shuffle raises the job count even where the
+#: returned plan only reads a pinned result (exchange budget 0). Stage
+#: counts vary between runs of the same code and get no budget.
+_BUDGETS = {
+    "neardup_prefix_waved": (69, 0),
+    "pagerank_custsupp": (54, 17),
+    "pagerank_weighted": (54, 17),
+    "label_communities": (16, 12),
+    "neardup_prefix_filter": (18, 0),
+    "neardup_dual_measure": (19, 0),
+    "clustering_coeff": (17, 9),
+    "dedup_canonical_quality": (26, 3),
+    "neardup_cross_ingest": (26, 0),
+    "lr_train_quality": (30, 1),
+    "simhash_lsh_oracle": (4, 16),
+    "dup_span_mask": (7, 5),
+    "minhash_lsh_pairs": (17, 9),
+    "kcore_copurchase": (18, 1),
+    "join_ivm_delta_du": (16, 37),
+    "cluster_safe_splits": (25, 13),
+    "cms_topk_estimate": (7, 7),
+    "cross_source_duplication": (18, 5),
+    "simhash_neardup": (4, 4),
+    "minhash_lsh_oracle": (12, 24),
+    "hist_4d": (3, 1),
+}
+
+
+@pytest.mark.parametrize("name", list(_BUDGETS))
+def test_query_job_and_exchange_budget(spark, name):
+    """Building and collecting the query runs at most its budgeted
+    number of Spark jobs (counted by job group), and its AQE-final plan
+    holds at most its budgeted number of exchanges. Counters, unlike
+    wall time, do not move with the box's load: a rise is a plan
+    change. Whatever the query leaves pinned is released afterwards."""
+    from __spark_entry__ import queries
+
+    sc = spark.sparkContext
+    pinned = set(sc._jsc.getPersistentRDDs().keys())
+    group = f"budget-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = queries()[name](spark, SF_SMALL)
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+        for rdd_id, rdd in sc._jsc.getPersistentRDDs().items():
+            if rdd_id not in pinned:
+                rdd.unpersist(False)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.finalPhysicalPlan()
+    exchanges = plan.toString().count("Exchange")
+    max_jobs, max_exchanges = _BUDGETS[name]
+    assert jobs <= max_jobs, f"{name}: {jobs} jobs, budget {max_jobs}"
+    assert exchanges <= max_exchanges, (
+        f"{name}: {exchanges} exchanges, budget {max_exchanges}"
+    )

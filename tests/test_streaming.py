@@ -681,6 +681,46 @@ def test_neardup_ingest_sink_vs_corpus(spark, tmp_path, monkeypatch):
     assert all(len(st_m[name]) == 1 for name in ("novel", "flagged", "seen_sh", "seen_bk"))
 
 
+def test_neardup_ingest_sink_verifies_once_per_batch(spark):
+    """A neardup micro-batch plans its two verify joins once: the
+    flagged part is pinned and novel is the batch anti-joined with its
+    ids. A 10-doc batch against a 20-doc corpus ran 38 jobs per
+    ``handle`` call when novel and flagged each ran the verify joins,
+    and 23 with this plan (``local[8]``)."""
+    from mpes_spark.streaming.live import neardup_ingest_sink
+
+    schema = "doc_id long, text string"
+
+    def doc(tag, i):
+        return " ".join(f"{tag}{i}w{j}" for j in range(30))
+
+    corpus = spark.createDataFrame([(i, doc("c", i)) for i in range(20)], schema)
+    handle, novel, flagged = neardup_ingest_sink(
+        corpus, n=3, k=32, bands=8, threshold=0.5
+    )
+    sc = spark.sparkContext
+    for b in range(2):
+        first = 100 + 10 * b
+        rows = [(first + i, doc("s", first + i)) for i in range(8)]
+        # a near-dup of a corpus doc, and one of a lower-id batch doc
+        rows.append((first + 8, doc("c", b).replace(f"c{b}w7 ", "x ")))
+        rows.append((first + 9, doc("s", first).replace(f"s{first}w3 ", "y ")))
+        group = f"neardup-handle-{b}"
+        sc.setJobGroup(group, group)
+        try:
+            handle(spark.createDataFrame(rows, schema), b)
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs < 38, jobs
+    assert sorted(r.doc_id for r in novel().collect()) == [
+        *range(100, 108), *range(110, 118)
+    ]
+    assert {(r.stream_id, r.matched_id) for r in flagged().collect()} == {
+        (108, 0), (109, 100), (118, 1), (119, 110)
+    }
+
+
 def test_interval_attribution_left_outer_stream_matches_batch(spark, tmp_path):
     """leftOuter stream-stream time-range join: matched pairs emit
     in-batch; unmatched clicks emit with NULL right columns once the
@@ -1392,8 +1432,8 @@ def test_sentence_span_ingest_sink_cross_batch_parity(spark, tmp_path, monkeypat
 
 
 def _flag_compaction_soak(spark, monkeypatch, sink, parts_key, distinct_key):
-    """Drive ``sink`` through a 50-batch soak twice — with
-    COMPACT_EVERY=10 and with no compaction — and check that BOTH part
+    """Drive ``sink`` through a 10-batch soak twice — with
+    COMPACT_EVERY=3 and with no compaction — and check that BOTH part
     lists of the compacted run stay depth-bounded (without compaction
     the flag_parts list grows one entry per batch, unbounded) and that
     the compacted audit is row-identical to the uncompacted one."""
@@ -1411,7 +1451,7 @@ def _flag_compaction_soak(spark, monkeypatch, sink, parts_key, distinct_key):
             "doc_id long, text string",
         )
 
-    n = 50
+    n, every = 10, 3
 
     def soak(compact_every):
         monkeypatch.setattr(pinning, "COMPACT_EVERY", compact_every)
@@ -1420,10 +1460,10 @@ def _flag_compaction_soak(spark, monkeypatch, sink, parts_key, distinct_key):
             handle(batch_df(i), i)
         return handle.state_stats(), sorted(tuple(r) for r in flagged().collect())
 
-    sc, got_c = soak(10)
+    sc, got_c = soak(every)
     su, got_u = soak(n + 1)  # never compacts
-    assert su["flag_parts"] > 10  # the unbounded failure mode, visible
-    assert sc[parts_key] <= 10 and sc["flag_parts"] <= 10
+    assert su["flag_parts"] > every  # the unbounded failure mode, visible
+    assert sc[parts_key] <= every and sc["flag_parts"] <= every
     assert sc["batches"] == su["batches"] == n
     assert sc[distinct_key] == su[distinct_key]
     assert got_c == got_u and got_c  # compaction is audit-invisible

@@ -11,16 +11,27 @@ step the distributed connected-components resolver
 (:func:`mpes_spark.extras.dedup.connected_components`) already uses,
 but with a dense rank vector instead of min-label propagation.
 
-Scale shape (100 TB of edges):
-- the edge relation is hash-partitioned on ``src`` ONCE, into the
-  session's default parallelism, and pinned; every iteration's rank
-  join then co-locates with it and the only per-iteration shuffle is
-  the ``groupBy(dst)`` contribution sum (map-side combined).
-- the rank relation stays node-sized, never edge-sized; the dangling
-  mass is a ONE-row aggregate cross-joined back in (no driver
-  action, no collect).
-- each iteration's rank is a lazy local checkpoint, so the plan stays
-  one iteration deep however many iterations run.
+Scale shape (100 TB of edges), after the co-partitioned links/ranks
+PageRank of the RDD paper [Zaharia et al., NSDI'12]:
+- the adjacency — each node with its out-neighbour list and
+  out-degree — is built in ONE node-keyed shuffle and pinned once.
+  The node count and dangling-node count are read off that pin as
+  plain numbers, so no iteration broadcasts or cross-joins them.
+- the iterations are one lazy plan. The adjacency's node-keyed
+  exchange runs once and every iteration's join reuses it; each
+  iteration adds one shuffle, the ``groupBy(dst)`` contribution sum
+  (map-side combined), whose output is already partitioned like the
+  adjacency. Joins carry a shuffle-hash hint: a broadcast would cost a
+  job per iteration and a node-sized broadcast does not scale.
+- the rank relation stays node-sized, never edge-sized. Only a graph
+  WITH dangling nodes needs a global sum per iteration; it pins each
+  iteration's contributions and reads the dangling mass off the pin.
+- label propagation and k-core keep the same discipline: one
+  node-keyed shuffle per round, no per-round pin or broadcast, and a
+  plan that grows linearly with the round count.
+- every AQE stage after the first shuffle reads only shuffle output,
+  so node-sized stages are coalesced to the data's size, not run at
+  ``spark.sql.shuffle.partitions`` tasks.
 
 Pinning follows :mod:`mpes_spark.pinning`.
 
@@ -34,7 +45,7 @@ rounded to 6.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mpes_spark.pinning import release
@@ -50,8 +61,9 @@ def pagerank(
     weight: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge list. Runs Spark jobs
-    when called: the edges, nodes and out-degrees are eager local
-    checkpoints, which the returned plan reads (caller-owned).
+    when called: the adjacency relation is an eager local checkpoint,
+    which the returned plan reads (caller-owned), as it reads the last
+    iteration's pinned contributions on a graph with dangling nodes.
 
     Returns ``(node, rank)`` with ranks summing to 1, or — with
     ``normalize=True`` — ``(node, rank_norm)`` where ranks are scaled
@@ -66,94 +78,91 @@ def pagerank(
     unweighted ranks exactly).
 
     Dangling nodes (no out-edges) redistribute their mass uniformly,
-    the standard correction, via a 1-row aggregate — never a driver
-    round-trip. In the weighted case a source whose weights sum to
-    <= 0 is treated as dangling too (its contributions would divide by
-    zero to NULL and silently vanish from the sum, losing rank mass);
-    with that rule ranks sum to 1 for any weight column.
+    the standard correction. In the weighted case a source whose
+    weights sum to <= 0 is treated as dangling too (its contributions
+    would divide by zero to NULL and silently vanish from the sum,
+    losing rank mass); with that rule ranks sum to 1 for any weight
+    column. A graph without dangling nodes — every symmetric graph —
+    plans no dangling term at all: its iterations form one lazy plan.
+    With dangling nodes, each iteration's contributions are pinned and
+    the dangling mass is read off that pin, so the next iteration
+    takes it as a literal.
     """
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight is not None:
         cols.append(F.col(weight).cast("double").alias("w"))
-    # every iteration reads the edges: eager checkpoint, per
-    # mpes_spark/pinning.py (sf0.1, 500k edges, 3 iterations: lazy
-    # 18.8 s, persist() 12.5 s, localCheckpoint ~1.9 s warm)
-    e = edges.select(*cols).repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "src"
-    ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
+    e = edges.select(*cols)
+    if weight is None:
+        to, deg_agg = F.col("dst"), F.count("to").cast("double")
+        key, share = F.col("to"), F.col("r") / F.col("outdeg")
+    else:
+        to, deg_agg = F.struct("dst", "w"), F.sum("to.w")
+        key, share = F.col("to.dst"), F.col("r") * F.col("to.w") / F.col("outdeg")
+    # every node with its out-neighbours and out-degree, in ONE
+    # node-keyed shuffle: each edge also names its dst as a node with
+    # a typed NULL neighbour, which the aggregates skip, so a node
+    # without out-edges is a row without neighbours
+    halves = e.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("src").alias("node"), to.alias("to")),
+                F.struct(
+                    F.col("dst").alias("node"), F.when(F.lit(False), to).alias("to")
+                ),
+            )
+        )
+    )
+    # outdeg > 0 is NULL-safe-false for a missing outdeg, so it
+    # excludes true dangling nodes and weighted sources with
+    # non-positive weight sums alike
+    live = F.col("outdeg") > 0
+    stats = Observation()
+    # every iteration reads the adjacency: eager checkpoint, per
+    # mpes_spark/pinning.py
+    adj = (
+        halves.groupBy("node")
+        .agg(F.collect_list("to").alias("nbrs"), deg_agg.alias("outdeg"))
+        .observe(
+            stats,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(live, 0).otherwise(1)).alias("dangling"),
+        )
         .localCheckpoint(eager=True)
     )
-    deg_agg = (
-        F.sum("w") if weight is not None else F.count(F.lit(1)).cast("double")
-    )
-    # Pin the out-degree relation like the nodes (r12): every
-    # iteration's rank plan references deg, and with per-iteration rank
-    # checkpoints each iteration is its own job — an unpinned deg
-    # re-aggregates the EDGE relation once per iteration (k edge-scale
-    # shuffles for a node-sized result). Pinned, the edge aggregation
-    # runs once and each iteration joins a node-sized relation.
-    deg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(deg_agg.alias("outdeg"))
-        .localCheckpoint(eager=True)
-    )
-    n1 = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    one_minus_d = 1.0 - damping
-
-    rank = nodes.crossJoin(F.broadcast(n1)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("r")
-    )
-    for i in range(iters):
-        rd = rank.join(deg, "node", "left")
-        contrib = (
-            e.join(
-                # outdeg > 0 is NULL-safe-false for missing outdeg, so
-                # this one predicate excludes both true dangling nodes
-                # and weighted sources with non-positive weight sums.
-                rd.filter(F.col("outdeg") > 0),
-                e.src == rd.node,
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum(
-                    F.col("r") * F.col("w") / F.col("outdeg")
-                    if weight is not None
-                    else F.col("r") / F.col("outdeg")
-                ).alias("c")
-            )
+    # an empty graph has no rows to rank
+    n = float(stats.get["n"]) or 1.0
+    dangling = bool(stats.get["dangling"])
+    # column expressions are built once: each costs driver round trips
+    base, spread = F.lit((1.0 - damping) / n), F.coalesce(F.col("c"), F.lit(0.0))
+    r = F.lit(1.0 / n)
+    messages = [F.col("outdeg"), F.explode("nbrs").alias("to")]
+    contribution = F.sum(share).alias("c")
+    c = None
+    for _ in range(iters):
+        x = adj if c is None else adj.join(c.hint("shuffle_hash"), "node", "left")
+        if dangling:
+            mass = Observation()
+            x = x.observe(mass, F.sum(F.when(live, 0.0).otherwise(r)).alias("dm"))
+        superseded = c
+        c = (
+            x.filter(live)
+            .select(r.alias("r"), *messages)
+            .groupBy(key.alias("node"))
+            .agg(contribution)
         )
-        dang = rd.filter(
-            F.col("outdeg").isNull() | (F.col("outdeg") <= 0)
-        ).agg(
-            F.coalesce(F.sum("r"), F.lit(0.0)).alias("dm")
-        )
-        rank = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .crossJoin(F.broadcast(n1))
-            .select(
-                "node",
-                (
-                    F.lit(one_minus_d) / F.col("n")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.col("dm") / F.col("n")
-                    )
-                ).alias("r"),
-            )
-        )
-        if i + 1 < iters:
-            rank = rank.localCheckpoint(eager=False)
+        if dangling:
+            # the next iteration takes this one's dangling mass as a
+            # literal, read off the pin that computes it
+            c = c.localCheckpoint(eager=True)
+            if superseded is not None:
+                release(superseded)
+            r = base + F.lit(damping) * (spread + F.lit(mass.get["dm"] / n))
+        else:
+            r = base + F.lit(damping) * spread
+    rank = adj if c is None else adj.join(c.hint("shuffle_hash"), "node", "left")
     if normalize:
-        return rank.crossJoin(F.broadcast(n1)).select(
-            "node", (F.col("r") * F.col("n")).alias("rank_norm")
-        )
-    return rank.select("node", F.col("r").alias("rank"))
+        return rank.select("node", (r * F.lit(n)).alias("rank_norm"))
+    return rank.select("node", r.alias("rank"))
 
 
 def pagerank_sql(
@@ -266,52 +275,47 @@ def label_propagation(
     adopts the most common label among its neighbors, ties broken by
     the smallest label — the deterministic variant (random
     tie-breaking in the paper), which is what makes the computation
-    oracle-replayable. Pass a SYMMETRIZED edge list for undirected
-    semantics.
+    oracle-replayable. Neighbors are the ``dst`` of a node's edges:
+    a node without out-edges has no label after round one, so edges
+    into it count in round one only. Pass a SYMMETRIZED edge list
+    for undirected semantics.
 
     Returns ``(node, label)`` after ``iters`` rounds.
 
-    Scale shape: per round ONE edge⋈labels equi-join (labels stays
-    node-sized) + one (src, label)-keyed count with map-side combine
-    + a per-src argmax — the same join+groupBy skeleton as
-    :func:`pagerank`, but all-integer, so the cross-engine hash gate
-    is exact with no rounding at all. The argmax is a ``min(struct
-    (-cnt, label))`` AGGREGATE rather than a row_number window (r12):
-    both pick exactly the (cnt DESC, label ASC) head, but the
-    aggregate partially combines map-side and never sorts — the
-    window shuffles every (src, label, cnt) row to a per-src sort,
-    which at 100 TB buffers a celebrity node's whole label histogram
-    in one task where the agg folds it a partition at a time. Edges
-    are pinned once; the label lineage grows one join+agg per round
-    inside the one returned lazy plan."""
+    Scale shape: ONE src-keyed shuffle per round. The argmax is a
+    ``mode(label, deterministic=True)`` aggregate per src — the most
+    frequent label, the smallest on ties — whose per-src label counts
+    combine map-side, so one exchange serves what a (src, label) count
+    and a per-src argmax would each shuffle for. Round one needs no
+    join (each neighbor's label is its own id); later rounds join the
+    edges, exchanged by dst once for all rounds, with the previous
+    round's labels, which that round's aggregate already left
+    partitioned by node. All-integer counts, so the cross-engine hash
+    gate is exact with no rounding at all. Edges with a NULL endpoint
+    are ignored."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = e.localCheckpoint(eager=True)
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .withColumn("label", F.col("node"))
+    # an edge with a NULL endpoint never counts. Filtering the pin with
+    # both tests also gives every round's join the same edge plan (the
+    # optimizer adds no per-round null tests), so the dst-keyed
+    # exchange of the edges runs once for all rounds.
+    e = e.localCheckpoint(eager=True).filter(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    for _ in range(iters):
-        nb = (
-            e.join(labels, e.dst == labels.node)
-            .groupBy("src", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    if iters < 1:
+        return (
+            e.select(F.explode(F.array("src", "dst")).alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
         )
-        # min over (-cnt, label) == the (cnt DESC, label ASC) argmax:
-        # struct comparison is lexicographic, -cnt ascending is cnt
-        # descending, ties fall through to the smaller label.
-        labels = (
-            nb.groupBy("src")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"), F.col("label").alias("label")
-                    )
-                ).alias("best")
-            )
-            .select(F.col("src").alias("node"), F.col("best.label").alias("label"))
-        )
+    # column expressions are built once: each costs driver round trips
+    node, on = F.col("src").alias("node"), F.col("dst") == F.col("node")
+    argmax = F.mode("label", deterministic=True).alias("label")
+    # round one: every neighbour's label is its own id
+    nb = e.select("src", F.col("dst").alias("label"))
+    for i in range(iters):
+        labels = nb.groupBy(node).agg(argmax)
+        if i + 1 < iters:
+            nb = e.join(labels.hint("shuffle_hash"), on)
     return labels
 
 
@@ -579,9 +583,8 @@ def kcore(
     dst: str = "dst",
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """k-core peeling, which runs Spark jobs when called: each round's
-    surviving edge set is an eager local checkpoint, the last one read
-    by the returned plan (caller-owned).
+    """k-core peeling as one lazy plan: it runs no Spark job when
+    called and pins nothing.
 
     Iteratively delete nodes of degree < ``k`` (with their edges)
     for ``rounds`` iterations; return (node, deg_core) — each
@@ -600,32 +603,54 @@ def kcore(
     peel depth yields the exact k-core (the fixpoint pytest asserts
     this on a chain graph engineered to need every round).
 
-    Scale shape per round: one degree aggregation (map-side combined;
-    edge-keyed shuffle) + two semi-joins of the edge relation against
-    the surviving-node set — all equi-keyed on node ids, never
-    all-pairs; the edge relation is re-pinned (localCheckpoint) each
-    round so lineage stays one peel deep, and the superseded
-    generation is released (the connected-components discipline).
-    ``assume_canonical=True`` skips the canonicalizing distinct for
-    src<dst-unique inputs (r12); degree aggregations scan the pinned
-    edges once via explode instead of a two-scan unionAll."""
-    e = _canonical_edges(edges, src, dst, assume_canonical).localCheckpoint(
-        eager=True
-    )
-    for _ in range(rounds):
-        keep = _degrees(e).filter(F.col("deg") >= k).select("node")
-        superseded = e
-        e = (
-            e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+    Scale shape: the state is node-keyed — each node with the list of
+    its surviving neighbours, built from the undirected edge set in
+    one shuffle (``collect_set`` drops duplicate and reversed edges;
+    ``assume_canonical=True`` skips that set for src<dst-unique
+    inputs). A node's degree is then the size of its list, so a peel
+    needs no degree join: each node of degree >= ``k`` sends its id to
+    itself and to every neighbour, and ONE node-keyed shuffle regroups
+    the messages. A node that heard from itself survives, and the
+    neighbours it heard from are exactly its surviving edges. Each
+    round reads the previous one once, so the plan grows linearly
+    with ``rounds``; the edge-keyed degree table and two semi-joins per
+    peel that an edge-list formulation needs would reference every
+    round's state twice."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    if not assume_canonical:
+        e = e.filter(F.col("u") != F.col("v"))
+    halves = e.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("u").alias("node"), F.col("v").alias("nbr")),
+                F.struct(F.col("v").alias("node"), F.col("u").alias("nbr")),
+            )
         )
-        release(superseded)
-    return (
-        e.select(F.explode(F.array("u", "v")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("deg_core"))
+    )
+    collect = F.collect_list if assume_canonical else F.collect_set
+    adj = halves.groupBy("node").agg(collect("nbr").alias("nbrs"))
+    # column expressions are built once: each costs driver round trips
+    survives = F.size("nbrs") >= k
+    # (frm, node): frm's id sent to node; frm == node is frm's own copy
+    sends = [
+        F.col("node").alias("frm"),
+        F.explode(F.concat(F.array("node"), F.col("nbrs"))).alias("node"),
+    ]
+    own = F.col("frm") == F.col("node")
+    regroup = [
+        F.collect_list(F.when(~own, F.col("frm"))).alias("nbrs"),
+        F.max(own).alias("alive"),
+    ]
+    for _ in range(rounds):
+        adj = (
+            adj.filter(survives)
+            .select(*sends)
+            .groupBy("node")
+            .agg(*regroup)
+            .filter("alive")
+        )
+    return adj.filter(F.size("nbrs") > 0).select(
+        "node", F.size("nbrs").cast("bigint").alias("deg_core")
     )
 
 

@@ -1500,17 +1500,14 @@ from mpes_spark.analysis.graph import pagerank_sql as _pagerank_sql
 def pagerank_custsupp(spark, sf_dir):
     """PageRank (3 power iterations, damping 0.85) over the
     bidirectional customer<->supplier graph induced by who traded
-    with whom (orders x lineitem, deduplicated pairs). Per
-    iteration: one co-partitioned rank-edge join + one groupBy(dst)
-    shuffle; rank stays node-sized; dangling mass is a 1-row
-    broadcast agg. Normalized ranks (mean 1.0) rounded to 6 — see
-    analysis/graph.py for the 100-TB notes.
-
-    pagerank localCheckpoints the node-sized rank relation each round,
-    so codegen compiles three shallow plans instead of one deep
-    unrolled one and the lineage does not grow with iters (r6 A/B,
-    SCALING.md §"pagerank_custsupp r5 driver-flag adjudication": cold
-    9.18 vs 11.34, warm ~6.5 vs ~7.4)."""
+    with whom (orders x lineitem, deduplicated pairs). The adjacency
+    (node, neighbours, outdeg) is built in one node-keyed shuffle and
+    pinned once; the three iterations are one lazy plan in which the
+    adjacency's node-keyed exchange runs once and each iteration adds
+    one groupBy(dst) shuffle. The graph is symmetric, so it has no
+    dangling node and no dangling term is planned. Normalized ranks
+    (mean 1.0) rounded to 6 — see analysis/graph.py for the 100-TB
+    notes."""
     from mpes_spark.analysis.graph import pagerank
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1552,9 +1549,11 @@ def label_communities(spark, sf_dir):
     deterministic min-tie variant; 3 rounds) over the same
     customer<->supplier trade graph as `pagerank_custsupp` — the
     community detector that refines near-dup clusters and groups
-    domains. Per round: one node-sized label join + one integer
-    (src, label) count + a per-src window argmax; all-integer, so the
-    oracle hash gate is exact with zero rounding."""
+    domains. Per round: one node-sized label join (none in round one)
+    and one src-keyed shuffle into a ``mode(label, deterministic)``
+    aggregate, the most frequent label with the smallest winning ties;
+    all-integer, so the oracle hash gate is exact with zero
+    rounding."""
     from mpes_spark.analysis.graph import label_propagation
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1600,8 +1599,8 @@ def pagerank_weighted(spark, sf_dir):
     weight SUM, contributions r*w/sum_w, weight-sum<=0 sources count
     as dangling (mass conservation). Weights are integer counts, so
     the outdeg sums are exact in both engines; same one-pass
-    explode-symmetrize and per-iteration plan shape as
-    pagerank_custsupp, with the count agg replacing the distinct."""
+    explode-symmetrize and plan shape as pagerank_custsupp, with the
+    count agg replacing the distinct."""
     from mpes_spark.analysis.graph import pagerank
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1660,9 +1659,9 @@ def kcore_copurchase(spark, sf_dir):
     so the gated result IS the true fixpoint): iteratively delete
     degree<2 nodes with their
     edges — the dense-part extractor that melts low-degree periphery
-    (spam farms, boilerplate interlinks) off a link graph. Each peel
-    is one map-side-combined degree agg + two node-keyed semi-joins,
-    edge relation re-pinned per round (lineage one peel deep); the
+    (spam farms, boilerplate interlinks) off a link graph. The state is
+    each node's surviving-neighbour list, and each peel is one
+    node-keyed shuffle in one lazy plan (no pins); the
     oracle unrolls the identical peels as chained CTEs, and peeling
     monotonicity means any rounds >= true peel depth is the exact
     fixpoint (pytest asserts it on an engineered chain)."""

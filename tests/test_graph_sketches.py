@@ -44,6 +44,25 @@ def test_pagerank_matches_numpy_reference(spark):
         assert got[k] == pytest.approx(want[k], abs=1e-12)
 
 
+def test_pagerank_matches_numpy_reference_without_dangling_node(spark):
+    """Every node has an out-edge, so the iterations plan no dangling
+    term at all; the ranks must still be the reference's."""
+    edges = [
+        ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
+        ("c", "d"), ("d", "a"), ("d", "b"), ("e", "d"),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    for iters in (1, 5):
+        got = {
+            r["node"]: r["rank"]
+            for r in pagerank(df, iters=iters, damping=0.85).collect()
+        }
+        want = _pagerank_numpy(edges, iters=iters, damping=0.85)
+        assert set(got) == set(want)
+        for k in want:
+            assert got[k] == pytest.approx(want[k], abs=1e-12), (iters, k)
+
+
 def test_pagerank_mass_conserved_and_normalized(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -521,6 +540,45 @@ def test_label_propagation_two_cliques(spark):
     b_labels = {out[n] for n in ["b2", "b3", "b4"]}
     assert len(a_labels) == 1 and len(b_labels) == 1
     assert a_labels != b_labels
+
+
+def _label_propagation_reference(edges, iters):
+    """Synchronous label propagation in plain Python: each round, a
+    node with out-edges takes the most frequent label among the
+    current labels of its edges' dst nodes (the smallest on ties); a
+    node without labelled out-neighbours has no label afterwards."""
+    from collections import Counter
+
+    labels = {n: n for e in edges for n in e}
+    for _ in range(iters):
+        counts: dict = {}
+        for u, v in edges:
+            if v in labels:
+                counts.setdefault(u, Counter())[labels[v]] += 1
+        labels = {
+            u: min(c, key=lambda lab: (-c[lab], lab)) for u, c in counts.items()
+        }
+    return labels
+
+
+def test_label_propagation_matches_python_reference(spark):
+    """Directed edges with a sink (``s`` has no out-edges, so it loses
+    its label after round one and edges into it stop counting), a
+    duplicated edge (counts twice), and label ties, which the smallest
+    label must win."""
+    from mpes_spark.analysis.graph import label_propagation
+
+    edges = [
+        ("a", "b"), ("a", "c"), ("a", "s"),
+        ("b", "a"), ("b", "c"),
+        ("c", "a"), ("c", "d"), ("c", "d"),
+        ("d", "e"), ("e", "d"), ("e", "s"),
+        ("f", "s"), ("f", "e"), ("g", "f"), ("g", "b"),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    for iters in (1, 2, 3, 4):
+        got = {r.node: r.label for r in label_propagation(df, iters=iters).collect()}
+        assert got == _label_propagation_reference(edges, iters), iters
 
 
 def test_label_propagation_deterministic(spark):

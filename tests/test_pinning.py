@@ -112,11 +112,12 @@ def _docs(spark):
 def test_operators_leave_only_what_their_plan_reads(spark):
     """After each call and one collect(), every newly pinned RDD or
     cache entry must be a leaf of the returned analyzed plan — a
-    checkpoint the caller owns and releases. Exempt: pagerank, whose
-    per-iteration lazy checkpoints sit inside the lineage of the plan
-    it returns; and the two operators whose returned lazy plan reads
-    a persisted relation by design (their plan-shape tests pin the
-    cache scans), which may leave exactly that cache."""
+    checkpoint the caller owns and releases. Exempt: the two operators
+    whose returned lazy plan reads a persisted relation by design
+    (their plan-shape tests pin the cache scans), which may leave
+    exactly that cache. PageRank runs twice: on the directed graph,
+    whose sinks are dangling nodes (one pin per iteration), and on its
+    symmetric closure, which has none (one lazy plan)."""
     from mpes_spark.analysis import graph as G
     from mpes_spark.extras import dedup as DD
 
@@ -125,7 +126,12 @@ def test_operators_leave_only_what_their_plan_reads(spark):
         [(1, 2), (2, 3), (5, 6), (7, 9), (9, 11)], "id_a long, id_b long"
     )
     batch = docs.filter(F.col("doc_id") < 12)
+    symmetric = edges.unionByName(edges.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst")
+    ))
     cases = {
+        "pagerank": lambda: G.pagerank(edges),
+        "pagerank[symmetric]": lambda: G.pagerank(symmetric),
         "label_propagation": lambda: G.label_propagation(edges),
         "triangle_count": lambda: G.triangle_count(edges),
         "clustering_coefficient": lambda: G.clustering_coefficient(edges),

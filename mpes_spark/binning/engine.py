@@ -18,6 +18,11 @@ is keyed ``CASE WHEN lo <= x < hi THEN floor(...) END`` instead of
 being pre-filtered, so each calibration is evaluated once per event;
 see :func:`with_bin_indices`.
 
+Every predicate and key is SQL text built from :class:`BinAxis`'s
+``*_sql`` methods, the same text :func:`bin_sparse_sql` gives the
+DuckDB oracle; the Spark plan is a handful of py4j calls however many
+axes it bins.
+
 Catalyst/Tungsten give partial (map-side) aggregation, whole-stage
 codegen for the floor arithmetic, parquet column pruning down to the
 binned axes, and AQE-coalesced shuffle for the final combine. The
@@ -34,9 +39,7 @@ size) comes to the driver.
 
 from __future__ import annotations
 
-import operator
 from collections.abc import Sequence
-from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -44,6 +47,7 @@ from pyspark.sql import functions as F
 
 from mpes_spark.binning.spec import BinAxis
 from mpes_spark.grid.binned import BinnedArray
+from mpes_spark.sqltext import qcol
 
 
 def _leaf_columns(df: DataFrame, names: Sequence[str]) -> set[str]:
@@ -61,7 +65,8 @@ def with_bin_indices(
 ) -> DataFrame:
     """Project the input down to bin-index columns (+ optional
     carried-through columns) under the half-open bin rule
-    ``lo <= x < hi``.
+    ``lo <= x < hi``: one ``filter`` and one ``selectExpr``, both SQL
+    text, so the plan costs two py4j calls whatever the axis count.
 
     How an axis is keyed depends on where its column comes from:
 
@@ -79,20 +84,16 @@ def with_bin_indices(
       derived keys, so such events share one group per task, which
       :func:`bin_sparse` drops after aggregation."""
     leaf = _leaf_columns(df, [ax.col for ax in axes])
-    out, in_domain = df, []
+    pre = [ax.in_domain_sql(qcol(ax.col)) for ax in axes if ax.col in leaf]
+    ok = " AND ".join(ax.in_domain_sql(qcol(ax.col)) for ax in axes if ax.col not in leaf)
+    cols = []
     for ax in axes:
-        x = F.col(ax.col)
-        cond = (x >= F.lit(float(ax.lo))) & (x < F.lit(float(ax.hi)))
-        if ax.col in leaf:
-            out = out.filter(cond)
-        else:
-            in_domain.append(cond)
-    ok = reduce(operator.and_, in_domain) if in_domain else None
-    cols = [
-        (ax.index_expr() if ax.col in leaf else F.when(ok, ax.index_expr())).alias(ax.out)
-        for ax in axes
-    ]
-    return out.select(*cols, *[F.col(c) for c in keep])
+        key = ax.index_sql(qcol(ax.col))
+        if ax.col not in leaf:
+            key = f"CASE WHEN {ok} THEN {key} END"
+        cols.append(f"{key} AS {qcol(ax.out)}")
+    out = df.filter(" AND ".join(pre)) if pre else df
+    return out.selectExpr(*cols, *map(qcol, keep))
 
 
 #: guard-only row count carried through the aggregate by bin_sparse
@@ -128,14 +129,12 @@ def bin_sparse(
     keep = list(extra_keys) + ([weight] if weight else [])
     keyed = with_bin_indices(df, axes, keep=keep)
     keys = [ax.out for ax in axes] + list(extra_keys)
-    measure = (
-        F.sum(F.col(weight)).alias(count_name)
-        if weight
-        else F.count(F.lit(1)).alias(count_name)
+    measure = f"sum({qcol(weight)})" if weight else "count(1)"
+    out = keyed.groupBy(*keys).agg(
+        F.expr(f"{measure} AS {qcol(count_name)}"), F.expr(f"count(1) AS {_ROWS}")
     )
-    out = keyed.groupBy(*keys).agg(measure, F.count(F.lit(1)).alias(_ROWS))
-    guard = reduce(operator.and_, [ax.in_range_expr(F.col(ax.out)) for ax in axes])
-    return out.filter(guard | (F.col(_ROWS) < 0)).drop(_ROWS)
+    guard = " AND ".join(ax.in_range_sql(qcol(ax.out)) for ax in axes)
+    return out.filter(f"({guard}) OR {_ROWS} < 0").drop(_ROWS)
 
 
 def bin_sparse_sql(
@@ -154,10 +153,7 @@ def bin_sparse_sql(
     sel = ", ".join(
         [f"{ax.index_sql()} AS {ax.out}" for ax in axes] + list(extra_keys)
     )
-    conds = [
-        f"({ax.col} >= {float(ax.lo)!r} AND {ax.col} < {float(ax.hi)!r})"
-        for ax in axes
-    ]
+    conds = [ax.in_domain_sql() for ax in axes]
     if where:
         conds.append(f"({where})")
     where_sql = f"WHERE {' AND '.join(conds)} " if conds else ""

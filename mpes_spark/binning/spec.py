@@ -12,10 +12,10 @@ triple, plus the engine's *documented* bin rule:
 This is the reference's numba-kernel behavior
 (``/root/reference/mpes/fprocessing.py:3538-3542``; its
 ``np.histogramdd`` path disagrees at the right edge — see SURVEY §2.3).
-We pick one rule because it is exactly expressible both as a Spark
-``Column`` and as ANSI SQL for the DuckDB oracle — ``index_expr`` and
-``index_sql`` emit arithmetically identical expressions so both engines
-perform the same IEEE-754 double ops.
+We pick one rule because it is exactly expressible as ANSI SQL that
+Spark and the DuckDB oracle both run: ``index_sql`` is the one
+definition of the bin arithmetic and ``index_expr`` is ``F.expr`` of
+it, so both engines perform the same IEEE-754 double ops.
 """
 
 from __future__ import annotations
@@ -26,11 +26,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _flit(v: float) -> str:
-    """Render a float as a full-precision SQL literal (shortest
-    round-trip repr, so DuckDB parses the identical double)."""
-    return repr(float(v))
+from mpes_spark.sqltext import dlit, qcol
 
 
 @dataclass(frozen=True)
@@ -60,19 +56,20 @@ class BinAxis:
     def step(self) -> float:
         return (self.hi - self.lo) / self.nbins
 
-    # ---- expression factories (Spark / SQL must stay identical) ----
+    # ---- expression factories (one SQL definition, both engines) ----
 
-    def index_expr(self, col: Column | None = None) -> Column:
+    def index_expr(self) -> Column:
         """Spark bin-index column: floor((x - lo) / step) as BIGINT."""
-        x = F.col(self.col) if col is None else col
-        return F.floor((x - F.lit(float(self.lo))) / F.lit(self.step)).cast("bigint")
+        return F.expr(self.index_sql(qcol(self.col)))
 
     def index_sql(self, col_sql: str | None = None) -> str:
-        """Identical arithmetic as ANSI SQL for the DuckDB oracle."""
         x = col_sql or self.col
-        return (
-            f"CAST(floor(({x} - {_flit(self.lo)}) / {_flit(self.step)}) AS BIGINT)"
-        )
+        return f"CAST(floor(({x} - {dlit(self.lo)}) / {dlit(self.step)}) AS BIGINT)"
+
+    def in_domain_sql(self, col_sql: str | None = None) -> str:
+        """The half-open value rule ``lo <= x < hi``."""
+        x = col_sql or self.col
+        return f"({x} >= {dlit(self.lo)} AND {x} < {dlit(self.hi)})"
 
     def in_range_expr(self, bin_col: Column) -> Column:
         return (bin_col >= 0) & (bin_col < self.nbins)

@@ -7,7 +7,8 @@ after gathering + natural-sorting file lists (``FileCollection``,
 of it: path globs, schema inference from parquet footers, partitioned
 parallel scan sized by ``spark.sql.files.maxPartitionBytes`` (the
 reference hand-chunks at 1e6 events, ``CHUNK_SIZE``,
-``/root/reference/mpes/fprocessing.py:476``).
+``/root/reference/mpes/fprocessing.py:476``). :func:`read_table`
+infers a local source's schema once per session.
 
 HDF5 ingestion (the reference's native acquisition format) is modeled
 as an offline convert-to-parquet adapter: h5py is not available in
@@ -21,6 +22,7 @@ from __future__ import annotations
 import glob
 import os
 import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,6 +116,28 @@ def normalize_event_time(df: DataFrame) -> DataFrame:
     return df
 
 
+#: per session: (ftype, paths, options) -> (file listing, inferred schema)
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _listing(paths: list[str]) -> tuple | None:
+    """(path, size, mtime) of every file under ``paths``, sorted; None
+    when a path is a glob or not on the local filesystem."""
+    files = []
+    for p in paths:
+        if glob.has_magic(p) or not os.path.exists(p):
+            return None
+        if os.path.isdir(p):
+            files += [os.path.join(d, f) for d, _, names in os.walk(p) for f in names]
+        else:
+            files.append(p)
+    try:
+        stats = [(f, os.stat(f)) for f in files]
+    except FileNotFoundError:  # rewritten while listed
+        return None
+    return tuple(sorted((f, st.st_size, st.st_mtime_ns) for f, st in stats))
+
+
 def read_table(
     spark: SparkSession,
     source: str | list[str],
@@ -124,20 +148,40 @@ def read_table(
     """``readDataframe`` (``/root/reference/mpes/fprocessing.py:1962-2027``):
     read one path/glob/file-list into a DataFrame. ``with_file`` adds
     the originating file (``input_file_name``) for per-file queries
-    like the EDC matrix."""
+    like the EDC matrix.
+
+    A source's schema is inferred once per session (for parquet that
+    is a one-task Spark job reading the footers) and handed to the
+    reader on later reads of the same source. The reuse is keyed by
+    the file type, the paths, the reader options and the listing of
+    every file under the paths (path, size, mtime), so a rewritten
+    source is inferred again. A glob or a path not on the local
+    filesystem cannot be listed here and is inferred on every read.
+    Session confs are not part of the key: a conf that changes what
+    inference returns (``spark.sql.parquet.mergeSchema``) takes effect
+    for a source once it is rewritten; pass the option instead."""
     # tolerate TIMESTAMP(NANOS) parquet (read as epoch-nanos longs)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    paths = [source] if isinstance(source, str) else list(source)
+    key = (ftype, tuple(paths), tuple(sorted((k, str(v)) for k, v in options.items())))
+    listing = _listing(paths)
+    known = _SCHEMAS.setdefault(spark, {})
+    reuse = listing is not None and known.get(key, (None,))[0] == listing
     reader = spark.read.options(**options)
+    if reuse:
+        reader = reader.schema(known[key][1])
     if ftype == "parquet":
-        df = reader.parquet(*([source] if isinstance(source, str) else source))
+        df = reader.parquet(*paths)
     elif ftype == "json":
-        df = reader.json(source)
+        df = reader.json(paths)
     elif ftype == "csv":
-        df = reader.option("header", "true").option("inferSchema", "true").csv(source)
+        df = reader.option("header", "true").option("inferSchema", "true").csv(paths)
     elif ftype == "orc":
-        df = reader.orc(*([source] if isinstance(source, str) else source))
+        df = reader.orc(*paths)
     else:
         raise NotImplementedError(f"file type {ftype!r}")
+    if listing is not None and not reuse:
+        known[key] = (listing, df.schema)
     if with_file:
         df = df.withColumn("file", F.input_file_name())
     return normalize_event_time(df)

@@ -8,6 +8,9 @@ immutable Spark DataFrame: every method returns a new pipeline whose
 plan Catalyst fuses end-to-end, so "project -> filter -> transform ->
 partial aggregate" compiles into one whole-stage-codegen'd scan, the
 same fusion the reference obtains per dask partition (SURVEY §3 EP2).
+A step that adds two columns (k axes, homography, TPS warp, dfield
+lookup) adds them in one ``withColumns`` projection, so it costs one
+analysis, and both read the step's input columns.
 """
 
 from __future__ import annotations
@@ -71,7 +74,7 @@ class EventPipeline:
     ):
         """``appendKAxis`` (/root/reference/mpes/fprocessing.py:2378-2389)."""
         kx, ky = K.imxy2kxy_expr(x, y, x0, y0, fx, fy)
-        return self.with_column(out_x, kx).with_column(out_y, ky)
+        return self._wrap(self.df.withColumns({out_x: kx, out_y: ky}))
 
     def apply_tof_correction(self, profile: str, t: str = "t", **kw):
         """``applyECorrection`` (/root/reference/mpes/fprocessing.py:2286-2343)."""
@@ -80,15 +83,13 @@ class EventPipeline:
     def apply_homography(self, M, x: str = "X", y: str = "Y", out_x: str = "Xm", out_y: str = "Ym"):
         """``applyKCorrection`` type='mattrans' (/root/reference/mpes/fprocessing.py:2345-2376)."""
         xt, yt = X.perspective_expr(x, y, M)
-        return self.with_column(out_x, xt).with_column(out_y, yt)
+        return self._wrap(self.df.withColumns({out_x: xt, out_y: yt}))
 
     def apply_tps(self, coeffs: np.ndarray, points: np.ndarray, x: str = "X", y: str = "Y",
                   out_x: str = "Xm", out_y: str = "Ym"):
         """TPS warp as column math (/root/reference/mpes/dask_tps.py:42-53)."""
-        return (
-            self.with_column(out_x, X.tps_expr(x, y, coeffs, points, which=0))
-            .with_column(out_y, X.tps_expr(x, y, coeffs, points, which=1))
-        )
+        xt, yt = (X.tps_expr(x, y, coeffs, points, which=w) for w in (0, 1))
+        return self._wrap(self.df.withColumns({out_x: xt, out_y: yt}))
 
     def apply_dfield(self, dfield: np.ndarray, how: str = "udf", **kw):
         """``applyKCorrection`` type='tps_matrix' -> ``dfieldapply``

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from mpes_spark.binning.engine import bin_sparse, bin_sparse_sql, histogram_per_group
 from mpes_spark.binning.spec import BinAxis
+from mpes_spark.io.readers import read_table
 from mpes_spark.transforms import corrections as XC
 from mpes_spark.transforms import energy as EN
 from mpes_spark.transforms import momentum as KM
@@ -40,13 +41,12 @@ from mpes_spark.transforms.columns import (
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # time queries work on raw epoch-nanos integers (tz-independent,
-    # and identical whether the parquet ships TIMESTAMP(NANOS) or
-    # TIMESTAMP(MICROS) — see io.readers.normalize_event_time).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from mpes_spark.io.readers import normalize_event_time
-
-    return normalize_event_time(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    """One testdata table, read through ``read_table``: its schema is
+    inferred once per session, and ``ts`` arrives as epoch-nanos
+    integers (tz-independent, and identical whether the parquet ships
+    TIMESTAMP(NANOS) or TIMESTAMP(MICROS) — see
+    io.readers.normalize_event_time)."""
+    return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 @dataclass
@@ -3060,8 +3060,6 @@ def per_file_hist(spark, sf_dir):
     """Per-source-file histograms via input_file_name as a grouping key —
     parallelBinning's multi-file union shape.
     """
-    from mpes_spark.io.readers import read_table
-
     ev = read_table(spark, f"{sf_dir}/events.parquet", with_file=True)
     ev = ev.withColumn("fname", F.regexp_extract(F.col("file"), r"[^/]+$", 0))
     return bin_sparse(ev, [_AX_PF], extra_keys=["fname"])

@@ -2,10 +2,12 @@
 
 Spark-first re-expression of ``dataframeProcessor``'s column surface
 (``/root/reference/mpes/fprocessing.py:2152-2445``): every operator is
-a pure DataFrame transformation built from native ``Column``
-expressions — they compose lazily and Catalyst fuses the whole chain
-into the binning scan (whole-stage codegen), exactly the fusion the
-reference gets by evaluating the dask graph per partition.
+a pure DataFrame transformation built from native (JVM) expressions —
+they compose lazily and Catalyst fuses the whole chain into the
+binning scan (whole-stage codegen), exactly the fusion the reference
+gets by evaluating the dask graph per partition. Range predicates and
+the threshold marker are written once as SQL text (``*_sql``), which
+Spark parses with one py4j call and the DuckDB oracle runs as is.
 """
 
 from __future__ import annotations
@@ -15,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mpes_spark.sqltext import dlit, qcol
+
 
 def apply_filter(
     df: DataFrame, col: str, lb: float | None = None, ub: float | None = None
@@ -23,12 +27,9 @@ def apply_filter(
     same semantics as ``applyFilter``
     (``/root/reference/mpes/fprocessing.py:2185-2203``). Pushed down to
     the parquet scan by Catalyst."""
-    out = df
-    if lb is not None:
-        out = out.filter(F.col(col) > F.lit(float(lb)))
-    if ub is not None:
-        out = out.filter(F.col(col) < F.lit(float(ub)))
-    return out
+    x = qcol(col)
+    conds = [f"{x} {op} {dlit(v)}" for op, v in ((">", lb), ("<", ub)) if v is not None]
+    return df.filter(" AND ".join(conds)) if conds else df
 
 
 def append_column(df: DataFrame, name: str, expr: Column) -> DataFrame:
@@ -53,7 +54,7 @@ def append_rows(df: DataFrame, *others: DataFrame) -> DataFrame:
 
 
 def multithresh_expr(
-    col: str | Column,
+    col: str,
     lbs: Sequence[float],
     ubs: Sequence[float],
     ths: Sequence[float],
@@ -64,14 +65,7 @@ def multithresh_expr(
     (``/root/reference/mpes/fprocessing.py:2435-2445``; ``multithresh``,
     ``/root/reference/mpes/utils.py:406-420``): first band with
     ``lb < x < ub`` wins."""
-    x = F.col(col) if isinstance(col, str) else col
-    expr: Column | None = None
-    for lb, ub, th in zip(lbs, ubs, ths):
-        cond = (x > F.lit(float(lb))) & (x < F.lit(float(ub)))
-        expr = F.when(cond, F.lit(float(th))) if expr is None else expr.when(cond, F.lit(float(th)))
-    if expr is None:
-        raise ValueError("need at least one threshold band")
-    return expr.otherwise(F.lit(otherwise))
+    return F.expr(multithresh_sql(qcol(col), lbs, ubs, ths, otherwise))
 
 
 def multithresh_sql(
@@ -81,12 +75,13 @@ def multithresh_sql(
     ths: Sequence[float],
     otherwise: float | None = None,
 ) -> str:
-    """Oracle twin of :func:`multithresh_expr`."""
     whens = " ".join(
-        f"WHEN ({col_sql} > {float(lb)!r} AND {col_sql} < {float(ub)!r}) THEN {float(th)!r}"
+        f"WHEN ({col_sql} > {dlit(lb)} AND {col_sql} < {dlit(ub)}) THEN {dlit(th)}"
         for lb, ub, th in zip(lbs, ubs, ths)
     )
-    other = "NULL" if otherwise is None else repr(float(otherwise))
+    if not whens:
+        raise ValueError("need at least one threshold band")
+    other = "NULL" if otherwise is None else dlit(otherwise)
     return f"CASE {whens} ELSE {other} END"
 
 

@@ -6,15 +6,18 @@ Covers the reference's correction surface:
 - projective/homography coordinate transform (``perspectiveTransform``,
   ``/root/reference/mpes/base.py:650-668``; ``applyKCorrection`` type
   'mattrans', ``/root/reference/mpes/fprocessing.py:2345-2376``),
-- thin-plate-spline warp evaluated as column arithmetic
+- thin-plate-spline warp evaluated as one column expression
   (``dask_tps._calculate_f``, ``/root/reference/mpes/dask_tps.py:42-53``),
 - inverse deformation-field lookup (``dfieldapply``,
   ``/root/reference/mpes/base.py:530-539``) as a broadcast join against
   the flattened field, or a broadcast-ndarray pandas UDF.
 
-Everything scalar-parameterized is pure Column arithmetic (JVM-side,
-codegen'd); the dfield lookup is join-shaped so Spark broadcasts the
-(at most 2048x2048-row) table and keeps the probe side shuffle-free.
+Everything scalar-parameterized is one SQL expression per output
+column: the ``*_sql`` function is the one definition of its
+arithmetic, run by DuckDB as is and by Spark through ``F.expr`` (one
+py4j call per column; JVM-side and codegen'd). The dfield lookup is
+join-shaped so Spark broadcasts the (at most 2048x2048-row) table and
+keeps the probe side shuffle-free.
 Scalar constants are folded in Python so the SQL oracle sees identical
 literals.
 """
@@ -29,35 +32,25 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def _flit(v: float) -> str:
-    return repr(float(v))
+from mpes_spark.sqltext import dlit, qcol
 
 
 # ---------------------------------------------------------------------------
 # ToF wavefront corrections (applyECorrection)
 # ---------------------------------------------------------------------------
 
-def _r2(x: Column, y: Column, xc: float, yc: float) -> Column:
-    return (x - F.lit(xc)) * (x - F.lit(xc)) + (y - F.lit(yc)) * (y - F.lit(yc))
-
-
 def _r2_sql(x: str, y: str, xc: float, yc: float) -> str:
     return (
-        f"(({x} - {_flit(xc)}) * ({x} - {_flit(xc)}) + "
-        f"({y} - {_flit(yc)}) * ({y} - {_flit(yc)}))"
+        f"(({x} - {dlit(xc)}) * ({x} - {dlit(xc)}) + "
+        f"({y} - {dlit(yc)}) * ({y} - {dlit(yc)}))"
     )
 
 
 def tof_correction_expr(
     profile: str,
-    t: str | Column = "t",
-    x: str | Column = "X",
-    y: str | Column = "Y",
+    t: str = "t",
+    x: str = "X",
+    y: str = "Y",
     center: tuple[float, float] = (650.0, 650.0),
     amplitude: float = -1.0,
     **kwds,
@@ -66,35 +59,9 @@ def tof_correction_expr(
     profiles of ``applyECorrection``
     (``/root/reference/mpes/fprocessing.py:2286-2343``). ``center`` is
     (row, column) = (ycenter, xcenter), matching the reference."""
-    tcol, xcol, ycol = _c(t), _c(x), _c(y)
-    yc, xc = float(center[0]), float(center[1])
-    amp = float(amplitude)
-
-    if profile == "spherical":
-        d = float(kwds.get("d", 0.9))
-        t0 = float(kwds.get("t0", 0.06))
-        inv_d2 = 1.0 / (d * d)
-        corr = (F.sqrt(F.lit(1.0) + _r2(xcol, ycol, xc, yc) * F.lit(inv_d2)) - F.lit(1.0)) * F.lit(t0 * amp)
-    elif profile == "lorentzian":
-        gam = float(kwds.get("gamma", 300.0))
-        pref = amp / (gam * math.pi) * gam * gam
-        corr = F.lit(pref) / (_r2(xcol, ycol, xc, yc) + F.lit(gam * gam))
-    elif profile == "gaussian":
-        sig = float(kwds.get("sigma", 300.0))
-        pref = amp / math.sqrt(2.0 * math.pi * sig * sig)
-        corr = F.lit(pref) * F.exp(-_r2(xcol, ycol, xc, yc) / F.lit(2.0 * sig * sig))
-    elif profile == "lorentzian_asymmetric":
-        gam = float(kwds.get("gamma", 300.0))
-        gam2 = float(kwds.get("gamma2", 300.0))
-        amp2 = float(kwds.get("amplitude2", -1.0))
-        pref = amp / (gam * math.pi) * gam * gam
-        pref2 = amp2 / (gam2 * math.pi) * gam2 * gam2
-        dy = (ycol - F.lit(yc)) * (ycol - F.lit(yc))
-        dx = (xcol - F.lit(xc)) * (xcol - F.lit(xc))
-        corr = F.lit(pref) / (dy + F.lit(gam * gam)) + F.lit(pref2) / (dx + F.lit(gam2 * gam2))
-    else:
-        raise NotImplementedError(f"unknown ToF correction profile {profile!r}")
-    return tcol + corr
+    return F.expr(
+        tof_correction_sql(profile, qcol(t), qcol(x), qcol(y), center, amplitude, **kwds)
+    )
 
 
 def tof_correction_sql(
@@ -106,7 +73,6 @@ def tof_correction_sql(
     amplitude: float = -1.0,
     **kwds,
 ) -> str:
-    """Oracle twin of :func:`tof_correction_expr`."""
     yc, xc = float(center[0]), float(center[1])
     amp = float(amplitude)
     r2 = _r2_sql(x, y, xc, yc)
@@ -115,26 +81,27 @@ def tof_correction_sql(
         d = float(kwds.get("d", 0.9))
         t0 = float(kwds.get("t0", 0.06))
         inv_d2 = 1.0 / (d * d)
-        corr = f"((sqrt(1.0 + {r2} * {_flit(inv_d2)}) - 1.0) * {_flit(t0 * amp)})"
+        one = dlit(1.0)
+        corr = f"((sqrt({one} + {r2} * {dlit(inv_d2)}) - {one}) * {dlit(t0 * amp)})"
     elif profile == "lorentzian":
         gam = float(kwds.get("gamma", 300.0))
         pref = amp / (gam * math.pi) * gam * gam
-        corr = f"({_flit(pref)} / ({r2} + {_flit(gam * gam)}))"
+        corr = f"({dlit(pref)} / ({r2} + {dlit(gam * gam)}))"
     elif profile == "gaussian":
         sig = float(kwds.get("sigma", 300.0))
         pref = amp / math.sqrt(2.0 * math.pi * sig * sig)
-        corr = f"({_flit(pref)} * exp(-{r2} / {_flit(2.0 * sig * sig)}))"
+        corr = f"({dlit(pref)} * exp(-{r2} / {dlit(2.0 * sig * sig)}))"
     elif profile == "lorentzian_asymmetric":
         gam = float(kwds.get("gamma", 300.0))
         gam2 = float(kwds.get("gamma2", 300.0))
         amp2 = float(kwds.get("amplitude2", -1.0))
         pref = amp / (gam * math.pi) * gam * gam
         pref2 = amp2 / (gam2 * math.pi) * gam2 * gam2
-        dy = f"(({y} - {_flit(yc)}) * ({y} - {_flit(yc)}))"
-        dx = f"(({x} - {_flit(xc)}) * ({x} - {_flit(xc)}))"
+        dy = f"(({y} - {dlit(yc)}) * ({y} - {dlit(yc)}))"
+        dx = f"(({x} - {dlit(xc)}) * ({x} - {dlit(xc)}))"
         corr = (
-            f"({_flit(pref)} / ({dy} + {_flit(gam * gam)}) + "
-            f"{_flit(pref2)} / ({dx} + {_flit(gam2 * gam2)}))"
+            f"({dlit(pref)} / ({dy} + {dlit(gam * gam)}) + "
+            f"{dlit(pref2)} / ({dx} + {dlit(gam2 * gam2)}))"
         )
     else:
         raise NotImplementedError(f"unknown ToF correction profile {profile!r}")
@@ -145,41 +112,29 @@ def tof_correction_sql(
 # Homography (perspective transform)
 # ---------------------------------------------------------------------------
 
-def perspective_expr(
-    x: str | Column, y: str | Column, M: Sequence[Sequence[float]]
-) -> tuple[Column, Column]:
+def perspective_expr(x: str, y: str, M: Sequence[Sequence[float]]) -> tuple[Column, Column]:
     """Projective transform ``(x, y) -> ((M00 x + M01 y + M02)/den, ...)``
     with ``den = M20 x + M21 y + M22`` (``perspectiveTransform``,
     ``/root/reference/mpes/base.py:650-668``)."""
-    M = np.asarray(M, dtype=float)
-    xcol, ycol = _c(x), _c(y)
-    den = F.lit(M[2, 0]) * xcol + F.lit(M[2, 1]) * ycol + F.lit(M[2, 2])
-    xt = (F.lit(M[0, 0]) * xcol + F.lit(M[0, 1]) * ycol + F.lit(M[0, 2])) / den
-    yt = (F.lit(M[1, 0]) * xcol + F.lit(M[1, 1]) * ycol + F.lit(M[1, 2])) / den
-    return xt, yt
+    xt, yt = perspective_sql(qcol(x), qcol(y), M)
+    return F.expr(xt), F.expr(yt)
 
 
 def perspective_sql(x: str, y: str, M: Sequence[Sequence[float]]) -> tuple[str, str]:
     M = np.asarray(M, dtype=float)
-    den = f"({_flit(M[2,0])} * {x} + {_flit(M[2,1])} * {y} + {_flit(M[2,2])})"
-    xt = f"(({_flit(M[0,0])} * {x} + {_flit(M[0,1])} * {y} + {_flit(M[0,2])}) / {den})"
-    yt = f"(({_flit(M[1,0])} * {x} + {_flit(M[1,1])} * {y} + {_flit(M[1,2])}) / {den})"
+    den = f"({dlit(M[2,0])} * {x} + {dlit(M[2,1])} * {y} + {dlit(M[2,2])})"
+    xt = f"(({dlit(M[0,0])} * {x} + {dlit(M[0,1])} * {y} + {dlit(M[0,2])}) / {den})"
+    yt = f"(({dlit(M[1,0])} * {x} + {dlit(M[1,1])} * {y} + {dlit(M[1,2])}) / {den})"
     return xt, yt
 
 
 # ---------------------------------------------------------------------------
-# Thin-plate-spline warp as column arithmetic
+# Thin-plate-spline warp
 # ---------------------------------------------------------------------------
 
-def tps_expr(
-    x: str | Column,
-    y: str | Column,
-    coeffs: np.ndarray,
-    points: np.ndarray,
-    which: int = 0,
-) -> Column:
-    """Evaluate a fitted TPS warp for one output coordinate as pure
-    column math: ``a1 + ax*x + ay*y + sum_i w_i * U(r_i)`` with
+def tps_expr(x: str, y: str, coeffs: np.ndarray, points: np.ndarray, which: int = 0) -> Column:
+    """Evaluate a fitted TPS warp for one output coordinate as one
+    column expression: ``a1 + ax*x + ay*y + sum_i w_i * U(r_i)`` with
     ``U(r) = r^2 * ln(r)`` (Bookstein; ``_calculate_f`` /
     ``_U_dask``, ``/root/reference/mpes/dask_tps.py:26-53``). ``coeffs``
     is the (n+3, 2) solution of :func:`mpes_spark.calibrate.tps.tps_coeffs`;
@@ -191,15 +146,7 @@ def tps_expr(
     double noise for any physical r2. Branch-free matters: the WHEN
     form doubled the expression tree and, multiplied across bin
     filters, pushed whole-stage codegen past its compile budget."""
-    xcol, ycol = _c(x), _c(y)
-    co = np.asarray(coeffs, dtype=float)[:, which]
-    w, (a1, ax, ay) = co[:-3], co[-3:]
-    expr: Column = F.lit(float(a1)) + F.lit(float(ax)) * xcol + F.lit(float(ay)) * ycol
-    for wi, (px, py) in zip(w, np.asarray(points, dtype=float)):
-        r2 = _r2(xcol, ycol, float(px), float(py))
-        u = F.lit(0.5) * r2 * F.log(r2 + F.lit(5e-324))
-        expr = expr + F.lit(float(wi)) * u
-    return expr
+    return F.expr(tps_sql(qcol(x), qcol(y), coeffs, points, which))
 
 
 def tps_sql(
@@ -207,11 +154,11 @@ def tps_sql(
 ) -> str:
     co = np.asarray(coeffs, dtype=float)[:, which]
     w, (a1, ax, ay) = co[:-3], co[-3:]
-    terms = [f"{_flit(a1)} + {_flit(ax)} * {x} + {_flit(ay)} * {y}"]
+    terms = [f"{dlit(a1)} + {dlit(ax)} * {x} + {dlit(ay)} * {y}"]
     for wi, (px, py) in zip(w, np.asarray(points, dtype=float)):
         r2 = _r2_sql(x, y, float(px), float(py))
-        u = f"(0.5 * {r2} * ln({r2} + 5e-324))"
-        terms.append(f"{_flit(wi)} * {u}")
+        u = f"({dlit(0.5)} * {r2} * ln({r2} + {dlit(5e-324)}))"
+        terms.append(f"{dlit(wi)} * {u}")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -269,18 +216,12 @@ def apply_dfield_join(
     ``/root/reference/mpes/base.py:538``). The lookup table is at most
     2048^2 rows (96 MiB raw, see ``DFIELD_BROADCAST_BUDGET_BYTES``) —
     always broadcastable; the event side stays shuffle-free."""
-    keyed = df.withColumn("_xi", F.col(x).cast("int")).withColumn(
-        "_yi", F.col(y).cast("int")
+    keyed = df.withColumns(
+        {"_xi": F.expr(f"CAST({qcol(x)} AS INT)"), "_yi": F.expr(f"CAST({qcol(y)} AS INT)")}
     )
-    out = keyed.join(
-        F.broadcast(lookup),
-        (F.col("_xi") == F.col("xi")) & (F.col("_yi") == F.col("yi")),
-        "left",
-    )
-    return (
-        out.withColumn(new_x, F.col("newX"))
-        .withColumn(new_y, F.col("newY"))
-        .drop("_xi", "_yi", "xi", "yi", "newX", "newY")
+    out = keyed.join(F.broadcast(lookup), F.expr("_xi = xi AND _yi = yi"), "left")
+    return out.withColumns({new_x: F.col("newX"), new_y: F.col("newY")}).drop(
+        "_xi", "_yi", "xi", "yi", "newX", "newY"
     )
 
 
@@ -321,8 +262,4 @@ def apply_dfield_udf(
         return pd.DataFrame({"nx": nx, "ny": ny})
 
     out = df.withColumn("_m", _lookup(F.col(x), F.col(y)))
-    return (
-        out.withColumn(new_x, F.col("_m.nx"))
-        .withColumn(new_y, F.col("_m.ny"))
-        .drop("_m")
-    )
+    return out.withColumns({new_x: F.col("_m.nx"), new_y: F.col("_m.ny")}).drop("_m")

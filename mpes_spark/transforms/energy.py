@@ -1,10 +1,11 @@
 """Energy-axis calibration transforms: time-of-flight -> energy.
 
-Column-expression factories parameterized by fitted calibration
-coefficients — the Spark analog of the reference's ``MapParser``
-partial-function pattern (``/root/reference/mpes/base.py:280-286``).
-Each factory has a ``*_sql`` twin emitting the identical arithmetic so
-the DuckDB oracle performs the same IEEE-754 double operations.
+Column factories parameterized by fitted calibration coefficients —
+the Spark analog of the reference's ``MapParser`` partial-function
+pattern (``/root/reference/mpes/base.py:280-286``). Each ``*_sql``
+function is the one definition of its arithmetic: the Spark column is
+``F.expr`` of it, and the DuckDB oracle runs the same text, so both
+engines perform the same IEEE-754 double operations.
 """
 
 from __future__ import annotations
@@ -14,40 +15,34 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from mpes_spark.sqltext import dlit, qcol
+
 #: electron rest mass / 2 in eV * s^2/m^2 as used by the reference
 #: (``tof2ev``, /root/reference/mpes/base.py:435-458)
 _ME_HALF = 2.84281e-12
 
 
-def _flit(v: float) -> str:
-    return repr(float(v))
-
-
-def tof2ev_poly_expr(a: Sequence[float], E0: float, t: str | Column = "t") -> Column:
+def tof2ev_poly_expr(a: Sequence[float], E0: float, t: str = "t") -> Column:
     """Polynomial ToF->energy: ``E = sum_{d=1..n} a_d * t^d + E0``
     with ``a`` given highest-order first (``tof2evpoly``,
-    ``/root/reference/mpes/base.py:406-432``). Evaluated as a Horner
-    chain — pure column arithmetic, no UDF."""
-    x = F.col(t) if isinstance(t, str) else t
-    # Horner: E = ((...(a_n)*t + a_{n-1})*t + ... + a_1)*t + E0
-    expr: Column = F.lit(float(a[0]))
-    for c in list(a)[1:]:
-        expr = expr * x + F.lit(float(c))
-    return expr * x + F.lit(float(E0))
+    ``/root/reference/mpes/base.py:406-432``), evaluated as a Horner
+    chain, no UDF."""
+    return F.expr(tof2ev_poly_sql(a, E0, qcol(t)))
 
 
 def tof2ev_poly_sql(a: Sequence[float], E0: float, t_sql: str = "t") -> str:
-    expr = _flit(a[0])
+    # Horner: E = ((...(a_n)*t + a_{n-1})*t + ... + a_1)*t + E0
+    expr = dlit(a[0])
     for c in list(a)[1:]:
-        expr = f"(({expr}) * {t_sql} + {_flit(c)})"
-    return f"(({expr}) * {t_sql} + {_flit(E0)})"
+        expr = f"(({expr}) * {t_sql} + {dlit(c)})"
+    return f"(({expr}) * {t_sql} + {dlit(E0)})"
 
 
 def tof2ev_expr(
     d: float,
     t0: float,
     E0: float,
-    t: str | Column = "t",
+    t: str = "t",
     binwidth: float = 4.125e-12,
     binning: int = 1,
 ) -> Column:
@@ -56,16 +51,13 @@ def tof2ev_expr(
     The square is written as a self-product so Spark and the SQL oracle
     execute the same multiply (no libm pow).
 
-    Division is NULL-safe (``try_divide``): a time exactly at ``t0``
-    yields NULL, which the bin-range filter then drops — mirroring the
+    Division is NULL-safe (``NULLIF``): a time exactly at ``t0`` yields
+    NULL, which the bin-range filter then drops — mirroring the
     reference's numpy ``inf`` falling out of the histogram range
     (``/root/reference/mpes/base.py:435-458``). Under Spark 4 ANSI mode
-    a raw ``/`` would instead abort the whole job on the first zero
-    denominator (observed at sf0.1)."""
-    x = F.col(t) if isinstance(t, str) else t
-    scale = float(binwidth) * float(2**binning)
-    q = F.try_divide(F.lit(float(d)), x * F.lit(scale) - F.lit(float(t0)))
-    return F.lit(_ME_HALF) * q * q + F.lit(float(E0))
+    a raw zero denominator would instead abort the whole job (observed
+    at sf0.1)."""
+    return F.expr(tof2ev_sql(d, t0, E0, qcol(t), binwidth, binning))
 
 
 def tof2ev_sql(
@@ -77,7 +69,5 @@ def tof2ev_sql(
     binning: int = 1,
 ) -> str:
     scale = float(binwidth) * float(2**binning)
-    # NULLIF mirrors Spark's try_divide: zero denominator -> NULL row,
-    # dropped by the bin-range filter on both engines.
-    q = f"({_flit(d)} / NULLIF({t_sql} * {_flit(scale)} - {_flit(t0)}, 0.0))"
-    return f"({_flit(_ME_HALF)} * {q} * {q} + {_flit(E0)})"
+    q = f"({dlit(d)} / NULLIF({t_sql} * {dlit(scale)} - {dlit(t0)}, {dlit(0.0)}))"
+    return f"({dlit(_ME_HALF)} * {q} * {q} + {dlit(E0)})"

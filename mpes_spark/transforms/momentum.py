@@ -1,7 +1,8 @@
 """Momentum-axis calibration transforms: detector/image pixels -> k.
 
-All pure linear column arithmetic (``/root/reference/mpes/base.py:
-461-527``), with SQL twins for the DuckDB oracle.
+All linear arithmetic (``/root/reference/mpes/base.py:461-527``). Each
+``*_sql`` function is the one definition of its arithmetic, run by
+DuckDB as is and by Spark through ``F.expr``.
 """
 
 from __future__ import annotations
@@ -9,37 +10,29 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def _flit(v: float) -> str:
-    return repr(float(v))
+from mpes_spark.sqltext import dlit, qcol
 
 
 def imxy2kxy_expr(
-    x: str | Column, y: str | Column, x0: float, y0: float, fx: float, fy: float
+    x: str, y: str, x0: float, y0: float, fx: float, fy: float
 ) -> tuple[Column, Column]:
     """Binned-image (x, y) -> (kx, ky): ``k = f * (p - p0)``
     (``imxy2kxy``, ``/root/reference/mpes/base.py:461-477``; ``imrc2krc``
     ``:506-514`` is the same form in row/col order)."""
-    return (
-        F.lit(float(fx)) * (_c(x) - F.lit(float(x0))),
-        F.lit(float(fy)) * (_c(y) - F.lit(float(y0))),
-    )
+    kx, ky = imxy2kxy_sql(qcol(x), qcol(y), x0, y0, fx, fy)
+    return F.expr(kx), F.expr(ky)
 
 
 def imxy2kxy_sql(x: str, y: str, x0: float, y0: float, fx: float, fy: float) -> tuple[str, str]:
     return (
-        f"({_flit(fx)} * ({x} - {_flit(x0)}))",
-        f"({_flit(fy)} * ({y} - {_flit(y0)}))",
+        f"({dlit(fx)} * ({x} - {dlit(x0)}))",
+        f"({dlit(fy)} * ({y} - {dlit(y0)}))",
     )
 
 
 def detxy2kxy_expr(
-    xdet: str | Column,
-    ydet: str | Column,
+    xdet: str,
+    ydet: str,
     xstart: float,
     ystart: float,
     x0: float,
@@ -55,11 +48,10 @@ def detxy2kxy_expr(
     is the row/col-ordered variant). The binned-center offset
     ``start + step*p0`` is folded into a Python-side constant so both
     engines see one literal."""
-    xdet0 = float(xstart) + float(xstep) * float(x0)
-    ydet0 = float(ystart) + float(ystep) * float(y0)
-    kx = F.lit(float(fx)) * ((_c(xdet) - F.lit(xdet0)) / F.lit(float(xstep)))
-    ky = F.lit(float(fy)) * ((_c(ydet) - F.lit(ydet0)) / F.lit(float(ystep)))
-    return kx, ky
+    kx, ky = detxy2kxy_sql(
+        qcol(xdet), qcol(ydet), xstart, ystart, x0, y0, fx, fy, xstep, ystep
+    )
+    return F.expr(kx), F.expr(ky)
 
 
 def detxy2kxy_sql(
@@ -77,6 +69,6 @@ def detxy2kxy_sql(
     xdet0 = float(xstart) + float(xstep) * float(x0)
     ydet0 = float(ystart) + float(ystep) * float(y0)
     return (
-        f"({_flit(fx)} * (({xdet} - {_flit(xdet0)}) / {_flit(xstep)}))",
-        f"({_flit(fy)} * (({ydet} - {_flit(ydet0)}) / {_flit(ystep)}))",
+        f"({dlit(fx)} * (({xdet} - {dlit(xdet0)}) / {dlit(xstep)}))",
+        f"({dlit(fy)} * (({ydet} - {dlit(ydet0)}) / {dlit(ystep)}))",
     )

@@ -143,6 +143,42 @@ def test_tps_expr_matches_numpy_eval(spark):
 
 # -- inverse deformation field --------------------------------------------
 
+def test_double_literal_is_the_same_double_in_spark_duckdb_and_numpy(spark):
+    """A 17-significant-digit coefficient rendered by ``dlit`` parses to
+    the identical double in Spark and DuckDB (typed DOUBLE in both, not
+    DECIMAL), so the energy polynomial built from it evaluates
+    bit-identically in Spark (``F.expr``), DuckDB and numpy."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from mpes_spark.sqltext import dlit
+    from mpes_spark.transforms.energy import tof2ev_poly_expr, tof2ev_poly_sql
+
+    a = [-2.0000000000000004e-10, -1.3049333333333333e-03]
+    e0, t = 91.66, 68123.456789012345
+    want = (np.float64(a[0]) * t + a[1]) * t + e0
+    row = (
+        spark.createDataFrame([(t,)], "t double")
+        .select(
+            tof2ev_poly_expr(a, e0).alias("E"),
+            F.expr(f"{dlit(a[1])}").alias("c"),
+            F.expr(f"typeof({dlit(a[1])})").alias("ty"),
+        )
+        .collect()[0]
+    )
+    con = duckdb.connect()
+    try:
+        e_duck, c_duck, ty_duck = con.execute(
+            f"SELECT {tof2ev_poly_sql(a, e0)}, {dlit(a[1])}, typeof({dlit(a[1])}) "
+            f"FROM (SELECT {dlit(t)} AS t)"
+        ).fetchone()
+    finally:
+        con.close()
+    assert (row.ty, ty_duck) == ("double", "DOUBLE")
+    assert np.float64(row.c).tobytes() == np.float64(c_duck).tobytes() == np.float64(a[1]).tobytes()
+    assert np.float64(row.E).tobytes() == np.float64(e_duck).tobytes() == want.tobytes()
+
+
 def test_generate_dfield_inverts_shift():
     """Forward field = identity + constant shift -> inverse must be
     identity - shift (away from the NaN boundary)."""

@@ -40,6 +40,59 @@ def test_event_table_roundtrip(spark, tmp_path, form):
     assert all(abs(got[k] - want[k]) < 1e-9 for k in want)
 
 
+def _jobs(spark, group, fn):
+    """(fn's result, the number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_table_infers_an_unchanged_source_once(spark, tmp_path):
+    """The first read of a directory infers its schema with a Spark job;
+    a second read of the unchanged directory runs none and returns the
+    same schema and rows."""
+    out = str(tmp_path / "ev")
+    spark.range(100).selectExpr("id", "id * 0.5 AS x").write.parquet(out)
+    first, jobs_first = _jobs(spark, "read-first", lambda: read_table(spark, out))
+    second, jobs_second = _jobs(spark, "read-second", lambda: read_table(spark, out))
+    assert jobs_first >= 1
+    assert jobs_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_read_table_reinfers_a_rewritten_source(spark, tmp_path):
+    """A directory rewritten with an added column is inferred again: the
+    file listing is part of the reuse key."""
+    out = str(tmp_path / "ev")
+    spark.range(10).selectExpr("id", "id * 0.5 AS x").write.parquet(out)
+    assert read_table(spark, out).columns == ["id", "x"]
+    spark.range(10).selectExpr("id", "id * 0.5 AS x", "id + 1 AS y").write.mode(
+        "overwrite"
+    ).parquet(out)
+    back = read_table(spark, out)
+    assert back.columns == ["id", "x", "y"]
+    assert sorted(r.y for r in back.collect()) == list(range(1, 11))
+
+
+def test_read_table_options_do_not_share_a_schema(spark, tmp_path):
+    """Reads of one source with different reader options keep their own
+    schemas: ``mergeSchema`` unions the two files' columns, a plain read
+    before and after it does not."""
+    out = tmp_path / "ev"
+    spark.range(5).selectExpr("id", "id AS a").write.parquet(str(out / "part=1"))
+    spark.range(5).selectExpr("id", "id AS b").write.parquet(str(out / "part=2"))
+    plain = set(read_table(spark, str(out)).columns)
+    merged = set(read_table(spark, str(out), mergeSchema="true").columns)
+    assert merged == {"id", "a", "b", "part"}
+    assert plain != merged
+    assert set(read_table(spark, str(out)).columns) == plain
+
+
 def test_partitioned_write_prunes(spark, tmp_path):
     ev = t(spark, SF_SMALL, "events").select("event_id", "event_type", "value")
     out = str(tmp_path / "part")

@@ -3,10 +3,12 @@ storage cleared, gc settled, collect() on the (small-aggregate) result.
 
     python tools/time_query.py <reps> <name> [name ...]
 
-Prints per-rep seconds and Spark job count, and the median per query.
-Jobs are counted by job group, as ``tests/test_plans.py`` counts them:
-every job that building and collecting the query ran. Honors
-$SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS like bench.py.
+Prints per-rep seconds split into build (the registry call, including
+any eager jobs it runs) and collect, and the Spark job count; then the
+medians per query. Jobs are counted by job group, as
+``tests/test_plans.py`` counts them: every job that building and
+collecting the query ran. Honors $SPARK_GRAFT_SF_DIR and
+$SPARK_GRAFT_CPUS like bench.py.
 """
 
 import os
@@ -24,7 +26,7 @@ def main() -> None:
     names = sys.argv[2:]
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    samples: dict[str, list[float]] = {n: [] for n in names}
+    samples: dict[str, list[tuple[float, float, float]]] = {n: [] for n in names}
     jobs: dict[str, list[int]] = {n: [] for n in names}
     for r in range(reps):
         spark = get_spark(
@@ -44,20 +46,27 @@ def main() -> None:
             group = f"time:{name}:rep{r}"
             spark.sparkContext.setJobGroup(group, group)
             t0 = time.perf_counter()
-            q[name](spark, sf).collect()
-            dt = time.perf_counter() - t0
+            df = q[name](spark, sf)
+            t1 = time.perf_counter()
+            df.collect()
+            t2 = time.perf_counter()
             spark.sparkContext._jsc.clearJobGroup()
             n_jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-            samples[name].append(dt)
+            samples[name].append((t2 - t0, t1 - t0, t2 - t1))
             jobs[name].append(n_jobs)
-            print(f"rep{r} {name:36s} {dt:8.3f}s {n_jobs:4d} jobs", flush=True)
+            print(
+                f"rep{r} {name:36s} {t2 - t0:8.3f}s build={t1 - t0:.3f}s "
+                f"collect={t2 - t1:.3f}s {n_jobs:4d} jobs",
+                flush=True,
+            )
         spark.stop()
     print("--- medians ---")
     for n in names:
-        s = sorted(samples[n])
+        total, build, collect = (sorted(v) for v in zip(*samples[n]))
         print(
-            f"{n:36s} median={statistics.median(s):8.3f}  "
-            f"min={s[0]:.3f} max={s[-1]:.3f}  "
+            f"{n:36s} median={statistics.median(total):8.3f}  "
+            f"min={total[0]:.3f} max={total[-1]:.3f}  "
+            f"build={statistics.median(build):.3f} collect={statistics.median(collect):.3f}  "
             f"jobs={statistics.median(jobs[n]):g}"
         )
 

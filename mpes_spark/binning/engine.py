@@ -182,6 +182,15 @@ def densify(
     size) and scatter into a dense zero-filled ndarray with labeled
     midpoint axes — the engine's equivalent of the reference's
     ``histdict`` (``/root/reference/mpes/fprocessing.py:1199-1210``)."""
+    _grid_shape(axes)  # refuse an oversized grid before collecting
+    cols = [ax.out for ax in axes] + [count_name]
+    pdf = sparse.select(*cols).toPandas()
+    return scatter_counts(pdf, axes, count_name, dtype=dtype)
+
+
+def _grid_shape(axes: Sequence[BinAxis]) -> tuple[int, ...]:
+    """The dense grid's shape; raises for a grid too large for the
+    driver."""
     shape = tuple(ax.nbins for ax in axes)
     ncells = int(np.prod(shape))
     if ncells > 200_000_000:
@@ -189,9 +198,22 @@ def densify(
             f"dense grid of {ncells} cells would not fit on the driver; "
             "keep the result sparse or coarsen the grid"
         )
-    cols = [ax.out for ax in axes] + [count_name]
-    pdf = sparse.select(*cols).toPandas()
-    data = np.zeros(shape, dtype=dtype)
+    return shape
+
+
+def scatter_counts(
+    pdf,
+    axes: Sequence[BinAxis],
+    count_name: str = "cnt",
+    into: np.ndarray | None = None,
+    dtype: str = "float64",
+    **attrs,
+) -> BinnedArray:
+    """Scatter collected sparse (bin..., count) rows into a dense grid
+    and label its axes with the bin midpoints. The grid is a fresh
+    zero-filled one unless ``into`` (an earlier grid, updated in place)
+    is given; ``attrs`` join the ``units`` attribute."""
+    data = np.zeros(_grid_shape(axes), dtype=dtype) if into is None else into
     if len(pdf):
         idx = tuple(pdf[ax.out].to_numpy(dtype="int64") for ax in axes)
         data[idx] = pdf[count_name].to_numpy()
@@ -199,7 +221,7 @@ def densify(
         data=data,
         dims=[ax.out for ax in axes],
         coords={ax.out: ax.centers() for ax in axes},
-        attrs={"units": "counts"},
+        attrs={"units": "counts", **attrs},
     )
 
 

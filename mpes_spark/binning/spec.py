@@ -14,8 +14,9 @@ This is the reference's numba-kernel behavior
 ``np.histogramdd`` path disagrees at the right edge — see SURVEY §2.3).
 We pick one rule because it is exactly expressible as ANSI SQL that
 Spark and the DuckDB oracle both run: ``index_sql`` is the one
-definition of the bin arithmetic and ``index_expr`` is ``F.expr`` of
-it, so both engines perform the same IEEE-754 double ops.
+definition of the bin arithmetic, which the batch engine, its live
+(streaming) twin and the oracle all parse, so every engine performs
+the same IEEE-754 double ops.
 """
 
 from __future__ import annotations
@@ -23,10 +24,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-from mpes_spark.sqltext import dlit, qcol
+from mpes_spark.sqltext import dlit
 
 
 @dataclass(frozen=True)
@@ -58,10 +57,6 @@ class BinAxis:
 
     # ---- expression factories (one SQL definition, both engines) ----
 
-    def index_expr(self) -> Column:
-        """Spark bin-index column: floor((x - lo) / step) as BIGINT."""
-        return F.expr(self.index_sql(qcol(self.col)))
-
     def index_sql(self, col_sql: str | None = None) -> str:
         x = col_sql or self.col
         return f"CAST(floor(({x} - {dlit(self.lo)}) / {dlit(self.step)}) AS BIGINT)"
@@ -70,9 +65,6 @@ class BinAxis:
         """The half-open value rule ``lo <= x < hi``."""
         x = col_sql or self.col
         return f"({x} >= {dlit(self.lo)} AND {x} < {dlit(self.hi)})"
-
-    def in_range_expr(self, bin_col: Column) -> Column:
-        return (bin_col >= 0) & (bin_col < self.nbins)
 
     def in_range_sql(self, bin_sql: str) -> str:
         return f"({bin_sql} >= 0 AND {bin_sql} < {self.nbins})"

@@ -12,7 +12,7 @@ the same boundary-NaN semantics the reference leaves in place
 (base.py:570-572, their open TODO).
 
 The result feeds :func:`mpes_spark.transforms.corrections.dfield_table`
-(broadcast-join application) or ``apply_dfield_udf``.
+(broadcast-join application).
 """
 
 from __future__ import annotations

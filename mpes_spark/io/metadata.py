@@ -16,7 +16,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mpes_spark.pipeline import EventPipeline
+from mpes_spark.io.readers import normalize_event_time
+from mpes_spark.sqltext import qcol
 
 
 def resolve_aperture(value: float, intervals: list[tuple[float, float, str]]) -> str | None:
@@ -50,17 +51,17 @@ def gather_metadata(
 ) -> dict:
     """Assemble the metadata dict in one scan: a single per-type
     groupBy carries count + min/max ts per group; totals and elapsed
-    time reduce from those few rows on the driver."""
-    is_long = EventPipeline(events)._ts_is_long(ts)
-    lo_ex = F.expr(f"min({ts}) div 1000") if is_long else F.unix_micros(F.min(ts))
-    hi_ex = F.expr(f"max({ts}) div 1000") if is_long else F.unix_micros(F.max(ts))
+    time reduce from those few rows on the driver. ``ts`` is read as
+    epoch-nanos (:func:`~mpes_spark.io.readers.normalize_event_time`)."""
+    x = qcol(ts)
     keys = ["event_type"] if "event_type" in events.columns else []
     rows = (
-        events.groupBy(*keys)
+        normalize_event_time(events, ts)
+        .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            lo_ex.alias("lo_us"),
-            hi_ex.alias("hi_us"),
+            F.expr(f"min({x}) div 1000 AS lo_us"),
+            F.expr(f"max({x}) div 1000 AS hi_us"),
         )
         .collect()
     )

@@ -27,6 +27,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mpes_spark.sqltext import qcol
+
 
 def _natural_key(path: str):
     """Natural sort key (digit runs compare numerically) — replaces
@@ -87,9 +89,11 @@ class FileCollection:
         return read_table(spark, self.files, **kw)
 
 
-def normalize_event_time(df: DataFrame) -> DataFrame:
-    """Restore the repo-wide event-time contract: ``ts`` is an
-    epoch-NANOSECOND BIGINT.
+def normalize_event_time(df: DataFrame, ts: str = "ts") -> DataFrame:
+    """Restore the repo-wide event-time contract: the event-time
+    column ``ts`` is an epoch-NANOSECOND BIGINT. This is the one
+    converter from TIMESTAMP / TIMESTAMP_NTZ; a column of any other
+    type is left as it is.
 
     The synthetic event tables have shipped as both TIMESTAMP(NANOS)
     parquet (which Spark 4 reads as nanosecond longs under
@@ -102,17 +106,17 @@ def normalize_event_time(df: DataFrame) -> DataFrame:
     yields the same integers for either physical type). Converting at
     the read seam is a pure column projection (no shuffle, survives
     pushdown of predicates on other columns)."""
-    dt = dict(df.dtypes).get("ts")
+    dt = dict(df.dtypes).get(ts)
     if dt == "timestamp_ntz":
         # wall-time arithmetic: timezone-independent (a cast to LTZ
         # would shift the epoch under any non-UTC session timezone —
         # including the driver's, which this library does not control)
         micros = F.expr(
-            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {qcol(ts)})"
         )
-        df = df.withColumn("ts", (micros * F.lit(1000)).cast("long"))
+        df = df.withColumn(ts, (micros * F.lit(1000)).cast("long"))
     elif dt == "timestamp":
-        df = df.withColumn("ts", (F.unix_micros("ts") * F.lit(1000)).cast("long"))
+        df = df.withColumn(ts, (F.unix_micros(F.col(ts)) * F.lit(1000)).cast("long"))
     return df
 
 

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 
 from mpes_spark.binning.spec import BinAxis, axes_from_triples
 from mpes_spark.grid.binned import BinnedArray
+from mpes_spark.io.readers import normalize_event_time
+from mpes_spark.sqltext import qcol
 from mpes_spark.transforms import columns as C
 from mpes_spark.transforms import corrections as X
 from mpes_spark.transforms import energy as E
@@ -91,13 +93,19 @@ class EventPipeline:
         xt, yt = (X.tps_expr(x, y, coeffs, points, which=w) for w in (0, 1))
         return self._wrap(self.df.withColumns({out_x: xt, out_y: yt}))
 
-    def apply_dfield(self, dfield: np.ndarray, how: str = "udf", **kw):
+    def apply_dfield(self, dfield: np.ndarray, how: str = "join", **kw):
         """``applyKCorrection`` type='tps_matrix' -> ``dfieldapply``
-        (/root/reference/mpes/base.py:530-539)."""
-        if how == "join":
-            lookup = X.dfield_table(self.df.sparkSession, dfield)
-            return self._wrap(X.apply_dfield_join(self.df, lookup, **kw))
-        return self._wrap(X.apply_dfield_udf(self.df, dfield, **kw))
+        (reference ``mpes/base.py:530-539``) as a broadcast join
+        against the flattened (2, H, W) field
+        (:func:`~mpes_spark.transforms.corrections.apply_dfield_join`).
+        An event outside the field (a negative pixel index, or one
+        past H or W) and an event on a NaN cell of the field get NULL
+        corrected coordinates, which binning drops. ``"join"`` is the
+        only ``how``."""
+        if how != "join":
+            raise ValueError(f"unsupported dfield method {how!r}; only 'join'")
+        lookup = X.dfield_table(self.df.sparkSession, dfield)
+        return self._wrap(X.apply_dfield_join(self.df, lookup, **kw))
 
     # -- the aggregation (SURVEY §2.3) ------------------------------------
 
@@ -124,13 +132,6 @@ class EventPipeline:
         return bin_sparse(self.df, axes, **kw)
 
     # -- diagnostics (viewEventHistogram / count rate, SURVEY §2.3) -------
-
-    def _ts_is_long(self, ts: str) -> bool:
-        """True when ``ts`` carries epoch-nanos longs — the type every
-        engine load path produces for TIMESTAMP(NANOS) parquet under
-        ``spark.sql.legacy.parquet.nanosAsLong`` (see session.py)."""
-        dt = dict(self.df.dtypes).get(ts)
-        return dt in ("bigint", "int", "smallint", "tinyint")
 
     def view_event_histogram(
         self,
@@ -181,41 +182,27 @@ class EventPipeline:
     def count_rate(self, ts: str = "ts", unit: str = "1 second") -> DataFrame:
         """Events/interval trace (``getCountRate``,
         /root/reference/mpes/fprocessing.py:1086-1108): event-time
-        tumbling-window counts. Works on both TIMESTAMP columns
-        (``F.window``) and the epoch-nanos longs the engine's own
-        readers produce (floor-division tumbling windows); output
-        ``win_start`` is epoch-nanos in both cases so downstream code
-        sees one schema."""
-        if self._ts_is_long(ts):
-            width_ns = _interval_ns(unit)
-            # integer div: epoch-nanos exceed 2^53, double floor-divide
-            # would misbucket events within ~256 ns of a boundary
-            win = F.expr(f"({ts} div {width_ns}) * {width_ns}")
-            return (
-                self.df.groupBy(win.alias("win_start"))
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
+        tumbling-window counts over epoch-nanos ``ts`` (a TIMESTAMP
+        column is converted by
+        :func:`~mpes_spark.io.readers.normalize_event_time` first);
+        ``win_start`` is epoch-nanos."""
+        width_ns = _interval_ns(unit)
+        # integer div: epoch-nanos exceed 2^53, double floor-divide
+        # would misbucket events within ~256 ns of a boundary
+        win = F.expr(f"({qcol(ts)} div {width_ns}) * {width_ns}")
         return (
-            self.df.groupBy(F.window(F.col(ts), unit).alias("w"))
+            normalize_event_time(self.df, ts)
+            .groupBy(win.alias("win_start"))
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(
-                (F.unix_micros(F.col("w.start")) * F.lit(1000)).alias("win_start"),
-                "cnt",
-            )
         )
 
     def elapsed_time(self, ts: str = "ts") -> DataFrame:
         """Scan duration in microseconds (``getElapsedTime``,
         /root/reference/mpes/fprocessing.py:1110-1119). Integer
-        arithmetic on the nanos path (ns magnitudes exceed 2^53)."""
-        if self._ts_is_long(ts):
-            return self.df.agg(
-                F.expr(f"(max({ts}) div 1000) - (min({ts}) div 1000)").alias(
-                    "elapsed_us"
-                )
-            )
-        return self.df.agg(
-            (F.unix_micros(F.max(ts)) - F.unix_micros(F.min(ts))).alias("elapsed_us")
+        arithmetic on epoch-nanos (ns magnitudes exceed 2^53)."""
+        x = qcol(ts)
+        return normalize_event_time(self.df, ts).agg(
+            F.expr(f"(max({x}) div 1000) - (min({x}) div 1000)").alias("elapsed_us")
         )
 
     # -- time-series analytics over the event stream (nanos ts path) -----

@@ -3,13 +3,16 @@ reference is batch-only but its data IS an event stream with
 reconstructed event time).
 
 Operators:
-- ``live_binning``: event-time tumbling-window N-D histogram — the
-  streaming twin of :func:`mpes_spark.binning.engine.bin_sparse`;
-  watermarking bounds state and admits late events up to the horizon.
+- ``live_binning``: event-time tumbling-window N-D histogram. It *is*
+  :func:`mpes_spark.binning.engine.bin_sparse` with the window as one
+  more group key, so stream and batch share one bin rule (value-domain
+  pre-filter, CASE keys, post-aggregation guard); watermarking bounds
+  state and admits late events up to the horizon.
 - ``live_count_rate``: windowed event counts (``getCountRate`` live).
 - ``densify_sink``: a ``foreachBatch`` callback scattering each
   micro-batch's sparse histogram into a dense
-  :class:`~mpes_spark.grid.binned.BinnedArray` on the driver.
+  :class:`~mpes_spark.grid.binned.BinnedArray` on the driver, through
+  the same scatter as :func:`mpes_spark.binning.engine.densify`.
 
 Scale notes: state per trigger is bounded by (windows in watermark
 horizon) x (occupied grid cells), never by event rate; the shuffle key
@@ -19,35 +22,33 @@ each micro-batch exactly as in the batch engine.
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mpes_spark.binning.engine import bin_sparse, scatter_counts
 from mpes_spark.binning.spec import BinAxis
 from mpes_spark.grid.binned import BinnedArray
+from mpes_spark.io.readers import normalize_event_time
 from mpes_spark.pinning import Parts, pin
+from mpes_spark.sqltext import qcol
 
 
 def with_event_time(
     df: DataFrame, ts: str = "ts", out: str = "event_time"
 ) -> DataFrame:
-    """Normalize the event-time column to TIMESTAMP: the engine's
-    parquet readers surface TIMESTAMP(NANOS) as epoch-nanos longs
-    (see session.py), which F.window cannot consume directly."""
-    dt = dict(df.dtypes).get(ts)
-    if dt in ("bigint", "int"):
-        # integer div, not double: epoch-nanos exceed 2^53
-        return df.withColumn(out, F.timestamp_micros(F.expr(f"{ts} div 1000")))
-    if dt == "timestamp_ntz":
-        # tz-independent: an ntz -> ltz CAST would shift the epoch
-        # under any non-UTC session timezone
-        micros = F.expr(
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', `{ts}`)"
-        )
-        return df.withColumn(out, F.timestamp_micros(micros))
-    return df.withColumn(out, F.col(ts).cast("timestamp"))
+    """Add the event time as a TIMESTAMP column ``out``, which
+    ``F.window`` and watermarks consume: ``ts`` is brought to
+    epoch-nanos by :func:`~mpes_spark.io.readers.normalize_event_time`
+    (the engine's parquet readers already surface TIMESTAMP(NANOS) as
+    epoch-nanos longs, see session.py) and cut to microseconds. A
+    TIMESTAMP ``ts`` column is returned as that epoch-nanos BIGINT."""
+    # integer div, not double: epoch-nanos exceed 2^53
+    micros = F.expr(f"{qcol(ts)} div 1000")
+    return normalize_event_time(df, ts).withColumn(out, F.timestamp_micros(micros))
 
 
 def live_binning(
@@ -56,21 +57,15 @@ def live_binning(
     ts: str = "ts",
     window: str = "1 minute",
     watermark: str = "2 minutes",
-    count_name: str = "cnt",
 ) -> DataFrame:
     """Windowed N-D histogram over an event stream: one sparse
-    (win_start, bin..., cnt) row per occupied cell per window."""
+    (win_start, bin..., cnt) row per occupied cell per window —
+    :func:`~mpes_spark.binning.engine.bin_sparse` keyed by the
+    tumbling window ``w`` as well as the bins."""
     ev = with_event_time(stream, ts).withWatermark("event_time", watermark)
-    cols = [ax.index_expr().alias(ax.out) for ax in axes]
-    keyed = ev.select(F.col("event_time"), *cols)
-    for ax in axes:
-        keyed = keyed.filter(ax.in_range_expr(F.col(ax.out)))
-    return (
-        keyed.groupBy(
-            F.window("event_time", window).alias("w"), *[F.col(ax.out) for ax in axes]
-        )
-        .agg(F.count(F.lit(1)).alias(count_name))
-        .select(F.col("w.start").alias("win_start"), *[ax.out for ax in axes], count_name)
+    keyed = ev.withColumn("w", F.window("event_time", window))
+    return bin_sparse(keyed, axes, extra_keys=["w"]).select(
+        F.col("w.start").alias("win_start"), *[ax.out for ax in axes], "cnt"
     )
 
 
@@ -298,9 +293,6 @@ def densify_sink(
     (driver-side, bounded by windows x grid) and merges each batch
     into it — the array handed to ``on_update`` is always the full
     current grid for that window, never a partial one."""
-    import numpy as np
-
-    shape = tuple(ax.nbins for ax in axes)
     grids: dict = {}
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
@@ -308,18 +300,9 @@ def densify_sink(
         if pdf.empty:
             return
         for win, grp in pdf.groupby("win_start"):
-            data = grids.setdefault(win, np.zeros(shape))
-            idx = tuple(grp[ax.out].to_numpy(dtype="int64") for ax in axes)
-            data[idx] = grp["cnt"].to_numpy()
-            on_update(
-                win,
-                BinnedArray(
-                    data=data.copy(),
-                    dims=[ax.out for ax in axes],
-                    coords={ax.out: ax.centers() for ax in axes},
-                    attrs={"units": "counts", "window": str(win)},
-                ),
-            )
+            arr = scatter_counts(grp, axes, into=grids.get(win), window=str(win))
+            grids[win] = arr.data
+            on_update(win, dataclasses.replace(arr, data=arr.data.copy()))
 
     return handle
 

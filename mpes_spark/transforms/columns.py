@@ -32,18 +32,6 @@ def apply_filter(
     return df.filter(" AND ".join(conds)) if conds else df
 
 
-def append_column(df: DataFrame, name: str, expr: Column) -> DataFrame:
-    """``appendColumn``/``columnApply``
-    (``/root/reference/mpes/fprocessing.py:2152-2173``, ``:2205-2217``)
-    — new column from an expression of existing columns."""
-    return df.withColumn(name, expr)
-
-
-def delete_columns(df: DataFrame, *names: str) -> DataFrame:
-    """``deleteColumn`` (``/root/reference/mpes/fprocessing.py:2175-2183``)."""
-    return df.drop(*names)
-
-
 def append_rows(df: DataFrame, *others: DataFrame) -> DataFrame:
     """``appendRow`` (``/root/reference/mpes/fprocessing.py:2413-2433``)
     — union of event tables by column name."""
@@ -175,14 +163,6 @@ def salted_agg(
     )
     partial = salted.groupBy(*keys, "_salt").agg(*phase1)
     return partial.groupBy(*keys).agg(*phase2)
-
-
-def map_partitions(df: DataFrame, fn, schema) -> DataFrame:
-    """Partition-level escape hatch (``mapColumn`` via
-    ``map_partitions``, ``/root/reference/mpes/fprocessing.py:2220-2240``)
-    — Arrow-batched ``mapInPandas``; the slow path, use only when no
-    Column composition expresses the op."""
-    return df.mapInPandas(fn, schema=schema)
 
 
 def morton_key_expr(cols, bits: int = 10):

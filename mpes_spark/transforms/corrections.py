@@ -10,7 +10,7 @@ Covers the reference's correction surface:
   (``dask_tps._calculate_f``, ``/root/reference/mpes/dask_tps.py:42-53``),
 - inverse deformation-field lookup (``dfieldapply``,
   ``/root/reference/mpes/base.py:530-539``) as a broadcast join against
-  the flattened field, or a broadcast-ndarray pandas UDF.
+  the flattened field.
 
 Everything scalar-parameterized is one SQL expression per output
 column: the ``*_sql`` function is the one definition of its
@@ -224,42 +224,3 @@ def apply_dfield_join(
         "_xi", "_yi", "xi", "yi", "newX", "newY"
     )
 
-
-def apply_dfield_udf(
-    df: DataFrame,
-    dfield: np.ndarray,
-    x: str = "X",
-    y: str = "Y",
-    new_x: str = "Xm",
-    new_y: str = "Ym",
-) -> DataFrame:
-    """Alternative dfield application: broadcast the ndarray and gather
-    per-batch with an Arrow pandas UDF — avoids materializing the
-    lookup relation when the field is dense and the join columns are
-    not needed downstream.
-
-    Out-of-range events get NaN — identical to the join path's NULL and
-    the reference's NaN boundary cells (``generateDfield``,
-    /root/reference/mpes/base.py:570-572) — so ``how='udf'`` and
-    ``how='join'`` agree row-for-row."""
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(np.asarray(dfield, dtype="float64"))
-
-    # pandas_udf resolves the (string) ``pd.Series`` hints against the
-    # module's globals, so pandas must be imported at module level
-    @F.pandas_udf("struct<nx: double, ny: double>")
-    def _lookup(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        fld = bc.value
-        xi = xs.to_numpy(dtype="int64")
-        yi = ys.to_numpy(dtype="int64")
-        ok = (
-            (xi >= 0) & (xi < fld.shape[1]) & (yi >= 0) & (yi < fld.shape[2])
-        )
-        nx = np.full(len(xi), np.nan)
-        ny = np.full(len(xi), np.nan)
-        nx[ok] = fld[0, xi[ok], yi[ok]]
-        ny[ok] = fld[1, xi[ok], yi[ok]]
-        return pd.DataFrame({"nx": nx, "ny": ny})
-
-    out = df.withColumn("_m", _lookup(F.col(x), F.col(y)))
-    return out.withColumns({new_x: F.col("_m.nx"), new_y: F.col("_m.ny")}).drop("_m")

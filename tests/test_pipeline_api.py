@@ -64,20 +64,29 @@ def test_tof2ev_null_safe_on_zero(spark):
     assert got[100.0] is not None
 
 
-def test_apply_dfield_udf_matches_join(spark):
-    """``apply_dfield``'s default pandas-UDF path and the broadcast-join
-    path agree row for row, including events outside the field (NULL
-    corrected coordinates on both paths)."""
+def test_apply_dfield_join_nulls_outside_and_nan_cells(spark):
+    """``apply_dfield`` looks each event's truncated pixel up in the
+    field: events outside the field (negative, or past H or W) and
+    events on a NaN cell get NULL corrected coordinates, which
+    ``bin_sparse`` drops; any method but the join is refused."""
     import numpy as np
+    import pytest
+
+    from mpes_spark.binning.spec import BinAxis
 
     field = np.random.default_rng(5).uniform(0.0, 10.0, (2, 6, 4))
+    field[:, 3, 1] = np.nan
     ev = spark.createDataFrame(
-        [(0.5, 0.5), (5.9, 3.2), (3.0, 1.7), (7.0, 1.0), (2.2, 9.0), (-1.0, 0.0)],
+        [(0.5, 0.5), (5.9, 3.2), (3.2, 1.7), (7.0, 1.0), (2.2, 9.0), (-1.0, 0.0)],
         "X double, Y double",
     )
-    rows = {
-        how: sorted(map(tuple, EventPipeline(ev).apply_dfield(field, how=how).df.collect()))
-        for how in ("udf", "join")
-    }
-    assert rows["udf"] == rows["join"]
-    assert sum(r[2] is None for r in rows["udf"]) == 3
+    pipe = EventPipeline(ev).apply_dfield(field, how="join")
+    got = {(r.X, r.Y): (r.Xm, r.Ym) for r in pipe.df.collect()}
+    assert got[(0.5, 0.5)] == tuple(field[:, 0, 0])
+    assert got[(5.9, 3.2)] == tuple(field[:, 5, 3])
+    for nan_cell_or_outside in ((3.2, 1.7), (7.0, 1.0), (2.2, 9.0), (-1.0, 0.0)):
+        assert got[nan_cell_or_outside] == (None, None)
+    axes = [BinAxis("Xm", 10, 0.0, 10.0), BinAxis("Ym", 10, 0.0, 10.0)]
+    assert sum(r.cnt for r in pipe.bin_sparse(axes).collect()) == 2
+    with pytest.raises(ValueError):
+        EventPipeline(ev).apply_dfield(field, how="udf")

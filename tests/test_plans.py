@@ -888,9 +888,14 @@ def test_query_job_and_exchange_budget(spark, name):
     number of Spark jobs (counted by job group), and its AQE-final plan
     holds at most its budgeted number of exchanges. Counters, unlike
     wall time, do not move with the box's load: a rise is a plan
-    change. Whatever the query leaves pinned is released afterwards."""
+    change. The session's cached source schemas are dropped first, so
+    every case counts its schema-inference jobs whatever ran before it.
+    Whatever the query leaves pinned is released afterwards."""
     from __spark_entry__ import queries
 
+    from mpes_spark.io.readers import _SCHEMAS
+
+    _SCHEMAS.pop(spark, None)
     sc = spark.sparkContext
     pinned = set(sc._jsc.getPersistentRDDs().keys())
     group = f"budget-{name}"

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from mpes_spark.binning.engine import bin_sparse
 from mpes_spark.binning.spec import BinAxis
 from mpes_spark.streaming.live import (
     densify_sink,
@@ -46,25 +47,27 @@ def _run(q_df, name):
     return q
 
 
-def test_live_binning_matches_batch(spark, stream_dir):
-    stream = read_event_stream(spark, stream_dir, _SCHEMA)
+def test_live_binning_matches_batch(spark, stream_dir, tmp_path):
+    """The windowed stream histogram equals batch ``bin_sparse`` keyed
+    by the same window, row for row, on a source with NaN coordinates:
+    both drop NaN events under the one value-domain bin rule."""
+    src = str(tmp_path / "nan_src")
+    spark.read.parquet(stream_dir).withColumn(
+        "value",
+        F.expr("CASE WHEN event_id % 40 = 0 THEN CAST('NaN' AS DOUBLE) ELSE value END"),
+    ).repartition(3).write.parquet(src)
+    assert spark.read.parquet(src).filter("isnan(value)").count() > 0
+    stream = read_event_stream(spark, src, _SCHEMA)
     assert stream.isStreaming
     _run(live_binning(stream, [_AX], window="10 minutes"), "livebin")
-    got = spark.sql("SELECT * FROM livebin").toPandas()
-    # batch twin: same windows via floor on the timestamp
-    ev = with_event_time(spark.read.parquet(stream_dir))
-    batch = (
-        ev.select(F.window("event_time", "10 minutes").alias("w"), _AX.index_expr().alias(_AX.out))
-        .filter(_AX.in_range_expr(F.col(_AX.out)))
-        .groupBy(F.col("w.start").alias("win_start"), _AX.out)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .toPandas()
+    got = spark.sql("SELECT * FROM livebin").collect()
+    ev = with_event_time(spark.read.parquet(src)).withColumn(
+        "w", F.window("event_time", "10 minutes")
     )
-    key = ["win_start", _AX.out]
-    g = got.sort_values(key, ignore_index=True)
-    b = batch.sort_values(key, ignore_index=True)
-    assert len(g) == len(b)
-    assert (g["cnt"].to_numpy() == b["cnt"].to_numpy()).all()
+    batch = bin_sparse(ev, [_AX], extra_keys=["w"]).select(
+        F.col("w.start").alias("win_start"), _AX.out, "cnt"
+    )
+    assert sorted(map(tuple, got)) == sorted(map(tuple, batch.collect()))
 
 
 def test_live_count_rate_totals(spark, stream_dir):
@@ -98,8 +101,6 @@ def test_densify_sink_callback(spark, stream_dir):
     # update-mode accumulation: the LAST grid per window holds the
     # complete histogram (multiple micro-batches merged), equal to the
     # batch engine's totals over the same source
-    from mpes_spark.binning.engine import bin_sparse
-
     want = {
         r[_AX.out]: r.cnt
         for r in bin_sparse(spark.read.parquet(stream_dir), [_AX]).collect()

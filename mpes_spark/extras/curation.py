@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mpes_spark.pinning import release
+
 # ---------------------------------------------------------------------------
 # stratified (per-source quota) sampling
 # ---------------------------------------------------------------------------
@@ -2058,7 +2060,7 @@ def lr_train_quality(
         F.col("n_correct").alias("value"),
     )
     out = wdf.unionByName(acc)
-    docb.unpersist()
+    release(docb)
     return out
 
 

@@ -256,16 +256,65 @@ def lsh_candidate_pairs(
     )
 
 
+def _intersect(
+    pairs: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    id_col: str,
+    broadcast_pairs: bool | None = None,
+) -> DataFrame:
+    """The one intersection verify of every similarity join here:
+    (id_a, id_b, icnt, nsh_a, nsh_b, jac) per candidate pair, ``id_a``
+    from the element relation ``sh_a``, ``id_b`` from ``sh_b`` (the
+    same relation for a self-join), ``jac`` the unrounded Jaccard.
+    Two equi-joins against the element relations + one groupBy — only
+    candidate pairs pay this cost; every verdict is a ratio over this
+    one relation. See :func:`verify_jaccard` for ``broadcast_pairs``;
+    it broadcasts the per-doc sizes too, which are at most twice as
+    many rows as the pairs. A hinted build side also keeps AQE from
+    re-planning the sizes joins while their stages finish in varying
+    order: a flip to the other side launched a second broadcast, so
+    the job count of a waved join varied between runs."""
+
+    def side(sh: DataFrame, s: str) -> DataFrame:
+        return sh.select(F.col(id_col).alias(f"id_{s}"), "sh")
+
+    def size(sh: DataFrame, s: str) -> DataFrame:
+        z = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh")).select(
+            F.col(id_col).alias(f"id_{s}"), F.col("nsh").alias(f"nsh_{s}")
+        )
+        return F.broadcast(z) if broadcast_pairs else z
+
+    inter = (
+        side(sh_a, "a")
+        .join(F.broadcast(pairs) if broadcast_pairs else pairs, "id_a")
+        .join(side(sh_b, "b"), ["id_b", "sh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("icnt"))
+    )
+    return (
+        inter.join(size(sh_a, "a"), "id_a")
+        .join(size(sh_b, "b"), "id_b")
+        .withColumn(
+            "jac", F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
+        )
+    )
+
+
 def verify_jaccard(
     pairs: DataFrame,
-    shingles: DataFrame,
+    shingles: DataFrame | tuple[DataFrame, DataFrame],
     threshold: float,
     id_col: str = "doc_id",
     broadcast_pairs: bool | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs: two equi-joins
     against the shingle table + one groupBy — only candidate pairs pay
-    this cost.
+    this cost. ``shingles`` is one element relation, or a ``(left,
+    right)`` tuple when the two sides of a pair come from DIFFERENT
+    relations (``id_a`` from left, ``id_b`` from right) — a
+    micro-batch checked against a static corpus, where the two id
+    spaces must not be conflated.
 
     ``broadcast_pairs=None`` (default) leaves the join strategy to the
     optimizer: AQE measures the *actual* candidate-pair size at the
@@ -277,62 +326,11 @@ def verify_jaccard(
     in the duplicate-cluster size) AQE instead keeps a shuffled join —
     a forced ``F.broadcast`` there would OOM the executors. Pass
     ``True``/``False`` only to pin the strategy for a known corpus."""
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh"))
-    sa = shingles.select(F.col(id_col).alias("id_a"), "sh")
-    sb = shingles.select(F.col(id_col).alias("id_b"), "sh")
-    pairs_side = F.broadcast(pairs) if broadcast_pairs else pairs
-    inter = (
-        sa.join(pairs_side, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("icnt"))
-    )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("nsh").alias("nsh_a"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("nsh").alias("nsh_b"))
-    jac = F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
+    sh_a, sh_b = shingles if isinstance(shingles, tuple) else (shingles, shingles)
     return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-    )
-
-
-def verify_jaccard_cross(
-    pairs: DataFrame,
-    sh_left: DataFrame,
-    sh_right: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact-Jaccard verification for candidate pairs whose two sides
-    come from DIFFERENT shingle tables (``id_a`` from ``sh_left``,
-    ``id_b`` from ``sh_right``) — the cross-relation form of
-    :func:`verify_jaccard`, used when a micro-batch is checked against
-    a static corpus and the two id spaces must not be conflated. Same
-    plan shape: two equi-joins + one groupBy, paid only by candidate
-    pairs; join strategy left to AQE (see :func:`verify_jaccard` on
-    why a forced broadcast is wrong under template spam)."""
-    sa = sh_left.select(F.col(id_col).alias("id_a"), "sh")
-    sb = sh_right.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        sa.join(pairs, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("icnt"))
-    )
-    za = sh_left.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh_a")).select(
-        F.col(id_col).alias("id_a"), "nsh_a"
-    )
-    zb = sh_right.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh_b")).select(
-        F.col(id_col).alias("id_b"), "nsh_b"
-    )
-    jac = F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        _intersect(pairs, sh_a, sh_b, id_col, broadcast_pairs)
+        .filter(F.col("jac") >= threshold)
+        .select("id_a", "id_b", F.round("jac", 6).alias("jaccard"))
     )
 
 
@@ -451,11 +449,9 @@ def blocked_jaccard_pairs(
     cluster resolution); the SQL twin stays the oracle.
 
     ``waves`` > 1 runs candidate+verify per hash band of the block
-    key (r11 scratch bound, see :func:`prefix_filtered_pairs`) and
-    returns the union of the per-wave checkpoints. Each doc has
-    exactly ONE block key, so the bands partition the docs and every
-    pair surfaces in exactly one wave — the union needs no
-    cross-wave distinct."""
+    key (r11 scratch bound) through the one waved loop,
+    :func:`_waved`. Each doc has exactly ONE block key, so the bands
+    partition the docs and every pair surfaces in exactly one wave."""
     sh = shingle_table(df, text, n, id_col)
     blocks = df.select(
         F.col(id_col),
@@ -477,28 +473,20 @@ def blocked_jaccard_pairs(
 
     if waves <= 1:
         # persist: verify consumes the shingle relation three times
-        # (sizes + both join sides). Until r12 the in-plan `.distinct()`
-        # exchange doubled as a shared materialization point
-        # (ReusedExchange); with the distinct now in-row (see
-        # :func:`shingle_table`) an unpersisted lineage would re-run
-        # the scan+explode once per consumer. MEMORY_AND_DISK, the
-        # minhash_neardup_pairs precedent.
+        # (sizes + both join sides); an unpersisted lineage would
+        # re-run the scan+explode once per consumer (see
+        # :func:`shingle_table` on the in-row distinct)
         sh = sh.persist()
-        out = verify_jaccard(_cand(blocks), sh, threshold, id_col)
-        out = out.localCheckpoint(eager=True)
-        release(sh)
-        return out
-    # hashed-element verify in waves (see prefix_filtered_pairs)
-    shh = sh.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    parts = _waved_verify(
+        return _finish(verify_jaccard(_cand(blocks), sh, threshold, id_col), True, sh)
+    return _waved(
         (_cand(blocks.filter(_wave_band("bk", waves, i))) for i in range(waves)),
-        shh,
+        _hashed(sh, id_col),
         id_col,
-        lambda cand, sh_w: verify_jaccard(
-            cand, sh_w, threshold, id_col, broadcast_pairs=True
+        lambda cand, el: verify_jaccard(
+            cand, el, threshold, id_col, broadcast_pairs=True
         ),
+        True,
     )
-    return reduce(DataFrame.union, parts)
 
 
 def blocked_containment_sql(
@@ -794,20 +782,161 @@ def _wave_gc(df: DataFrame) -> None:
         pass
 
 
-def _waved_verify(
+def _elements(df: DataFrame, text: str, n: int, id_col: str) -> DataFrame:
+    """The element relation of the prefix-filtered joins: each doc's
+    distinct unigrams (n=1) or word ``n``-grams, (id, sh)."""
+    if n == 1:
+        return token_sets(df, text, id_col)
+    return shingle_table(df, text, n, id_col)
+
+
+def _hashed(el: DataFrame, id_col: str) -> DataFrame:
+    """The element relation keyed on ``xxhash64(sh)`` instead of the
+    string (r11, second half of the sf10 scratch fix): ranking is the
+    ONE global sort of the ~40x element relation, and its spill is
+    dominated by the element STRINGS (~50 B each vs the 8 B hash —
+    measured: the string-keyed sort alone overflowed the sf10 box that
+    the waved candidate stage had just fit). Output-IDENTICAL for
+    candidate generation: prefix-filter completeness holds under ANY
+    consistent global element order — (tdf, hash) is one — and the
+    flat verify recomputes TRUE Jaccard from the string relation, so
+    extra candidates cannot change the verified pairs. The waved
+    verify counts by hash too; it equals the string counts except
+    under an exact 64-bit collision inside one corpus (~n^2/2^65 odds;
+    the sf0.01 oracle gate checks exactness empirically every round)."""
+    return el.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
+
+
+def _doc_freq(*els: DataFrame) -> DataFrame:
+    """Global element df over the union of ``els``: (sh, tdf). An agg,
+    NOT a sh-keyed window: a window would buffer each element's whole
+    partition — a ubiquitous element at 100 TB is one giant buffered
+    partition, while the agg is map-side combined and the join that
+    consumes it AQE-skew-splittable."""
+    sh = reduce(DataFrame.unionAll, [e.select("sh") for e in els])
+    return sh.groupBy("sh").agg(F.count(F.lit(1)).alias("tdf"))
+
+
+def _ranked(
+    el: DataFrame, dfreq: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """The prefix ranking: each doc's elements ordered by ascending
+    (tdf, sh), ``pfx`` marking the first ``n - ceil(t*n) + 1`` of its
+    ``n`` elements. Rows are (id, sh, tdf, pfx) with df >= 2 only: the
+    rank is taken over the FULL set, then df=1 elements — which
+    collide with nobody, so dropping them loses no pair — are removed;
+    with a long rare tail that is most of the relation. The doc size
+    rides the SAME doc-keyed exchange as the ranking window (doc
+    partitions are document-length-bounded — safe to window, and it
+    saves a separate sizes agg + join)."""
+    w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
+    nsz = F.col("nsz")
+    return (
+        el.join(dfreq, "sh")
+        .withColumn("rn", F.row_number().over(w))
+        .withColumn("nsz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+        .filter(F.col("tdf") >= 2)
+        .select(
+            id_col,
+            "sh",
+            "tdf",
+            (F.col("rn") <= nsz - F.ceil(nsz * F.lit(threshold)) + 1).alias("pfx"),
+        )
+    )
+
+
+def _collide(
+    a: DataFrame, b: DataFrame, id_col: str, self_join: str | None = None
+) -> DataFrame:
+    """Candidate pairs: distinct (id_a, id_b) of an ``a`` doc and a
+    ``b`` doc that share an element — one equi-join on the element
+    key. ``self_join`` is None for a cross-relation join (ids are
+    namespaced by side, not compared); ``"<"`` for a two-sided
+    self-join, which finds each pair from its lower id; ``"!="`` for a
+    one-sided self-join, which can find a pair from either side and
+    returns it as (least, greatest)."""
+    out = a.select(F.col(id_col).alias("id_a"), "sh").join(
+        b.select(F.col(id_col).alias("id_b"), "sh"), "sh"
+    )
+    if self_join == "<":
+        out = out.filter(F.col("id_a") < F.col("id_b"))
+    elif self_join == "!=":
+        out = out.filter(F.col("id_a") != F.col("id_b")).select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
+    return out.select("id_a", "id_b").distinct()
+
+
+def _finish(out: DataFrame, checkpoint: bool, *pins: DataFrame) -> DataFrame:
+    """The tail of every similarity join: materialize the (small,
+    true-pair-bounded) verified result as an eager local checkpoint
+    and release ``pins``, the relations it was computed from — a
+    long-lived session (the ~200-query bench loop) would otherwise
+    accumulate their blocks across calls. ``checkpoint=False`` returns
+    the live plan, pins included, for plan inspection."""
+    if not checkpoint:
+        return out
+    out = out.localCheckpoint(eager=True)
+    release(*pins)
+    return out
+
+
+def _waved_cands(
+    prefix: DataFrame,
+    id_col: str,
+    waves: int,
+    mass,
+    collide: Callable[[DataFrame, DataFrame], DataFrame],
+) -> Iterable[DataFrame]:
+    """The band/slice candidate generator of the waved prefix joins:
+    per hash band of the prefix element key, ``collide(side, band)``,
+    where ``side`` is the band, or one sub-slice of it by hash of its
+    doc id. Every candidate pair shares a prefix element, which hashes
+    into exactly one band, and is generated from one prefix row, which
+    lands in exactly one slice — so the bands' union is complete.
+
+    The candidate-mass schedule (r12, VERDICT r11 #2): one small agg
+    over the pinned prefix relation, ``mass`` aggregated per (band,
+    element) and summed per band, estimates each band's candidate
+    pairs; bands over :data:`WAVE_CAND_CAP` are sub-split (see
+    :func:`_wave_subslices`), so one clique-heavy band can no longer
+    materialize an unbounded candidate set."""
+    mass_rows = (
+        prefix.groupBy(F.pmod(F.xxhash64("sh"), F.lit(waves)).alias("band"), "sh")
+        .agg(mass.alias("m"))
+        .groupBy("band")
+        .agg(F.sum("m").alias("m"))
+        .collect()
+    )
+    slices = _wave_subslices(mass_rows, waves)
+    for i in range(waves):
+        band = prefix.filter(_wave_band("sh", waves, i))
+        for j in range(slices[i]):
+            side = band
+            if slices[i] > 1:
+                side = band.filter(_wave_slice(id_col, slices[i], j))
+            yield collide(side, band)
+
+
+def _waved(
     cands: Iterable[DataFrame],
-    toks: DataFrame,
+    el: DataFrame,
     id_col: str,
     verify: Callable[[DataFrame, DataFrame], DataFrame],
-) -> list[DataFrame]:
-    """The waved loop of the three waved similarity joins (the
-    partitioned prefix-filter join of Distributed Similarity Joins
-    over Top-K Rankings, EDBT'20). Per wave: pin the candidates, then
-    verify them against the element rows of the wave's docs only — a
+    checkpoint: bool,
+    *pins: DataFrame,
+) -> DataFrame:
+    """The one waved loop of the similarity joins (the partitioned
+    prefix-filter join of Distributed Similarity Joins over Top-K
+    Rankings, EDBT'20). Per wave: pin the candidates, then verify them
+    against the element rows ``el`` of the wave's docs only — a
     broadcast semi-join on the small wave doc-id set, so verify
-    shuffles the shingles of participating docs instead of the full
+    shuffles the elements of participating docs instead of the full
     ~40x relation — pin the verified part and release the candidates.
-    Returns the pinned parts, which the caller owns."""
+    Then release ``pins`` and return the distinct union of the parts
+    (a pair can surface in several waves with byte-identical verified
+    rows) through :func:`_finish`."""
     parts = []
     for cand in cands:
         cand = cand.localCheckpoint(eager=True)
@@ -816,11 +945,12 @@ def _waved_verify(
             .union(cand.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
-        toks_w = toks.join(F.broadcast(ids), id_col, "left_semi")
-        parts.append(verify(cand, toks_w).localCheckpoint(eager=True))
+        el_w = el.join(F.broadcast(ids), id_col, "left_semi")
+        parts.append(verify(cand, el_w).localCheckpoint(eager=True))
         release(cand)
         _wave_gc(cand)
-    return parts
+    release(*pins)
+    return _finish(reduce(DataFrame.union, parts).distinct(), checkpoint, *parts)
 
 
 def prefix_filtered_pairs(
@@ -872,7 +1002,7 @@ def prefix_filtered_pairs(
     that wave's participating docs (broadcast-semi-filtered) instead
     of the full ~40x-corpus relation; clique-heavy bands are further
     sub-split under :data:`WAVE_CAND_CAP` (r12 — see
-    :func:`_wave_subslices`) so even one hot band's candidate
+    :func:`_waved_cands`) so even one hot band's candidate
     materialization stays bounded. RESULT-IDENTICAL to waves=1: a
     qualifying pair shares >= 1 prefix element, that element hashes
     into exactly one band, so every pair is found (possibly in
@@ -880,179 +1010,59 @@ def prefix_filtered_pairs(
     verifies against the docs' FULL shingle sets. Trade: the pruned
     scan + explode lineage re-executes per wave — recompute is the
     currency that buys bounded scratch."""
-    toks = (
-        token_sets(df, text, id_col)
-        if n == 1
-        else shingle_table(df, text, n, id_col)
-    )
+    toks = _elements(df, text, n, id_col)
     if waves <= 1:
         # persist: the element relation feeds the hashed ranking
         # lineage AND the string-keyed verify three times (sizes +
-        # both join sides). Until r12 shingle_table's in-plan
-        # `.distinct()` exchange doubled as a shared materialization
-        # point (ReusedExchange); with the distinct now in-row an
-        # unpersisted lineage re-runs scan+explode per consumer
-        # (isolated floor 4.9 -> 6.0 s at sf0.1 without this).
-        # Waved mode deliberately recomputes instead — bounded
+        # both join sides); unpersisted, scan+explode re-runs per
+        # consumer (isolated floor 4.9 -> 6.0 s at sf0.1 without
+        # this). Waved mode deliberately recomputes instead — bounded
         # scratch outranks cache at sf10+.
         toks = toks.persist()
-    # Prefix construction ranks on xxhash64(sh), not the string (r11,
-    # second half of the sf10 scratch fix): the ranking stage is the
-    # ONE remaining global sort of the ~40x element relation, and its
-    # spill is dominated by the shingle STRINGS (~50 B each vs the
-    # 8 B hash — measured: the string-keyed sort alone overflowed the
-    # sf10 box that the waved candidate stage had just fit).
-    # Output-IDENTICAL: prefix-filter completeness holds under ANY
-    # consistent global element order — (tdf, hash) is one — and the
-    # verify stage recomputes TRUE Jaccard from the string relation,
-    # so extra candidates (tiebreak differences, hash-collision
-    # collisions) cannot change the verified pairs. The one
-    # theoretical gap: two DISTINCT shingles colliding on xxhash64
-    # make the order a weak order at that key, and an inconsistent
-    # tie-resolution at both docs' prefix boundaries could drop a
-    # candidate — requires an exact 64-bit collision inside one
-    # corpus (~n^2/2^65 odds; zero at any feasible n), and the
-    # sf0.01 oracle gate verifies exactness empirically every round.
-    toksh = toks.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    # element df via agg + equi-join, NOT a sh-keyed window: a window
-    # would buffer each shingle's whole partition — a ubiquitous
-    # element at 100 TB is one giant buffered partition, while the
-    # agg is map-side combined and the join AQE-skew-splittable
-    dfreq = toksh.groupBy("sh").agg(F.count(F.lit(1)).alias("tdf"))
-    w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
-    wn = Window.partitionBy(id_col)
-
-    def _rank(el: DataFrame, df_rel: DataFrame) -> DataFrame:
-        return (
-            el.join(df_rel, "sh")
-            # doc size rides the SAME doc-keyed exchange as the
-            # ranking window (doc partitions are document-length-
-            # bounded — safe to window, and it saves the separate
-            # sizes agg + join)
-            .withColumn("rn", F.row_number().over(w))
-            .withColumn("n", F.count(F.lit(1)).over(wn))
-            .filter(
-                F.col("rn")
-                <= F.col("n") - F.ceil(F.col("n") * F.lit(threshold)) + 1
-            )
-            # df=1 elements collide with nobody — dropping them from
-            # the candidate join loses no pair (a match needs a SHARED
-            # prefix element) and removes every singleton join key;
-            # with a long rare tail that is most of the prefix relation
-            .filter(F.col("tdf") >= 2)
-            .select(F.col(id_col), "sh")
-        )
-
-    if waves > 1:
-        # Doc-banded prefix CONSTRUCTION (r11, the final sf10 scratch
-        # layer): the monolithic df-join + doc-keyed rank over the
-        # full element relation was itself ~the box's scratch budget
-        # (measured: runs died in these stages with every later stage
-        # already waved). Ranking is per-doc independent, so it bands
-        # by doc id with zero semantic effect; only the element-df
-        # relation is global, and it is aggregated ONCE and pinned as
-        # (small, distinct-element-bounded) checkpoint blocks that
-        # each band re-shuffles instead of re-aggregating. Peak
-        # scratch: max(one df aggregation, one band's join + sort).
-        dfreq = dfreq.localCheckpoint(eager=True)
-        pfx_parts = []
-        for j in range(waves):
-            pfx_parts.append(
-                _rank(
-                    toksh.filter(_wave_band(id_col, waves, j)), dfreq
-                ).localCheckpoint(eager=True)
-            )
-            _wave_gc(toksh)
-        release(dfreq)
-        prefix = reduce(DataFrame.union, pfx_parts)
-    else:
-        # consumed as BOTH sides of the candidate self-join — persist,
-        # or the df-join + both windows execute twice (plan showed 4
-        # Window ops before, 2 after)
-        prefix = _rank(toksh, dfreq).persist()
+    toksh = _hashed(toks, id_col)
+    dfreq = _doc_freq(toksh)
     if waves <= 1:
-        a = prefix.select(F.col(id_col).alias("id_a"), "sh")
-        b = prefix.select(F.col(id_col).alias("id_b"), "sh")
-        cand = (
-            a.join(b, "sh")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        # materialize the (small, true-pair-bounded) verified result so
-        # the persisted relations can be released NOW — a long-lived
-        # session (the ~200-query bench loop) would otherwise accumulate
-        # their cached blocks across calls; checkpoint=False keeps the
-        # live plan (and the caches) for plan inspection
+        # both sides of the candidate self-join read the prefix —
+        # persist, or the df-join + both windows execute twice
+        prefix = _ranked(toksh, dfreq, id_col, threshold).filter("pfx")
+        prefix = prefix.select(id_col, "sh").persist()
+        cand = _collide(prefix, prefix, id_col, "<")
         out = verify_jaccard(cand, toks, threshold, id_col)
-        if not checkpoint:
-            return out
-        out = out.localCheckpoint(eager=True)
-        release(prefix, toks)
-        return out
-
-    # Candidate-mass schedule (r12, VERDICT r11 #2): one small agg
-    # over the pinned prefix relation estimates each band's candidate
-    # pairs (sum over elements of c*(c-1)/2, c = prefix occurrences);
-    # bands over WAVE_CAND_CAP are sub-split by hash of the
-    # pair's LEFT id so one clique-heavy band can no longer
-    # materialize an unbounded candidate set — see _wave_subslices.
-    mass = (
-        prefix.groupBy(
-            F.pmod(F.xxhash64("sh"), F.lit(waves)).alias("band"), "sh"
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("band")
-        .agg(
-            F.sum(F.col("c") * (F.col("c") - F.lit(1)) / F.lit(2)).alias("m")
-        )
-        .collect()
+        return _finish(out, checkpoint, prefix, toks)
+    # Doc-banded prefix CONSTRUCTION (r11, the final sf10 scratch
+    # layer): the monolithic df-join + doc-keyed rank over the full
+    # element relation was itself ~the box's scratch budget. Ranking
+    # is per-doc independent, so it bands by doc id with zero semantic
+    # effect; only the df relation is global, and it is aggregated
+    # ONCE and pinned (distinct-element-bounded) for every band to
+    # re-shuffle. Peak scratch: max(one df agg, one band's join+sort).
+    dfreq = dfreq.localCheckpoint(eager=True)
+    pfx_parts = []
+    for j in range(waves):
+        band = toksh.filter(_wave_band(id_col, waves, j))
+        band = _ranked(band, dfreq, id_col, threshold).filter("pfx")
+        pfx_parts.append(band.select(id_col, "sh").localCheckpoint(eager=True))
+        _wave_gc(toksh)
+    release(dfreq)
+    # candidate mass per prefix element: c*(c-1)/2 pairs for its c
+    # prefix occurrences; the hashed verify broadcasts the
+    # slice-bounded, id-pair-only candidates, so the element side never
+    # shuffles for that join
+    c = F.count(F.lit(1))
+    cands = _waved_cands(
+        reduce(DataFrame.union, pfx_parts), id_col, waves, c * (c - 1) / 2,
+        lambda side, band: _collide(side, band, id_col, "<"),
     )
-    slices = _wave_subslices(mass, waves)
-
-    def _cands():
-        for i in range(waves):
-            band = prefix.filter(_wave_band("sh", waves, i))
-            for j in range(slices[i]):
-                a = band.select(F.col(id_col).alias("id_a"), "sh")
-                if slices[i] > 1:
-                    # every (id_a < id_b) pair is generated from its
-                    # id_a row, so slicing the a side by hash(id_a)
-                    # partitions the band's pairs exactly — complete
-                    # and disjoint
-                    a = a.filter(_wave_slice("id_a", slices[i], j))
-                b = band.select(F.col(id_col).alias("id_b"), "sh")
-                yield (
-                    a.join(b, "sh")
-                    .filter(F.col("id_a") < F.col("id_b"))
-                    .select("id_a", "id_b")
-                    .distinct()
-                )
-
-    # Waved verify runs on the HASHED element relation with the
-    # (slice-bounded, id-pair-only) candidates broadcast (r11 fix
-    # ladder (a)+(c), SCALING.md): the sa side then never shuffles,
-    # and the per-wave element shuffle carries 16 B rows instead of
-    # ~60 B strings. icnt/nsh by hash equal the string counts except
-    # under an exact 64-bit collision (~1e-13/pair; the sf0.01 oracle
-    # gate checks exactness empirically). The waves=1 gate path stays
-    # string-keyed, exact by construction.
-    parts = _waved_verify(
-        _cands(),
+    return _waved(
+        cands,
         toksh,
         id_col,
-        lambda cand, toks_w: verify_jaccard(
-            cand, toks_w, threshold, id_col, broadcast_pairs=True
+        lambda cand, el: verify_jaccard(
+            cand, el, threshold, id_col, broadcast_pairs=True
         ),
+        checkpoint,
+        *pfx_parts,
     )
-    release(*pfx_parts)
-    # a pair can surface in several bands (one per shared prefix
-    # element's band) with byte-identical verified rows
-    out = reduce(DataFrame.union, parts).distinct()
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        release(*parts)
-    return out
 
 
 def prefix_filtered_pairs_sql(
@@ -1115,47 +1125,6 @@ WHERE CAST(i.icnt AS DOUBLE) / (za.n + zb.n - i.icnt) >= {t_lit}
 """.strip()
 
 
-def _dual_verify(
-    cand: DataFrame,
-    toks: DataFrame,
-    jaccard_threshold: float,
-    containment_threshold: float,
-    id_col: str,
-) -> DataFrame:
-    """ONE intersection aggregation; Jaccard and containment are both
-    ratios over (icnt, nsh_a, nsh_b) — shared work, single agg."""
-    sizes = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh"))
-    sa = toks.select(F.col(id_col).alias("id_a"), "sh")
-    sb = toks.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        sa.join(cand, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("icnt"))
-    )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("nsh").alias("nsh_a"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("nsh").alias("nsh_b"))
-    jac = F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
-    cont = F.col("icnt") / F.least("nsh_a", "nsh_b")
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(
-            (jac >= jaccard_threshold) | (cont >= containment_threshold)
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jac, 6).alias("jaccard"),
-            F.round(cont, 6).alias("containment"),
-            (jac >= jaccard_threshold).cast("int").alias("jaccard_dup"),
-            (cont >= containment_threshold).cast("int").alias(
-                "containment_dup"
-            ),
-        )
-    )
-
-
 def prefix_dual_pairs(
     df: DataFrame,
     text: str = "text",
@@ -1209,109 +1178,48 @@ def prefix_dual_pairs(
     the element relation on the unwaved path, where the ranking and
     three verify consumers read it. Runs Spark jobs when called: with
     ``checkpoint`` (default) the result is an eager local checkpoint
-    and both persists are released."""
-    t_eff = min(jaccard_threshold, containment_threshold)
-    toks = (
-        token_sets(df, text, id_col)
-        if n == 1
-        else shingle_table(df, text, n, id_col)
-    )
+    and both persists are released. ``waves`` > 1 runs the waved
+    loop of :func:`prefix_filtered_pairs`, banded on the PREFIX side's
+    element key only (the one-sided join stays complete)."""
+    toks = _elements(df, text, n, id_col)
     if waves <= 1:
         # persist: ranking lineage + three verify consumers — see
-        # prefix_filtered_pairs (r12; waved mode recomputes by design)
+        # prefix_filtered_pairs (waved mode recomputes by design)
         toks = toks.persist()
-    # hash-keyed ranking/candidates, string-keyed verify — same
-    # scratch rationale and output-identity argument as
-    # prefix_filtered_pairs (r11)
-    toksh = toks.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    dfreq = toksh.groupBy("sh").agg(F.count(F.lit(1)).alias("tdf"))
-    w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
-    wn = Window.partitionBy(id_col)
-    # element df via agg + equi-join (NOT a sh-keyed window — see
-    # prefix_filtered_pairs); doc size rides the doc-keyed exchange
-    enriched = (
-        toksh.join(dfreq, "sh")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("nsz", F.count(F.lit(1)).over(wn))
-        .filter(F.col("tdf") >= 2)  # df=1 elements collide with nobody
-        .persist()
-    )
-    prefix = enriched.filter(
-        F.col("rn") <= F.col("nsz") - F.ceil(F.col("nsz") * F.lit(t_eff)) + 1
-    ).select(F.col(id_col).alias("id_p"), "sh")
-    probe = enriched.select(F.col(id_col).alias("id_q"), "sh")
+    toksh = _hashed(toks, id_col)
+    t_eff = min(jaccard_threshold, containment_threshold)
+    ranked = _ranked(toksh, _doc_freq(toksh), id_col, t_eff).persist()
+    prefix = ranked.filter("pfx")
 
-    def _cand(pfx: DataFrame) -> DataFrame:
+    def verify(cand: DataFrame, el: DataFrame) -> DataFrame:
+        cont = F.col("icnt") / F.least("nsh_a", "nsh_b")
+        jac_dup = F.col("jac") >= jaccard_threshold
+        cont_dup = cont >= containment_threshold
         return (
-            pfx.join(probe, "sh")
-            .filter(F.col("id_p") != F.col("id_q"))
+            _intersect(cand, el, el, id_col)
+            .filter(jac_dup | cont_dup)
             .select(
-                F.least("id_p", "id_q").alias("id_a"),
-                F.greatest("id_p", "id_q").alias("id_b"),
+                "id_a",
+                "id_b",
+                F.round("jac", 6).alias("jaccard"),
+                F.round(cont, 6).alias("containment"),
+                jac_dup.cast("int").alias("jaccard_dup"),
+                cont_dup.cast("int").alias("containment_dup"),
             )
-            .distinct()
         )
 
     if waves <= 1:
-        out = _dual_verify(
-            _cand(prefix), toks, jaccard_threshold, containment_threshold,
-            id_col,
-        )
-        if not checkpoint:
-            return out
-        out = out.localCheckpoint(eager=True)
-        release(enriched, toks)
-        return out
-
-    # Waved execution (r11, sf10 scratch bound — see
-    # prefix_filtered_pairs): bands over the PREFIX side's element key
-    # only (the one-sided join stays complete — the shared prefix
-    # element lands in exactly one band); per-wave verify against the
-    # wave docs' FULL element sets; byte-identical rows across bands
-    # collapse in the final distinct.
-    # Candidate-mass schedule (r12, VERDICT r11 #2): the one-sided
-    # join emits tdf probe rows per prefix row, so each band's
-    # candidate mass is sum(tdf) over its prefix rows — one agg over
-    # the persisted enriched relation. Hot bands sub-split by hash of
-    # id_p; a pair can then surface in two slices (once per
-    # direction), which the final cross-band distinct already
-    # collapses — see _wave_subslices.
-    mass = (
-        enriched.filter(
-            F.col("rn")
-            <= F.col("nsz") - F.ceil(F.col("nsz") * F.lit(t_eff)) + 1
-        )
-        .groupBy(F.pmod(F.xxhash64("sh"), F.lit(waves)).alias("band"))
-        .agg(F.sum("tdf").cast("double").alias("m"))
-        .collect()
+        cand = _collide(prefix, ranked, id_col, "!=")
+        return _finish(verify(cand, toks), checkpoint, ranked, toks)
+    # the one-sided join emits tdf probe rows per prefix row, so a
+    # band's candidate mass is its prefix rows' sum(tdf); a pair can
+    # surface in two slices (once per direction), which the waved
+    # loop's distinct collapses
+    cands = _waved_cands(
+        prefix, id_col, waves, F.sum("tdf"),
+        lambda side, band: _collide(side, ranked, id_col, "!="),
     )
-    slices = _wave_subslices(mass, waves)
-
-    def _cands():
-        for i in range(waves):
-            band = prefix.filter(_wave_band("sh", waves, i))
-            for j in range(slices[i]):
-                yield _cand(
-                    band
-                    if slices[i] == 1
-                    else band.filter(_wave_slice("id_p", slices[i], j))
-                )
-
-    # hashed-element verify in waves (see prefix_filtered_pairs)
-    parts = _waved_verify(
-        _cands(),
-        toksh,
-        id_col,
-        lambda cand, toks_w: _dual_verify(
-            cand, toks_w, jaccard_threshold, containment_threshold, id_col
-        ),
-    )
-    release(enriched)
-    out = reduce(DataFrame.union, parts).distinct()
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        release(*parts)
-    return out
+    return _waved(cands, toksh, id_col, verify, checkpoint, ranked)
 
 
 def prefix_filtered_join(
@@ -1347,50 +1255,11 @@ def prefix_filtered_join(
     prefixes. Output: (id_a = left id, id_b = right id, jaccard) —
     ids may coincide across relations; they are namespaced by side,
     not compared."""
-    def mk(d: DataFrame) -> DataFrame:
-        return (
-            token_sets(d, text, id_col)
-            if n == 1
-            else shingle_table(d, text, n, id_col)
-        )
-
-    tl = mk(left).persist()
-    tr = mk(right).persist()
-    dfreq = (
-        tl.select("sh")
-        .unionAll(tr.select("sh"))
-        .groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("tdf"))
-    )
-
-    def _prefix(toks: DataFrame) -> DataFrame:
-        w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
-        wn = Window.partitionBy(id_col)
-        return (
-            toks.join(dfreq, "sh")
-            .withColumn("rn", F.row_number().over(w))
-            .withColumn("nsz", F.count(F.lit(1)).over(wn))
-            .filter(
-                F.col("rn")
-                <= F.col("nsz") - F.ceil(F.col("nsz") * F.lit(threshold)) + 1
-            )
-            .filter(F.col("tdf") >= 2)
-            .select(F.col(id_col), "sh")
-        )
-
-    cand = (
-        _prefix(tl)
-        .select(F.col(id_col).alias("id_a"), "sh")
-        .join(_prefix(tr).select(F.col(id_col).alias("id_b"), "sh"), "sh")
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    out = verify_jaccard_cross(cand, tl, tr, threshold, id_col)
-    if not checkpoint:
-        return out
-    out = out.localCheckpoint(eager=True)
-    release(tl, tr)
-    return out
+    tl, tr = (_elements(d, text, n, id_col).persist() for d in (left, right))
+    dfreq = _doc_freq(tl, tr)
+    pl, pr = (_ranked(el, dfreq, id_col, threshold).filter("pfx") for el in (tl, tr))
+    out = verify_jaccard(_collide(pl, pr, id_col), (tl, tr), threshold, id_col)
+    return _finish(out, checkpoint, tl, tr)
 
 
 def prefix_filtered_join_sql(

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mpes_spark.pinning import release
+
 
 def as_double_array(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -1358,6 +1360,8 @@ def mmr_rerank_unrolled(
         )
         for r in picks:
             selected.append((r["query_id"], r["neighbor_id"], step, r["mmr"]))
+    # the result is a VALUES literal that reads neither pin
+    release(cand, sims)
     if not selected:
         # empty candidates (or no rn=1 picks) would otherwise compose
         # `VALUES ` with no tuples — a parse error, not an empty result

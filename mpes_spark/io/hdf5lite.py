@@ -29,6 +29,7 @@ anything beyond the above belongs to a real libhdf5 binding
 
 from __future__ import annotations
 
+import mmap
 import struct
 from dataclasses import dataclass, field
 
@@ -336,8 +337,15 @@ class Hdf5LiteFile:
 
     def __init__(self, path: str):
         self.path = path
+        # a read-only map: the structure walk touches header pages
+        # only, and a dataset slice reads just its own byte window
         with open(path, "rb") as fh:
-            self._buf = fh.read()
+            try:
+                self._buf = mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ)
+            except ValueError:  # an empty file cannot be mapped
+                raise ValueError(
+                    "not an HDF5 file (bad superblock signature)"
+                ) from None
         if self._buf[:8] != _SIG:
             raise ValueError("not an HDF5 file (bad superblock signature)")
         self.datasets: dict[str, _Dataset] = {}
@@ -472,7 +480,9 @@ class Hdf5LiteFile:
 
     def _heap_str(self, data_addr: int, off: int) -> str:
         buf = self._buf
-        end = buf.index(b"\x00", data_addr + off)
+        end = buf.find(b"\x00", data_addr + off)
+        if end < 0:
+            raise ValueError("unterminated local heap string")
         return buf[data_addr + off : end].decode()
 
     def _btree_entries(self, addr: int) -> list[tuple[int, int]]:
@@ -641,6 +651,11 @@ class Hdf5LiteFile:
         ds = self.datasets[name]
         return int(ds.shape[0]) if ds.shape else 1
 
+    def close(self) -> None:
+        """Unmap the file. Arrays already read stay valid (each
+        :meth:`read` copies its byte window out of the map)."""
+        self._buf.close()
+
 
 def read_hdf5(path: str) -> Hdf5LiteFile:
     """Open and parse an HDF5 file's structure (data reads stay lazy
@@ -680,4 +695,5 @@ def append_hdf5(
         name: dict(ds.attrs) for name, ds in f.datasets.items() if ds.attrs
     }
     attrs.update(dataset_attrs)
+    f.close()  # the rewrite truncates the mapped file
     write_hdf5(path, merged, attrs, {**f.attrs, **root_attrs})

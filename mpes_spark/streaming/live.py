@@ -385,7 +385,7 @@ def neardup_ingest_sink(
         lsh_buckets,
         minhash_signatures,
         shingle_table,
-        verify_jaccard_cross,
+        verify_jaccard,
     )
 
     bk_key = ("band", "bucket")
@@ -457,9 +457,9 @@ def neardup_ingest_sink(
             )
             .distinct()
         )
-        verified = verify_jaccard_cross(
-            cand_seen, sh, seen_sh, threshold, id_col
-        ).unionByName(verify_jaccard_cross(cand_within, sh, sh, threshold, id_col))
+        verified = verify_jaccard(
+            cand_seen, (sh, seen_sh), threshold, id_col
+        ).unionByName(verify_jaccard(cand_within, sh, threshold, id_col))
         # the verify joins run once: flagged is pinned, and novel is
         # the batch minus the ids that pinned part flags
         flagged = pin(

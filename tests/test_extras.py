@@ -2788,12 +2788,13 @@ def test_waved_execution_parity(spark):
 
 def test_waved_subslice_parity(spark, monkeypatch):
     """Candidate-mass sub-splitting (r12, the waved-dedup clique
-    bound) is likewise result-INVISIBLE: with WAVE_CAND_CAP
-    forced to 1 candidate pair, EVERY band sub-splits into per-id
-    slices, and the row set must still equal the flat execution for
-    both prefix operators — including dual-measure pairs that now
-    surface once per direction across slices (collapsed by the final
-    distinct). Also pins the schedule math: cap<=0 disables."""
+    bound) is likewise result-INVISIBLE: with WAVE_CAND_CAP just
+    under 2 candidate pairs, EVERY band holding 2 or more sub-splits
+    into at least 2 slices (about m/2 of them, not one per pair), and
+    the row set must still equal the flat execution for both prefix
+    operators — including dual-measure pairs that now surface once
+    per direction across slices (collapsed by the final distinct).
+    Also pins the schedule math: cap<=0 disables."""
     from mpes_spark.extras import dedup
     from mpes_spark.extras.dedup import (
         _wave_subslices,
@@ -2820,6 +2821,15 @@ def test_waved_subslice_parity(spark, monkeypatch):
 
     monkeypatch.setattr(dedup, "WAVE_CAND_CAP", 1.0)
     assert _wave_subslices([{"band": 0, "m": 10.0}], 2) == {0: 10, 1: 1}
+    monkeypatch.setattr(dedup, "WAVE_CAND_CAP", 1.99)
+    schedules = []
+
+    def spy(mass_rows, waves):
+        slices = _wave_subslices(mass_rows, waves)
+        schedules.extend((float(r["m"]), slices[int(r["band"])]) for r in mass_rows)
+        return slices
+
+    monkeypatch.setattr(dedup, "_wave_subslices", spy)
     flat = prefix_filtered_pairs(docs, threshold=0.5, n=3).collect()
     sliced = prefix_filtered_pairs(
         docs, threshold=0.5, n=3, waves=3
@@ -2833,6 +2843,9 @@ def test_waved_subslice_parity(spark, monkeypatch):
         waves=3,
     ).collect()
     assert flat and key(sliced) == key(flat), "prefix_dual sliced"
+    assert any(s > 1 for _, s in schedules), schedules
+    assert all(s >= 2 for m, s in schedules if m >= 2), schedules
+    assert all(s <= m / 2 + 1 for m, s in schedules), schedules
     monkeypatch.setattr(dedup, "WAVE_CAND_CAP", 0.0)
     assert _wave_subslices([{"band": 0, "m": 1e12}], 3) == {
         0: 1, 1: 1, 2: 1,

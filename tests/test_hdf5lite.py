@@ -59,6 +59,35 @@ def test_bounded_slice_reads(h5file):
         np.testing.assert_array_equal(f.read(nm, len(arr) - 3, 10**9), arr[-3:])
 
 
+def test_slice_read_holds_only_its_window(tmp_path):
+    """Opening a file and reading 10 rows of a 16 MB contiguous
+    dataset allocates a small fraction of the file: the reader maps
+    the file and copies out only the requested byte window. An empty
+    file still fails as a bad signature."""
+    import os
+    import tracemalloc
+
+    p = str(tmp_path / "big.h5")
+    data = np.arange(2 * 1024 * 1024, dtype="float64")  # 16 MB
+    write_hdf5(p, {"Stream_0": data})
+    size = os.path.getsize(p)
+    assert size >= 16 * 1024 * 1024
+    tracemalloc.start()
+    try:
+        f = read_hdf5(p)
+        got = f.read("Stream_0", 1000, 1010)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    np.testing.assert_array_equal(got, data[1000:1010])
+    assert peak < size // 100, (peak, size)
+    f.close()
+    empty = str(tmp_path / "empty.h5")
+    open(empty, "wb").close()
+    with pytest.raises(ValueError, match="superblock signature"):
+        read_hdf5(empty)
+
+
 def test_attributes(h5file):
     p, _ = h5file
     f = read_hdf5(p)

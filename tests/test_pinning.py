@@ -1,5 +1,5 @@
 """The pinning contract (mpes_spark/pinning.py): ``release`` frees
-what it is given, no graph or dedup operator leaves a pinned relation
+what it is given, no graph, dedup or MMR operator leaves a pinned relation
 behind that its returned plan does not read, and no streaming sink
 leaves one behind that its state or its returned relations do not
 read."""
@@ -120,8 +120,18 @@ def test_operators_leave_only_what_their_plan_reads(spark):
     symmetric closure, which has none (one lazy plan)."""
     from mpes_spark.analysis import graph as G
     from mpes_spark.extras import dedup as DD
+    from mpes_spark.extras import similarity as SIM
 
     edges, docs = _graph(spark), _docs(spark)
+    rng = random.Random(3)
+    mmr_cands = spark.createDataFrame(
+        [
+            (q, d, rng.random(), [rng.random() for _ in range(4)])
+            for q in range(3)
+            for d in range(6)
+        ],
+        "query_id long, neighbor_id long, cosine double, cv array<double>",
+    )
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (7, 9), (9, 11)], "id_a long, id_b long"
     )
@@ -149,6 +159,7 @@ def test_operators_leave_only_what_their_plan_reads(spark):
         "canonical_by_quality[distributed]": lambda: DD.canonical_by_quality(
             docs, pairs, driver_edge_limit=0
         ),
+        "mmr_rerank_unrolled": lambda: SIM.mmr_rerank_unrolled(mmr_cands, k=3),
     }
     for waves in (1, 3):
         cases[f"blocked_jaccard_pairs[waves={waves}]"] = (

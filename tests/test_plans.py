@@ -844,9 +844,11 @@ def test_partition_digest_diff_is_bucket_sized(spark):
 
 
 #: (jobs, exchanges) budgets of the suite's slowest queries (by sf0.1
-#: median in bench_results.json) plus the paper's hist_4d, at SF_SMALL
-#: on the test session: the largest count over five cold-session runs
-#: when the budgets were set. Every count repeated exactly except
+#: median in bench_results.json), the paper's hist_4d and the six
+#: vector-search queries that run Python UDFs (LSH, multi-probe, IVF,
+#: PQ, IVFADC, banded contrastive mining), at SF_SMALL on the test
+#: session: the largest count over five cold-session runs when the
+#: budgets were set (the vector-search counts repeated exactly). Every count repeated exactly except
 #: neardup_prefix_waved's jobs (66-69: its waves submit AQE stages
 #: concurrently, and the order they finish in decides how many stages
 #: a re-plan still launches; hinting the waved verify's sizes joins
@@ -881,6 +883,12 @@ _BUDGETS = {
     "simhash_neardup": (4, 4),
     "minhash_lsh_oracle": (12, 24),
     "hist_4d": (3, 1),
+    "ann_lsh_cosine": (4, 2),
+    "ann_multiprobe_cosine": (4, 2),
+    "ivf_ann_cosine": (7, 2),
+    "ivfpq_ann_cosine": (13, 4),
+    "pq_ann_cosine": (10, 4),
+    "contrastive_mining_ann": (7, 5),
 }
 
 
@@ -920,3 +928,52 @@ def test_query_job_and_exchange_budget(spark, name):
     assert exchanges <= max_exchanges, (
         f"{name}: {exchanges} exchanges, budget {max_exchanges}"
     )
+
+
+#: Python nodes (``ArrowEvalPython`` + ``FlatMapGroupsInPandas``) in
+#: the AQE-final plan of each vector-search query at SF_SMALL. Each
+#: UDF is marked non-deterministic so the optimizer evaluates it once
+#: per row; a node the optimizer duplicates, or a UDF that replaces a
+#: JVM fold, changes the count. The four JVM-only queries hold none.
+_PYTHON_NODES = {
+    "topk_cosine": 0,
+    "ann_lsh_cosine": 3,
+    "ann_multiprobe_cosine": 3,
+    "embed_neardup_lsh": 3,
+    "embed_neardup_banded": 3,
+    "semantic_dedup": 3,
+    "ivf_ann_fullprobe": 3,
+    "ivf_ann_cosine": 3,
+    "ivfpq_ann_cosine": 4,
+    "pq_ann_cosine": 2,
+    "pq_ann_fullcodebook": 2,
+    "contrastive_mining": 0,
+    "contrastive_mining_ann": 3,
+    "mmr_rerank_cosine": 1,
+    "mmr_rerank_oracle": 0,
+    "retrieval_eval": 0,
+}
+
+
+@pytest.mark.parametrize("name", list(_PYTHON_NODES))
+def test_vector_search_python_nodes(spark, name):
+    """Each vector-search query runs its parent number of Python
+    nodes: the JVM-class queries none, the UDF-class ones exactly one
+    node per UDF the operator applies."""
+    from __spark_entry__ import queries
+
+    sc = spark.sparkContext
+    pinned = set(sc._jsc.getPersistentRDDs().keys())
+    try:
+        df = queries()[name](spark, SF_SMALL)
+        df.collect()
+    finally:
+        for rdd_id, rdd in sc._jsc.getPersistentRDDs().items():
+            if rdd_id not in pinned:
+                rdd.unpersist(False)
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.finalPhysicalPlan()
+    plan = plan.toString()
+    nodes = plan.count("ArrowEvalPython") + plan.count("FlatMapGroupsInPandas")
+    assert nodes == _PYTHON_NODES[name], f"{name}: {nodes} Python nodes"

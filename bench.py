@@ -116,6 +116,8 @@ def _run_suite(sf_dir: str, cpus: str, rep: int) -> tuple[dict[str, float], dict
 
     from __spark_entry__ import queries
 
+    from mpes_spark.pinning import sweep
+
     q = queries()
     order = list(q)
     random.Random(rep).shuffle(order)
@@ -126,10 +128,7 @@ def _run_suite(sf_dir: str, cpus: str, rep: int) -> tuple[dict[str, float], dict
         # Release the previous query's storage and settle its GC debt
         # (a shuffle-heavy neighbour otherwise lands a multi-second
         # major-GC stall on the next query) outside the timed region.
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        sweep(spark)
         t0 = time.perf_counter()
         try:
             q[name](spark, sf_dir).collect()

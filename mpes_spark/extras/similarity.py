@@ -78,6 +78,8 @@ def signature_udf(planes: np.ndarray, bands: int):
     import pandas as pd
 
     nplanes = len(planes)
+    if nplanes % bands:
+        raise ValueError(f"bands={bands} must divide nplanes={nplanes}")
     w = nplanes // bands
     P = np.ascontiguousarray(planes, dtype=np.float64)
     weights = (1 << np.arange(w, dtype=np.int64))
@@ -136,6 +138,100 @@ def _sql_array(vals: np.ndarray) -> str:
 
 
 # ---------------------------------------------------------------------------
+# the rules every vector-search operator shares: prune to candidates
+# (probe join), verify exactly, rank per query
+# ---------------------------------------------------------------------------
+
+_SIDES = {"q": ("query_id", "qv"), "c": ("neighbor_id", "cv")}
+
+
+def _vectors(df: DataFrame, side: str, id_col: str, vec: str, *extra) -> DataFrame:
+    """The query (``"q"``: query_id, qv) or corpus (``"c"``:
+    neighbor_id, cv) side of a search, vectors as array<double>."""
+    key, v = _SIDES[side]
+    return df.select(F.col(id_col).alias(key), as_double_array(vec).alias(v), *extra)
+
+
+def _probe_join(
+    c: DataFrame, q: DataFrame, key: str | None, score: Column, name: str = "cosine", *extra
+) -> DataFrame:
+    """Score corpus rows (neighbor_id, ...) against the broadcast
+    queries (query_id, ...): equi-joined on the probe column ``key``,
+    or every pair when ``key`` is None; self-matches dropped."""
+    neq = F.col("neighbor_id") != F.col("query_id")
+    pairs = c.join(F.broadcast(q), neq) if key is None else c.join(F.broadcast(q), [key]).filter(neq)
+    return pairs.select("query_id", "neighbor_id", score.alias(name), *extra)
+
+
+def _topk(
+    scored: DataFrame, k, score: str = "cosine", keys=("query_id",), rank: str = "rank"
+) -> DataFrame:
+    """Per-query top-k: ``row_number`` over ``keys`` by ``score``
+    descending, then neighbor id; keeps rank <= ``k`` (an int, or a
+    Column for a per-row bound) as a BIGINT ``rank`` column."""
+    w = Window.partitionBy(*keys).orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .withColumn(rank, F.col(rank).cast("bigint"))
+    )
+
+
+def _probe_topk(corpus, queries, k, vec, id_col, corpus_key, query_key, probes=None):
+    """Bucketed ANN top-k: the corpus keyed by ``corpus_key`` (over
+    cv), each query by ``query_key`` (over qv), widened to a probe set
+    by ``probes`` if given; candidates verified with the fold-exact
+    cosine UDF."""
+    c = _vectors(corpus, "c", id_col, vec).withColumn("key", corpus_key)
+    q = _vectors(queries, "q", id_col, vec).withColumn("key", query_key)
+    if probes is not None:
+        q = q.withColumn("key", F.explode(probes(F.col("key"))))
+    cos = cosine_verify_udf()
+    return _topk(_probe_join(c, q, "key", F.round(cos(F.col("qv"), F.col("cv")), 6)), k)
+
+
+def _rerank(shortlist: DataFrame, corpus, queries, k, vec, id_col) -> DataFrame:
+    """Exact cosine top-k over a (query_id, neighbor_id) shortlist: an
+    equi-join back to the float vectors, L rows per query."""
+    exact = (
+        shortlist.select("query_id", "neighbor_id")
+        .join(_vectors(corpus, "c", id_col, vec), "neighbor_id")
+        .join(F.broadcast(_vectors(queries, "q", id_col, vec)), "query_id")
+        .select("query_id", "neighbor_id", cosine_expr(F.col("qv"), F.col("cv")).alias("cosine"))
+    )
+    return _topk(exact, k)
+
+
+def _verified(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Candidate pairs (id_a, id_b, va, vb) whose exact cosine reaches
+    ``threshold``: compared raw (like the oracle), rounded for output."""
+    cos = cosine_verify_udf()
+    return (
+        pairs.withColumn("raw", cos(F.col("va"), F.col("vb")))
+        .filter(F.col("raw") >= threshold)
+        .select("id_a", "id_b", F.round("raw", 6).alias("cosine"))
+    )
+
+
+def _polarity_topk(scored: DataFrame, pos: int, neg: int) -> DataFrame:
+    """Contrastive ranking: the top ``pos`` same-label and top ``neg``
+    different-label candidates per (query, polarity)."""
+    k = F.when(F.col("is_positive") == 1, pos).otherwise(neg)
+    return _topk(scored, k, keys=("query_id", "is_positive"), rank="pair_rank").select(
+        "query_id", F.col("neighbor_id").alias("cand_id"), "cosine", "is_positive", "pair_rank"
+    )
+
+
+def _polarity(label: str):
+    """(query-side, corpus-side, is_positive) label columns."""
+    return (
+        F.col(label).alias("q_label"),
+        F.col(label).alias("c_label"),
+        (F.col("c_label") == F.col("q_label")).cast("int").alias("is_positive"),
+    )
+
+
+# ---------------------------------------------------------------------------
 # brute-force top-k
 # ---------------------------------------------------------------------------
 
@@ -149,34 +245,15 @@ def topk_cosine(
     """Exact top-k cosine neighbors per query (self-match excluded):
     (query_id, neighbor_id, cosine, rank). The query side is
     broadcast; ties broken by neighbor id for determinism."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec).alias("cv")
-    )
     # JVM Column fold, not the Arrow UDF: with data-borne vectors the
     # expression tree is constant-size (no plane-literal blowup, the
     # reason signature_udf exists), and a cold session pays ~4s of
     # Python-worker + Arrow startup for the UDF that the fold avoids
     # (measured at sf0.1; results are bit-identical — both folds are
     # strict left-to-right)
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_expr(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
-    )
+    c = _vectors(corpus, "c", id_col, vec)
+    q = _vectors(queries, "q", id_col, vec)
+    return _topk(_probe_join(c, q, None, cosine_expr(F.col("qv"), F.col("cv"))), k)
 
 
 def topk_cosine_sql(
@@ -248,29 +325,9 @@ def ann_lsh_cosine(
     at 1e9 vectors the bucketed corpus would be written
     partitioned-by-bucket so probes prune to one partition."""
     sig = signature_udf(planes, 1)
-    cos = cosine_verify_udf()
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec).alias("cv")
-    ).withColumn("bucket", sig(F.col("cv")).getItem(0))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec).alias("qv")
-    ).withColumn("bucket", sig(F.col("qv")).getItem(0))
-    scored = (
-        c.join(F.broadcast(q), ["bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
+    return _probe_topk(
+        corpus, queries, k, vec, id_col,
+        sig(F.col("cv")).getItem(0), sig(F.col("qv")).getItem(0),
     )
 
 
@@ -308,6 +365,50 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
 # IVF (inverted-file) ANN — the learned-bucket scale path
 # ---------------------------------------------------------------------------
 
+def _sample(corpus: DataFrame, vec: str, rows: int, seed: int) -> np.ndarray:
+    """A bounded seeded sample of the vectors as an (n, dim) float64
+    matrix. The sample is a seeded uniform ``.sample()`` over the whole
+    corpus — NOT a ``.limit()`` prefix, which on a sorted/clustered
+    corpus (e.g. ingested shard-by-shard) would train a quantizer on
+    one cluster and starve the rest. The one count() it costs is a
+    metadata-cheap scan."""
+    n = corpus.count()
+    if n > rows:
+        # oversample 2x then cap, so the post-filter row count reliably
+        # reaches `rows` despite Bernoulli-sampling variance
+        frac = min(1.0, 2.0 * rows / n)
+        sampled = corpus.select(vec).sample(fraction=frac, seed=seed).limit(rows)
+    else:
+        sampled = corpus.select(vec)
+    pdf = sampled.toPandas()
+    if pdf.empty:
+        # Bernoulli sampling can in principle return zero rows on a
+        # small corpus just above `rows` (ADVICE r8) — fall back to the
+        # unsampled bounded select rather than np.stack([]).
+        pdf = corpus.select(vec).limit(rows).toPandas()
+    if pdf.empty:
+        raise ValueError("corpus has no vectors")
+    return np.stack(pdf[vec].to_numpy()).astype("float64")
+
+
+def _sqdist(X: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """(n, d) x (k, d) -> (n, k) squared Euclidean distances."""
+    return ((X[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+
+
+def _lloyd(X: np.ndarray, k: int, iters: int, rng) -> np.ndarray:
+    """Lloyd k-means from ``k`` seeded distinct rows -> (k, d)
+    centroids; an empty cluster keeps its centroid."""
+    cent = X[rng.choice(len(X), size=k, replace=False)]
+    for _ in range(iters):
+        assign = _sqdist(X, cent).argmin(axis=1)
+        for j in range(k):
+            m = assign == j
+            if m.any():
+                cent[j] = X[m].mean(axis=0)
+    return cent
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     k: int = 16,
@@ -320,33 +421,9 @@ def train_ivf_centroids(
     centroids. The sample collect is capped (`sample_rows`), never the
     corpus; at 1e9 vectors the same code trains on a 1e5-row sample —
     standard IVF practice (coarse quantizer quality needs samples,
-    not the full set).
-
-    The sample is a seeded uniform ``.sample()`` over the whole corpus
-    — NOT a ``.limit()`` prefix, which on a sorted/clustered corpus
-    (e.g. ingested shard-by-shard) would train the quantizer on one
-    cluster and starve the rest. The one count() it costs is a
-    metadata-cheap scan, paid once at train time."""
-    n = corpus.count()
-    if n > sample_rows:
-        # oversample 2x then cap, so the post-filter row count reliably
-        # reaches sample_rows despite Bernoulli-sampling variance
-        frac = min(1.0, 2.0 * sample_rows / n)
-        sampled = corpus.select(vec).sample(fraction=frac, seed=seed).limit(sample_rows)
-    else:
-        sampled = corpus.select(vec)
-    pdf = sampled.toPandas()
-    X = np.stack(pdf[vec].to_numpy()).astype("float64")
-    rng = np.random.default_rng(seed)
-    cent = X[rng.choice(len(X), size=k, replace=False)]
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for j in range(k):
-            m = assign == j
-            if m.any():
-                cent[j] = X[m].mean(axis=0)
-    return cent
+    not the full set; see :func:`_sample`)."""
+    X = _sample(corpus, vec, sample_rows, seed)
+    return _lloyd(X, k, iters, np.random.default_rng(seed))
 
 
 def quantizer_error(
@@ -360,24 +437,8 @@ def quantizer_error(
     sample — the quantization-error health metric for a trained IVF
     coarse quantizer. Collect is capped at ``sample_rows`` regardless
     of corpus size (same discipline as :func:`train_ivf_centroids`)."""
-    cent = np.asarray(centroids, dtype="float64")
-    n = corpus.count()
-    if n > sample_rows:
-        frac = min(1.0, 2.0 * sample_rows / n)
-        sampled = corpus.select(vec).sample(fraction=frac, seed=seed).limit(sample_rows)
-    else:
-        sampled = corpus.select(vec)
-    pdf = sampled.toPandas()
-    if pdf.empty:
-        # Bernoulli sampling can in principle return zero rows on a
-        # small corpus just above sample_rows (ADVICE r8) — fall back
-        # to the unsampled bounded select rather than np.stack([]).
-        pdf = corpus.select(vec).limit(sample_rows).toPandas()
-    if pdf.empty:
-        raise ValueError("quantizer_error: corpus has no vectors")
-    X = np.stack(pdf[vec].to_numpy()).astype("float64")
-    d2 = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-    return float(d2.min(axis=1).mean())
+    X = _sample(corpus, vec, sample_rows, seed)
+    return float(_sqdist(X, np.asarray(centroids, dtype="float64")).min(axis=1).mean())
 
 
 def quantizer_refresh(
@@ -446,40 +507,34 @@ def ivf_assign(
     df: DataFrame, centroids: np.ndarray, vec: str = "embedding", out: str = "list_id"
 ) -> DataFrame:
     """Nearest-centroid assignment via an Arrow-batched pandas UDF
-    (vectorized argmin against the broadcast centroid matrix — the
-    k x dim distance matrix per batch stays in numpy)."""
+    (vectorized argmin against the centroid matrix in the UDF closure —
+    the k x dim distance matrix per batch stays in numpy)."""
+    return df.withColumn(out, _nearest_udf(centroids)(F.col(vec)))
 
 
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(np.asarray(centroids, dtype="float64"))
+def ivf_probe_udf(centroids: np.ndarray, nprobe: int):
+    """Arrow-vectorized query-side probe: embedding -> the ids of its
+    ``nprobe`` nearest inverted lists (centroid matrix in the UDF
+    closure, batch argsort)."""
+    return _nearest_udf(centroids, nprobe)
 
-    @F.pandas_udf("int")
-    def _assign(vs: pd.Series) -> pd.Series:
-        cent = bc.value
-        X = np.stack(vs.to_numpy()).astype("float64")
-        d2 = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d2.argmin(axis=1).astype("int32"))
+
+def _nearest_udf(centroids: np.ndarray, nprobe: int | None = None):
+    """embedding -> its nearest centroid id (``nprobe`` None, an int),
+    or the ids of its ``nprobe`` nearest centroids (an array<int>).
+    The matrix rides in the closure; pyspark broadcasts any pickled
+    UDF over 1 MB itself, and centroid matrices are a few KB."""
+    cent = np.asarray(centroids, dtype="float64")
+
+    @F.pandas_udf("int" if nprobe is None else "array<int>")
+    def nearest(vs: pd.Series) -> pd.Series:
+        d2 = _sqdist(np.stack(vs.to_numpy()).astype("float64"), cent)
+        if nprobe is None:
+            return pd.Series(d2.argmin(axis=1).astype("int32"))
+        return pd.Series(list(np.argsort(d2, axis=1)[:, :nprobe].astype("int32")))
 
     # one evaluation per vector (guide §4.4 — see signature_udf)
-    return df.withColumn(out, _assign.asNondeterministic()(F.col(vec)))
-
-
-def ivf_probe_udf(spark_context, centroids: np.ndarray, nprobe: int):
-    """Arrow-vectorized query-side probe: embedding -> the ids of its
-    ``nprobe`` nearest inverted lists (broadcast centroid matrix,
-    batch argsort)."""
-    bc = spark_context.broadcast(np.asarray(centroids, dtype="float64"))
-
-    @F.pandas_udf("array<int>")
-    def _probe(vs: pd.Series) -> pd.Series:
-        cent = bc.value
-        X = np.stack(vs.to_numpy()).astype("float64")
-        d2 = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        order = np.argsort(d2, axis=1)[:, :nprobe].astype("int32")
-        return pd.Series(list(order))
-
-    # one evaluation per query vector (guide §4.4 — see signature_udf)
-    return _probe.asNondeterministic()
+    return nearest.asNondeterministic()
 
 
 def ivf_topk_cosine(
@@ -497,37 +552,11 @@ def ivf_topk_cosine(
     is written ``partitionBy(list_id)`` once, so probes prune to
     nprobe partitions; recall is tuned by nprobe (and k of the
     quantizer)."""
-
-
-    c = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), as_double_array(vec).alias("cv"),
-                      F.col(vec).alias("_raw")),
-        centroids, vec="_raw",
-    ).drop("_raw")
-
-    _probe = ivf_probe_udf(corpus.sparkSession.sparkContext, centroids, nprobe)
-
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double_array(vec).alias("qv"),
-            F.col(vec).alias("_raw"),
-        )
-        .withColumn("probe", _probe(F.col("_raw")))
-        .drop("_raw")
-        .withColumn("list_id", F.explode("probe"))
-        .drop("probe")
-    )
-    cos = cosine_verify_udf()
-    scored = (
-        c.join(F.broadcast(q), ["list_id"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", F.round(cos(F.col("qv"), F.col("cv")), 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
+    return _probe_topk(
+        corpus, queries, k, vec, id_col,
+        _nearest_udf(centroids)(F.col("cv")),
+        ivf_probe_udf(centroids, nprobe)(F.col("qv")),
+        probes=lambda lists: lists,
     )
 
 
@@ -553,32 +582,16 @@ def train_pq_codebooks(
     the corpus) exactly like the IVF coarse quantizer; at 1e9 vectors
     the same code trains on a 1e5-row sample. Codebook size is
     m * ksub * dsub doubles — a few KB — trivially broadcastable."""
-    n = corpus.count()
-    if n > sample_rows:
-        frac = min(1.0, 2.0 * sample_rows / n)
-        sampled = corpus.select(vec).sample(fraction=frac, seed=seed).limit(sample_rows)
-    else:
-        sampled = corpus.select(vec)
-    X = np.stack(sampled.toPandas()[vec].to_numpy()).astype("float64")
+    X = _sample(corpus, vec, sample_rows, seed)
     X = X / np.linalg.norm(X, axis=1, keepdims=True)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"m={m} must divide dim={dim}")
     dsub = dim // m
     rng = np.random.default_rng(seed)
-    books = np.empty((m, ksub, dsub))
-    for j in range(m):
-        S = X[:, j * dsub : (j + 1) * dsub]
-        cent = S[rng.choice(len(S), size=ksub, replace=False)]
-        for _ in range(iters):
-            d2 = ((S[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(ksub):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = S[mask].mean(axis=0)
-        books[j] = cent
-    return books
+    return np.stack(
+        [_lloyd(X[:, j * dsub : (j + 1) * dsub], ksub, iters, rng) for j in range(m)]
+    )
 
 
 def fixed_pq_codebooks(m: int = 8, ksub: int = 16, dsub: int = 8) -> np.ndarray:
@@ -667,26 +680,52 @@ def pq_encode(
     pandas UDF — 64x compression for dim=64/m=8 (8 bytes vs 512).
     At corpus scale the encoded relation is what you persist; the
     float vectors are only re-read for exact re-ranking."""
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(np.ascontiguousarray(codebooks, dtype="float64"))
+    B = np.ascontiguousarray(codebooks, dtype="float64")  # (m, ksub, dsub)
+    m, _, dsub = B.shape
 
     @F.pandas_udf("array<int>")
     def _enc(vs: pd.Series) -> pd.Series:
         if not len(vs):
             return pd.Series([], dtype=object)
-        B = bc.value  # (m, ksub, dsub)
-        m, _, dsub = B.shape
         X = np.stack(vs.to_numpy()).astype("float64")
         X = X / np.linalg.norm(X, axis=1, keepdims=True)
         codes = np.empty((len(X), m), dtype="int32")
         for j in range(m):
-            S = X[:, j * dsub : (j + 1) * dsub]
-            d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
+            codes[:, j] = _sqdist(X[:, j * dsub : (j + 1) * dsub], B[j]).argmin(axis=1)
         return pd.Series(list(codes))
 
     # one evaluation per vector (guide §4.4 — see signature_udf)
     return df.withColumn(out, _enc.asNondeterministic()(F.col(vec)))
+
+
+def _adc_udf(queries: DataFrame, codebooks: np.ndarray, vec: str, id_col: str):
+    """ADC (asymmetric distance computation) scorer: each normalized
+    query's (m, ksub) table of sub-dot-products against the codebooks
+    is built on the driver and rides in the UDF closure; the UDF scores
+    a (codes, query_id) row as the sum of its m table lookups."""
+    B = np.ascontiguousarray(codebooks, dtype="float64")
+    m, _, dsub = B.shape
+    qpdf = queries.select(id_col, vec).toPandas()
+    tables: dict[int, np.ndarray] = {}
+    for qid, v in zip(qpdf[id_col], qpdf[vec]):
+        q = np.asarray(v, dtype="float64")
+        q = q / np.linalg.norm(q)
+        tables[int(qid)] = np.stack([B[j] @ q[j * dsub : (j + 1) * dsub] for j in range(m)])
+
+    @F.pandas_udf("double")
+    def _adc(codes: pd.Series, qid: pd.Series) -> pd.Series:
+        if not len(codes):
+            return pd.Series([], dtype=np.float64)
+        C = np.stack(codes.to_numpy())  # (batch, m)
+        out = np.empty(len(C))
+        sub = np.arange(C.shape[1])
+        for q in np.unique(qid.to_numpy()):
+            mask = (qid == q).to_numpy()
+            out[mask] = tables[int(q)][sub[None, :], C[mask]].sum(axis=1)
+        return pd.Series(out)
+
+    # one evaluation per candidate (guide §4.4 — see signature_udf)
+    return _adc.asNondeterministic()
 
 
 def pq_topk_cosine(
@@ -715,101 +754,22 @@ def pq_topk_cosine(
     ADC ordering is returned (column ``adc_score``); with it, exact
     ``cosine``.
 
-    Scale shape: the per-query tables (m * ksub doubles each) ride a
-    broadcast; the corpus pays one encode pass (or reads persisted
+    Scale shape: the per-query tables (m * ksub doubles each) ride
+    the scorer's UDF closure (:func:`_adc_udf`); the corpus pays one encode pass (or reads persisted
     codes) and one scan per query batch. No shuffle of the corpus;
     the top-k is a per-query window. Production stacks IVF for
     pruning + PQ for in-list scoring (IVFADC) — both halves exist
     here as composable operators."""
-    qpdf = queries.select(id_col, vec).toPandas()
-    B = np.ascontiguousarray(codebooks, dtype="float64")
-    m, ksub, dsub = B.shape
-    tables: dict[int, np.ndarray] = {}
-    for _, row in qpdf.iterrows():
-        q = np.asarray(row[vec], dtype="float64")
-        q = q / np.linalg.norm(q)
-        tables[int(row[id_col])] = np.stack(
-            [B[j] @ q[j * dsub : (j + 1) * dsub] for j in range(m)]
-        )  # (m, ksub)
-
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast(tables)
-
-    @F.pandas_udf("double")
-    def _adc(codes: pd.Series, qid: pd.Series) -> pd.Series:
-        if not len(codes):
-            return pd.Series([], dtype=np.float64)
-        T = bc.value
-        C = np.stack(codes.to_numpy())  # (batch, m)
-        out_v = np.empty(len(C))
-        sub = np.arange(C.shape[1])
-        for q in np.unique(qid.to_numpy()):
-            mask = (qid == q).to_numpy()
-            out_v[mask] = T[int(q)][sub[None, :], C[mask]].sum(axis=1)
-        return pd.Series(out_v)
-
+    adc = _adc_udf(queries, codebooks, vec, id_col)
     enc = pq_encode(
         corpus.select(F.col(id_col).alias("neighbor_id"), vec), codebooks, vec
     ).drop(vec)
     qids = queries.select(F.col(id_col).alias("query_id"))
-    scored = enc.crossJoin(F.broadcast(qids)).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        # one evaluation per candidate (guide §4.4 — see signature_udf)
-        F.round(
-            _adc.asNondeterministic()(F.col("codes"), F.col("query_id")), 6
-        ).alias("adc_score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
-    )
+    score = F.round(adc(F.col("codes"), F.col("query_id")), 6)
+    scored = _probe_join(enc, qids, None, score, "adc_score")
     if rerank is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "adc_score",
-                F.col("rank").cast("bigint").alias("rank"),
-            )
-        )
-    shortlist = (
-        scored.withColumn("_arank", F.row_number().over(w))
-        .filter(F.col("_arank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec).alias("cv")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec).alias("qv")
-    )
-    exact = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_expr(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+        return _topk(scored, k, "adc_score")
+    return _rerank(_topk(scored, rerank, "adc_score"), corpus, queries, k, vec, id_col)
 
 
 def ivfpq_topk_cosine(
@@ -839,96 +799,18 @@ def ivfpq_topk_cosine(
     Every stage's data volume shrinks before the next: corpus ->
     nprobe lists -> L shortlist -> k."""
     enc = pq_encode(
-        ivf_assign(
-            corpus.select(F.col(id_col).alias("neighbor_id"), vec),
-            centroids,
-            vec=vec,
-        ),
+        ivf_assign(corpus.select(F.col(id_col).alias("neighbor_id"), vec), centroids, vec=vec),
         codebooks,
         vec=vec,
     ).select("neighbor_id", "list_id", "codes")
-
-    sc = corpus.sparkSession.sparkContext
-    _probe = ivf_probe_udf(sc, centroids, nprobe)
-
-    qpdf = queries.select(id_col, vec).toPandas()
-    B = np.ascontiguousarray(codebooks, dtype="float64")
-    m, ksub, dsub = B.shape
-    tables: dict[int, np.ndarray] = {}
-    for _, row in qpdf.iterrows():
-        qv_np = np.asarray(row[vec], dtype="float64")
-        qv_np = qv_np / np.linalg.norm(qv_np)
-        tables[int(row[id_col])] = np.stack(
-            [B[j] @ qv_np[j * dsub : (j + 1) * dsub] for j in range(m)]
-        )
-    bc = sc.broadcast(tables)
-
-    @F.pandas_udf("double")
-    def _adc(codes: pd.Series, qid: pd.Series) -> pd.Series:
-        if not len(codes):
-            return pd.Series([], dtype=np.float64)
-        T = bc.value
-        C = np.stack(codes.to_numpy())
-        out_v = np.empty(len(C))
-        sub = np.arange(C.shape[1])
-        for qq in np.unique(qid.to_numpy()):
-            mask = (qid == qq).to_numpy()
-            out_v[mask] = T[int(qq)][sub[None, :], C[mask]].sum(axis=1)
-        return pd.Series(out_v)
-
+    adc = _adc_udf(queries, codebooks, vec, id_col)
     q = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec).alias("_qv"))
-        .withColumn("list_id", F.explode(_probe(F.col("_qv"))))
+        .withColumn("list_id", F.explode(ivf_probe_udf(centroids, nprobe)(F.col("_qv"))))
         .drop("_qv")
     )
-    shortlist = (
-        enc.join(F.broadcast(q), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            # one evaluation per candidate (guide §4.4)
-            _adc.asNondeterministic()(F.col("codes"), F.col("query_id")).alias(
-                "adc"
-            ),
-        )
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        shortlist.withColumn("_r", F.row_number().over(wa))
-        .filter(F.col("_r") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec).alias("cv")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec).alias("qv")
-    )
-    exact = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_expr(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    scored = _probe_join(enc, q, "list_id", adc(F.col("codes"), F.col("query_id")), "adc")
+    return _rerank(_topk(scored, rerank, "adc"), corpus, queries, k, vec, id_col)
 
 
 def embedding_neardup_pairs(
@@ -958,22 +840,17 @@ def embedding_neardup_pairs(
         F.col(id_col), as_double_array(vec).alias("v")
     ).withColumn("bucket", sig(F.col("v")).getItem(0))
     a, b = c.alias("a"), c.alias("b")
-    cos = cosine_verify_udf()
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        # filter on the raw cosine (like the oracle), round only for output
-        .withColumn("raw", cos(F.col("a.v"), F.col("b.v")))
-        .filter(F.col("raw") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round("raw", 6).alias("cosine"),
-        )
+    pairs = a.join(
+        b,
+        (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        F.col("a.v").alias("va"),
+        F.col("b.v").alias("vb"),
     )
+    return _verified(pairs, threshold)
 
 
 def embedding_neardup_sql(
@@ -1045,11 +922,8 @@ def embedding_neardup_banded(
     budgets (w=20, bands=32 -> 640 planes), and the per-(vector,
     plane) interpreted folds of the relation-join form (measured
     3.1 s at just 2000 x 24) become one numpy batch op."""
-    nplanes = len(planes)
-    if nplanes % bands:
-        raise ValueError(f"bands={bands} must divide nplanes={nplanes}")
-    c = corpus.select(F.col(id_col), as_double_array(vec).alias("v"))
     sig = signature_udf(planes, bands)
+    c = corpus.select(F.col(id_col), as_double_array(vec).alias("v"))
     cb = c.select(
         F.col(id_col), F.posexplode(sig("v")).alias("band", "bucket")
     )
@@ -1081,14 +955,7 @@ def embedding_neardup_banded(
         # vector table outgrows the broadcast budget and AQE's
         # size-based choice (the default path) is the right call.
         va, vb = F.broadcast(va), F.broadcast(vb)
-    cos = cosine_verify_udf()
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("raw", cos(F.col("va"), F.col("vb")))
-        .filter(F.col("raw") >= threshold)
-        .select("id_a", "id_b", F.round("raw", 6).alias("cosine"))
-    )
+    return _verified(cand.join(va, "id_a").join(vb, "id_b"), threshold)
 
 
 def embedding_neardup_banded_sql(
@@ -1477,36 +1344,12 @@ def contrastive_pairs(
     ranking windows partition on (query_id, is_positive) — millions of
     independent anchor groups, no global sort. Output is bounded by
     |anchors| x (pos + neg)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec).alias("qv"),
-        F.col(label).alias("q_label"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        as_double_array(vec).alias("cv"),
-        F.col(label).alias("c_label"),
-    )
-    scored = c.join(
-        F.broadcast(q), F.col("cand_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "cand_id",
-        cosine_expr(F.col("qv"), F.col("cv")).alias("cosine"),
-        (F.col("c_label") == F.col("q_label")).cast("int").alias("is_positive"),
-    )
-    w = Window.partitionBy("query_id", "is_positive").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    ranked = scored.withColumn(
-        "pair_rank", F.row_number().over(w).cast("bigint")
-    )
-    keep = F.when(
-        F.col("is_positive") == 1, F.col("pair_rank") <= pos_per_anchor
-    ).otherwise(F.col("pair_rank") <= neg_per_anchor)
-    return ranked.filter(keep).select(
-        "query_id", "cand_id", "cosine", "is_positive", "pair_rank"
-    )
+    q_label, c_label, is_positive = _polarity(label)
+    c = _vectors(corpus, "c", id_col, vec, c_label)
+    q = _vectors(queries, "q", id_col, vec, q_label)
+    cosine = cosine_expr(F.col("qv"), F.col("cv"))
+    scored = _probe_join(c, q, None, cosine, "cosine", is_positive)
+    return _polarity_topk(scored, pos_per_anchor, neg_per_anchor)
 
 
 def contrastive_pairs_sql(
@@ -1576,55 +1419,26 @@ def contrastive_pairs_ann(
     :func:`embedding_neardup_banded`). Verified against the exact
     miner in tests/test_extras.py (deterministic recall on the
     seeded plane set)."""
-    nplanes = len(planes)
-    if nplanes % bands:
-        raise ValueError(f"bands={bands} must divide nplanes={nplanes}")
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        as_double_array(vec).alias("cv"),
-        F.col(label).alias("c_label"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec).alias("qv"),
-        F.col(label).alias("q_label"),
-    )
     sig = signature_udf(planes, bands)
-    cb = c.select(
-        "cand_id", F.posexplode(sig("cv")).alias("band", "bucket")
-    )
-    qb = q.select(
-        "query_id", F.posexplode(sig("qv")).alias("band", "bucket")
-    )
+    q_label, c_label, is_positive = _polarity(label)
+    c = _vectors(corpus, "c", id_col, vec, c_label)
+    q = _vectors(queries, "q", id_col, vec, q_label)
+    cb = c.select("neighbor_id", F.posexplode(sig("cv")).alias("band", "bucket"))
+    qb = q.select("query_id", F.posexplode(sig("qv")).alias("band", "bucket"))
     cand = (
         cb.join(qb, ["band", "bucket"])
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
         .distinct()
     )
     cos = cosine_verify_udf()
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cos(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-            (F.col("c_label") == F.col("q_label")).cast("int").alias("is_positive"),
-        )
+    scored = cand.join(q, "query_id").join(c, "neighbor_id").select(
+        "query_id",
+        "neighbor_id",
+        F.round(cos(F.col("qv"), F.col("cv")), 6).alias("cosine"),
+        is_positive,
     )
-    w = Window.partitionBy("query_id", "is_positive").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    ranked = scored.withColumn(
-        "pair_rank", F.row_number().over(w).cast("bigint")
-    )
-    keep = F.when(
-        F.col("is_positive") == 1, F.col("pair_rank") <= pos_per_anchor
-    ).otherwise(F.col("pair_rank") <= neg_per_anchor)
-    return ranked.filter(keep).select(
-        "query_id", "cand_id", "cosine", "is_positive", "pair_rank"
-    )
+    return _polarity_topk(scored, pos_per_anchor, neg_per_anchor)
 
 
 def contrastive_pairs_ann_sql(
@@ -1859,42 +1673,10 @@ def ann_multiprobe_cosine(
     bucket, so the probe union introduces no duplicate (query,
     neighbor) pairs."""
     sig = signature_udf(planes, 1)
-    cos = cosine_verify_udf()
-    nplanes = len(planes)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec).alias("cv")
-    ).withColumn("bucket", sig(F.col("cv")).getItem(0))
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec).alias("qv")
-    ).withColumn("b0", sig(F.col("qv")).getItem(0))
-    probes = F.array(
-        F.col("b0"),
-        *[F.col("b0").bitwiseXOR(F.lit(1 << j)) for j in range(nplanes)],
-    )
-    q = q0.select(
-        "query_id", "qv", F.explode(probes).alias("bucket")
-    )
-    scored = (
-        c.join(F.broadcast(q), ["bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    return _probe_topk(
+        corpus, queries, k, vec, id_col,
+        sig(F.col("cv")).getItem(0), sig(F.col("qv")).getItem(0),
+        probes=lambda b: F.array(b, *[b.bitwiseXOR(F.lit(1 << j)) for j in range(len(planes))]),
     )
 
 

@@ -128,15 +128,14 @@ def zorder_expr(df: DataFrame, cols: list[str], bits: int = 12):
     """Morton (Z-order) key over ``cols``: each column is scaled to a
     ``2^bits`` integer grid between its observed min/max (one tiny
     driver agg), then the grid coordinates' bits are interleaved into
-    one BIGINT — pure JVM column math, ``len(cols) * bits`` shift/OR
-    terms (<= 64 total bits).
+    one BIGINT by :func:`~mpes_spark.transforms.columns.morton_key_expr`
+    (``len(cols) * bits <= 63``).
 
     Returns (key_column, stats) where stats maps col -> (min, max).
     """
     from pyspark.sql import functions as F
 
-    if len(cols) * bits > 63:
-        raise ValueError(f"{len(cols)} cols x {bits} bits exceeds a signed BIGINT")
+    from mpes_spark.transforms.columns import morton_key_expr
 
     # project every clustering column to a double up front so the same
     # code handles numeric, TIMESTAMP (-> fractional epoch seconds) and
@@ -154,25 +153,16 @@ def zorder_expr(df: DataFrame, cols: list[str], bits: int = 12):
     ).collect()[0]
     stats = {c: (float(row[f"mn_{c}"]), float(row[f"mx_{c}"])) for c in cols}
     nmax = (1 << bits) - 1
-    key = F.lit(0).cast("bigint")
-    for ci, c in enumerate(cols):
+
+    def _rank(c: str):
         mn, mx = stats[c]
         span = (mx - mn) or 1.0
-        rank = F.least(
+        return F.least(
             F.lit(nmax),
-            F.greatest(
-                F.lit(0),
-                F.floor((_numeric(c) - mn) / span * nmax).cast("bigint"),
-            ),
+            F.greatest(F.lit(0), F.floor((_numeric(c) - mn) / span * nmax).cast("bigint")),
         )
-        for b in range(bits):
-            # bit b of this column lands at interleaved position
-            # b * ncols + ci
-            key = key + F.shiftleft(
-                F.shiftright(rank, b).bitwiseAND(F.lit(1)).cast("bigint"),
-                b * len(cols) + ci,
-            )
-    return key, stats
+
+    return morton_key_expr([_rank(c) for c in cols], bits), stats
 
 
 def zorder_write(

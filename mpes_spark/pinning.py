@@ -17,7 +17,7 @@ Every pinned relation has one owner that frees it with
 :func:`release` as soon as the relation that consumes it is
 materialized. A relation that a RETURNED lazy plan still reads
 belongs to the caller, who releases it after running that plan —
-for example with the per-query sweep in ``bench.py``.
+for example with :func:`sweep` between queries, as ``bench.py`` does.
 
 Streaming sinks keep their state as :class:`Parts`: eagerly pinned
 increments, compacted every :data:`COMPACT_EVERY` adds into one pinned
@@ -68,6 +68,17 @@ def release(*dfs: DataFrame) -> None:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
+
+
+def sweep(spark) -> None:
+    """The caller's half of the policy: between queries, drop every
+    cached table and every persisted or checkpointed RDD of the
+    session, then run a JVM GC so a shuffle-heavy query's collection
+    debt is not paid by the next one."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+    spark.sparkContext._jvm.System.gc()
 
 
 def pin(df: DataFrame) -> DataFrame:

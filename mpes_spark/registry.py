@@ -1496,6 +1496,37 @@ _PR_EDGES_SQL = (
 from mpes_spark.analysis.graph import pagerank_sql as _pagerank_sql
 
 
+def _trade_pairs(spark, sf_dir):
+    """One ('c' || custkey, 's' || suppkey) row (a, b) per
+    orders x lineitem row: who traded with whom."""
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return o.join(li, o.o_orderkey == li.l_orderkey).select(
+        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
+    )
+
+
+def _symmetric(pairs, *carry):
+    """Both directions (src, dst, *carry) of each (a, b) row, in ONE
+    pass over the orders x lineitem join (a union of two selects would
+    execute that join twice inside the pagerank edge checkpoint) —
+    same idiom as dedup.connected_components. The 'c'/'s' prefixes
+    make the two directions disjoint, so a caller deduplicates or
+    counts the (a, b) pairs first (r12): set- and value-identical to
+    doing so on the symmetrized relation, with half the rows through
+    that exchange."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+            )
+        ).alias("e"),
+        *carry,
+    ).select("e.src", "e.dst", *carry)
+
+
 @_q("pagerank_custsupp", _pagerank_sql(_PR_EDGES_SQL, iters=3, damping=0.85))
 def pagerank_custsupp(spark, sf_dir):
     """PageRank (3 power iterations, damping 0.85) over the
@@ -1510,29 +1541,8 @@ def pagerank_custsupp(spark, sf_dir):
     notes."""
     from mpes_spark.analysis.graph import pagerank
 
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
-    )
-    # symmetrize in ONE pass over the orders⋈lineitem join (a union of
-    # two selects would execute that join twice inside the pagerank
-    # edge checkpoint) — same idiom as dedup.connected_components.
-    # distinct BEFORE the explode (r12): 'c'/'s' prefixes make the two
-    # directions disjoint, so deduplicating the (a, b) pairs first is
-    # set-identical to deduplicating the symmetrized relation while
-    # shuffling half the rows through the distinct exchange.
-    edges = pairs.distinct().select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
     pr = pagerank(
-        edges,
+        _symmetric(_trade_pairs(spark, sf_dir).distinct()),
         iters=3,
         damping=0.85,
         normalize=True,
@@ -1556,22 +1566,7 @@ def label_communities(spark, sf_dir):
     rounding."""
     from mpes_spark.analysis.graph import label_propagation
 
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
-    )
-    # distinct before the explode (r12) — see pagerank_custsupp
-    edges = pairs.distinct().select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    return label_propagation(edges, iters=3)
+    return label_propagation(_symmetric(_trade_pairs(spark, sf_dir).distinct()), iters=3)
 
 
 _PR_WEDGES_SQL = (
@@ -1603,33 +1598,13 @@ def pagerank_weighted(spark, sf_dir):
     count agg replacing the distinct."""
     from mpes_spark.analysis.graph import pagerank
 
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
-    )
-    # count before the explode (r12): each direction's multiplicity
-    # equals the (a, b) pair multiplicity ('c'/'s' prefixes keep the
-    # directions disjoint), so aggregating the un-symmetrized pairs
-    # and emitting both directions with the same weight is value-
-    # identical while shuffling half the rows through the count.
-    edges = (
-        pairs.groupBy("a", "b")
+    counted = (
+        _trade_pairs(spark, sf_dir)
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("e"),
-            "w",
-        )
-        .select("e.src", "e.dst", "w")
     )
     pr = pagerank(
-        edges,
+        _symmetric(counted, "w"),
         iters=3,
         damping=0.85,
         normalize=True,

@@ -165,9 +165,15 @@ def salted_agg(
     return partial.groupBy(*keys).agg(*phase2)
 
 
+def _morton_dims(cols: list, bits: int) -> int:
+    if len(cols) * bits > 63:
+        raise ValueError(f"{len(cols)} cols x {bits} bits exceeds a signed BIGINT")
+    return len(cols)
+
+
 def morton_key_expr(cols, bits: int = 10):
-    """Morton (Z-order) interleaved key from 2-3 non-negative integer
-    Columns — the multi-dimensional data-CLUSTERING key: sorting or
+    """Morton (Z-order) interleaved key from non-negative integer
+    Columns (``len(cols) * bits <= 63``, a signed BIGINT) — the multi-dimensional data-CLUSTERING key: sorting or
     range-partitioning a 100 TB event table by z(kx_bin, ky_bin) puts
     spatially adjacent cells in the same parquet files, so any
     rectangular momentum-window query prunes to O(perimeter) files
@@ -185,9 +191,7 @@ def morton_key_expr(cols, bits: int = 10):
     from pyspark.sql import functions as F
 
     cols = list(cols)
-    ndim = len(cols)
-    if ndim not in (2, 3):
-        raise ValueError("morton_key_expr takes 2 or 3 columns")
+    ndim = _morton_dims(cols, bits)
     parts = []
     for i, c in enumerate(cols):
         c = F.col(c) if isinstance(c, str) else c
@@ -205,9 +209,7 @@ def morton_key_sql(cols, bits: int = 10) -> str:
     mask-and-scale rendering, so the expression parses identically in
     Spark SQL and DuckDB)."""
     cols = list(cols)
-    ndim = len(cols)
-    if ndim not in (2, 3):
-        raise ValueError("morton_key_sql takes 2 or 3 columns")
+    ndim = _morton_dims(cols, bits)
     parts = []
     for i, c in enumerate(cols):
         masked = f"(CAST({c} AS BIGINT) & {(1 << bits) - 1})"

@@ -221,6 +221,52 @@ def test_zorder_write_locality_and_roundtrip(spark, tmp_path):
     assert z_hit <= 6
 
 
+def test_zorder_expr_key_is_rank_interleave(spark):
+    """The Z-order key is the Morton interleave of each column's
+    clamped grid rank: bit b of column i lands at b * ncols + i, and
+    the ranks are computed from the min/max stats the call returns
+    (double, date and negative inputs, a constant column, a NULL)."""
+    import datetime
+
+    from mpes_spark.io.writers import zorder_expr
+
+    rng = np.random.default_rng(5)
+    n, bits = 200, 7
+    xs = rng.normal(0.0, 50.0, n)
+    days = rng.integers(0, 4000, n)
+    rows = [
+        (i, float(xs[i]), datetime.date(1990, 1, 1) + datetime.timedelta(days=int(days[i])), 3.0)
+        for i in range(n)
+    ]
+    rows.append((n, None, datetime.date(1990, 1, 1), 3.0))
+    df = spark.createDataFrame(rows, "id long, x double, d date, c double")
+    cols = ["x", "d", "c"]
+    key, stats = zorder_expr(df, cols, bits=bits)
+    got = {r.id: r.z for r in df.select("id", key.alias("z")).collect()}
+
+    epoch = datetime.date(1970, 1, 1)
+    values = {
+        "x": [r[1] for r in rows],
+        "d": [float((r[2] - epoch).days) for r in rows],
+        "c": [r[3] for r in rows],
+    }
+    nmax = (1 << bits) - 1
+    ranks = []
+    for c in cols:
+        mn, mx = stats[c]
+        v = np.array([np.nan if x is None else x for x in values[c]])
+        r = np.floor((v - mn) / ((mx - mn) or 1.0) * nmax)
+        ranks.append(np.clip(np.nan_to_num(r, nan=0.0), 0, nmax).astype(np.int64))
+    want = np.zeros(len(rows), dtype=np.int64)
+    for i, r in enumerate(ranks):
+        for b in range(bits):
+            want |= ((r >> b) & 1) << (b * len(cols) + i)
+    assert stats["c"] == (3.0, 3.0)
+    assert got == {r[0]: int(want[j]) for j, r in enumerate(rows)}
+    with pytest.raises(ValueError, match="signed BIGINT"):
+        zorder_expr(df, cols, bits=22)
+
+
 def test_copytool_mirror_skip_and_cleanup(tmp_path):
     """CopyTool analog (mirrorutil.py:13-157): tree mirroring with
     same-relative-layout targets, already-fresh skip, force re-copy,

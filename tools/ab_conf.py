@@ -32,6 +32,7 @@ def _one_rep(names: list[str], conf: str) -> dict[str, float]:
     code = r"""
 import json, os, sys, time
 sys.path.insert(0, %r)
+from mpes_spark.pinning import sweep
 from mpes_spark.session import get_spark
 sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -42,10 +43,7 @@ import __spark_entry__ as ent
 q = ent.queries()
 out = {}
 for name in %r:
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(False)
-    spark.sparkContext._jvm.System.gc()
+    sweep(spark)
     t0 = time.perf_counter()
     q[name](spark, sf).collect()
     out[name] = time.perf_counter() - t0

@@ -516,6 +516,7 @@ def run_waved(sf10_dir: str, sf1_dir: str | None, waves: int = 8, ops: tuple = (
         prefix_dual_pairs,
         prefix_filtered_pairs,
     )
+    from mpes_spark.pinning import sweep
 
     def _docs(spark, d):
         return spark.read.parquet(f"{d}/documents.parquet")
@@ -591,10 +592,7 @@ def run_waved(sf10_dir: str, sf1_dir: str | None, waves: int = 8, ops: tuple = (
             f"peak_scratch={peak['v']/1e9:.2f}GB",
             flush=True,
         )
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        sweep(spark)
     spark.stop()
     with open("/tmp/sf_waved.json", "w") as fh:
         json.dump(doc, fh, indent=1)

@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mpes_spark.pinning import sweep
 from mpes_spark.session import get_spark
 
 
@@ -39,10 +40,7 @@ def main() -> None:
 
         q = ent.queries()
         for name in names:
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist(False)
-            spark.sparkContext._jvm.System.gc()
+            sweep(spark)
             group = f"time:{name}:rep{r}"
             spark.sparkContext.setJobGroup(group, group)
             t0 = time.perf_counter()
